@@ -17,8 +17,13 @@ Spark-first design notes
   src/concurrent_map.h:46-52) are filters / semi / anti joins, so at cluster
   scale they stay distributed; ``get`` collects a single row to the driver,
   matching the reference's owner-broadcast semantics.
-* Arbitrary Python reducers fall back to ``RDD.reduceByKey`` (map-side combine
-  included); the five canned reducers stay JVM-side as agg expressions.
+* Arbitrary Python reducers (``Reducer.custom``) run as a two-level Arrow
+  fold: ``mapInArrow(fold)`` merges within each input partition (the
+  reference's combine-on-insert, so a hot key leaves a task as one row), a
+  hash ``repartition(key)`` is the shuffle, and the same ``fold`` merges per
+  key after it. The output schema is the input's own key/value types, so
+  building the plan runs no Spark job. The canned reducers stay JVM-side as
+  agg expressions.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from typing import Any, Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, FloatType, StructField, StructType
 
 from hpmr_spark.reducers import Reducer, _Reducer
 
@@ -40,6 +46,125 @@ def _normalize(df: DataFrame, key_col: str, value_col: str, order_col: str | Non
     if order_col is not None:
         cols.append(F.col(order_col).alias(ORDER))
     return df.select(*cols)
+
+
+def _arrow_fold(fn: Callable[[Any, Any], Any], freeze: bool):
+    """mapInArrow body: merge every (key, value) row of one partition into a
+    dict, calling ``fn`` once per duplicate key, and emit one batch.
+
+    Values reach ``fn`` as the objects Arrow's ``to_pylist`` gives. The
+    result column is built by inference and a *safe* cast to the input's
+    value type within the same family of Python objects, so a result V
+    cannot hold (1.5 for a bigint, a lost decimal digit, an overflow, a
+    string for a number) raises instead of being converted. Every helper is
+    nested here, so the pickled fold imports nothing from this package and
+    unpickles on the workers of any session."""
+    names = [KEY, VALUE]
+    nan = float("nan")
+
+    def freeze_key(k):
+        # hashable, grouping-equal key: structs/arrays become tuples (Arrow
+        # rebuilds them from tuples), every NaN one object, -0.0 → 0.0 —
+        # Spark's grouping normalization, applied before the hash shuffle
+        if isinstance(k, float):
+            return nan if k != k else k + 0.0
+        if isinstance(k, dict):
+            return tuple(freeze_key(v) for v in k.values())
+        if isinstance(k, list):
+            return tuple(freeze_key(v) for v in k)
+        return k
+
+    def pylist(col) -> list:
+        # to_pylist's objects; numpy's tolist builds the same ones ~10×
+        # faster for string/binary and null-free int/float/bool columns
+        from pyarrow import types as t
+
+        typ = col.type
+        if (
+            t.is_string(typ)
+            or t.is_large_string(typ)
+            or t.is_binary(typ)
+            or t.is_large_binary(typ)
+            or (
+                col.null_count == 0
+                and (t.is_integer(typ) or t.is_floating(typ) or t.is_boolean(typ))
+            )
+        ):
+            return col.to_numpy(zero_copy_only=False).tolist()
+        return col.to_pylist()
+
+    def family(typ):
+        from pyarrow import types as t
+
+        if t.is_integer(typ) or t.is_floating(typ) or t.is_decimal(typ):
+            return "number"
+        if t.is_string(typ) or t.is_large_string(typ):
+            return "string"
+        if t.is_binary(typ) or t.is_large_binary(typ):
+            return "binary"
+        if t.is_list(typ) or t.is_large_list(typ):
+            return "list"
+        return typ.id
+
+    def fits(got, want) -> bool:
+        # same family of Python objects, recursively (null fits any): a safe
+        # cast within a family is exact or raises, while across families
+        # Arrow converts silently ('1' → 1, 2 → True, 1 → '1')
+        from pyarrow import types as t
+
+        if t.is_null(got):
+            return True
+        if family(got) != family(want):
+            return False
+        if family(got) == "list":
+            return fits(got.value_type, want.value_type)
+        if t.is_struct(got):
+            return got.num_fields == want.num_fields and all(
+                fits(got.field(i).type, want.field(i).type) for i in range(got.num_fields)
+            )
+        return True
+
+    def fold(batches):
+        import pyarrow as pa
+
+        acc: dict = {}
+        schema = None
+        for b in batches:
+            schema = b.schema
+            keys = pylist(b.column(0))
+            if freeze:
+                keys = [freeze_key(k) for k in keys]
+            for k, v in zip(keys, pylist(b.column(1))):
+                if k in acc:
+                    acc[k] = fn(acc[k], v)
+                else:
+                    acc[k] = v
+        if schema is not None:
+            vtype = schema.field(1).type
+            values = pa.array(list(acc.values()))
+            if not fits(values.type, vtype):
+                raise TypeError(f"reducer fn returned {values.type} for a {vtype} value")
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(list(acc), type=schema.field(0).type),
+                    values.cast(vtype, safe=True),
+                ],
+                names=names,
+            )
+
+    return fold
+
+
+def _custom_fold(df: DataFrame, fn: Callable[[Any, Any], Any]) -> DataFrame:
+    """Two-level fold of ``(KEY, VALUE)`` rows under a Python merge ``fn``:
+    map-side fold → hash shuffle on key → per-key fold. The declared schema
+    is the input's (value made nullable), so nothing is inferred."""
+    kv = df.select(KEY, VALUE)
+    key_f, val_f = kv.schema.fields
+    freeze = isinstance(key_f.dataType, (FloatType, DoubleType, StructType, ArrayType))
+    schema = StructType([key_f, StructField(VALUE, val_f.dataType, True)])
+    fold = _arrow_fold(fn, freeze)
+    return kv.mapInArrow(fold, schema).repartition(KEY).mapInArrow(fold, schema)
 
 
 class KeyedMap:
@@ -91,14 +216,15 @@ class KeyedMap:
     def sync(self, reducer: _Reducer = Reducer.keep) -> "KeyedMap":
         """Merge duplicate keys — THE shuffle (src/dist_map.h:147-210).
 
-        Canned reducers run as JVM agg expressions (partial+final agg); custom
-        reducers run via RDD.reduceByKey (still map-side combined)."""
+        Canned reducers run as JVM agg expressions (partial+final agg). A
+        custom reducer's Python ``fn`` runs as the two-level Arrow fold
+        (map-side fold, hash shuffle on key, per-key fold) with the input's
+        key/value types as the declared schema; the order column is dropped,
+        since ``fn`` sees values only."""
         if self._unique:
             return self
         if reducer.agg_factory is None:
-            # arbitrary Python merge → RDD path (order column dropped)
-            rdd = self._df.select(KEY, VALUE).rdd.map(tuple).reduceByKey(reducer.fn)
-            return KeyedMap(rdd.toDF([KEY, VALUE]), _has_order=False, _unique=True)
+            return KeyedMap(_custom_fold(self._df, reducer.fn), _has_order=False, _unique=True)
         aggs = [reducer.agg(VALUE, ORDER if self._has_order else None).alias(VALUE)]
         if self._has_order:
             aggs.append(F.max(ORDER).alias(ORDER))

@@ -10,6 +10,9 @@ conf. Every knob here is chosen for scale-out first, then works locally:
 - Arrow on: all Pandas-UDF paths (dedup/similarity/multimodal) batch via Arrow.
 - shuffle.partitions defaults to 2× cores locally; on a real cluster AQE
   coalesces from a deliberately-high initial number, so oversizing is safe.
+- Python workers get the package root on PYTHONPATH: functions pickled by
+  reference (Python data sources, streaming state functions) import
+  ``hpmr_spark`` on the worker, whatever directory the application runs from.
 """
 
 from __future__ import annotations
@@ -18,13 +21,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def session_builder(
     app_name: str = "hpmr-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
+    event_log_dir: str | None = None,
 ) -> SparkSession.Builder:
-    """Builder with engine defaults; caller may override before getOrCreate."""
+    """Builder with engine defaults; caller may override before getOrCreate.
+    ``event_log_dir`` turns on Spark event logging into that directory (the
+    probe tools parse it for task times)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         # SPARK_GRAFT_MASTER exists for the partition-invariance sweep
@@ -66,7 +74,12 @@ def session_builder(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # merged by Spark with pyspark's own path and the launching
+        # process's PYTHONPATH when it starts a Python worker
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
+    if event_log_dir is not None:
+        b = b.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", event_log_dir)
     return b
 
 

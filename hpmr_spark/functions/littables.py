@@ -11,10 +11,13 @@ can see the values.
 
 Use for PLAN-TIME-CONSTANT literal tables in query paths (grids, tau lists,
 seed rows, driver-computed result rows). Values must be Python ints,
-floats, bools, strings, or None.
+floats (NaN and ±inf included), bools, strings, None, or lists of these for
+an ``array<…>`` column.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,26 +30,51 @@ def _sql_lit(v) -> str:
     if isinstance(v, int):
         return str(v)
     if isinstance(v, float):
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
         # repr round-trips doubles exactly through the Spark parser (r6)
         return f"CAST('{v!r}' AS DOUBLE)"
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, list):
+        return "array(" + ", ".join(_sql_lit(x) for x in v) + ")"
     raise TypeError(f"unsupported literal type {type(v).__name__}")
+
+
+def _split_ddl(schema: str) -> list[tuple[str, str]]:
+    """`name type, ...` → [(name, type)], splitting only on top-level commas
+    so `decimal(10,2)`, `array<…>` and `map<k, v>` stay whole."""
+    fields, depth, start = [], 0, 0
+    for i, ch in enumerate(schema + ","):
+        if ch in "(<":
+            depth += 1
+        elif ch in ")>":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            fields.append(schema[start:i])
+            start = i + 1
+    cols = []
+    for field in fields:
+        name, _, typ = field.strip().partition(" ")
+        cols.append((name, typ.strip()))
+    return cols
 
 
 def values_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     """LocalRelation drop-in for `spark.createDataFrame(rows, schema)` with
-    a simple `name type, name type, ...` DDL schema and scalar rows
-    (tuples/lists, or bare scalars for a 1-column table)."""
-    cols = []
-    for field in schema.split(","):
-        name, _, typ = field.strip().partition(" ")
-        cols.append((name, typ.strip()))
+    a `name type, name type, ...` DDL schema and rows of literals
+    (tuples/lists, or bare scalars for a 1-column table). A VALUES list
+    cannot be empty, so empty `rows` raise ValueError."""
+    cols = _split_ddl(schema)
     vals = []
     for row in rows:
         if not isinstance(row, (tuple, list)):
             row = (row,)
         vals.append("(" + ", ".join(_sql_lit(v) for v in row) + ")")
+    if not vals:
+        raise ValueError(f"values_df needs at least one row (schema: {schema})")
     inner = ", ".join(f"_c{i}" for i in range(len(cols)))
     outer = ", ".join(
         f"CAST(_c{i} AS {typ}) AS {name}" for i, (name, typ) in enumerate(cols)

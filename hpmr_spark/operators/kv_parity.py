@@ -145,14 +145,14 @@ def kv_f3_range_golden(spark, sf_dir):
     """,
 )
 def custom_reducer_max_qty(spark, sf_dir):
-    """User-defined reducer through the RDD reduceByKey slow path (the
-    reference's std::function reducer — /root/reference/src/dist_map.h:34):
-    an arbitrary Python merge fn (here max, so the oracle can pin it with
-    SQL MAX) that Catalyst can't see. reduceByKey still map-side combines,
-    so the shuffle carries one value per (partition, key) — semantically
-    the same two-level reduce as the JVM path, paying only the
-    Python-serialization tax (measured 4.5× at 1M rows, BASELINE.md).
-    Canned reducers never take this path."""
+    """User-defined reducer (the reference's std::function reducer,
+    src/dist_map.h:34): an arbitrary Python merge fn (here max, so the
+    oracle can pin it with SQL MAX) that Catalyst can't see. It
+    runs as the two-level Arrow fold — mapInArrow fold per input partition,
+    hash shuffle on key, mapInArrow fold per key — so the shuffle carries one
+    value per (partition, key), the same two-level reduce as the JVM path.
+    The declared bigint schema means no build-time job; canned reducers
+    never take this path."""
     from hpmr_spark.core.keyed_map import KeyedMap
     from hpmr_spark.reducers import Reducer
 

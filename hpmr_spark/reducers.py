@@ -17,8 +17,9 @@ reference's true behavior.
 Each reducer carries BOTH:
 - ``agg(col, order_col)`` -> a Catalyst Column expression (JVM-side, the fast
   path — used by every DataFrame operator), and
-- ``fn(a, b)`` -> a Python binary merge (used only by the RDD fallback for
-  arbitrary user reducers, mirroring src/dist_map.h:34's std::function).
+- ``fn(a, b)`` -> a Python binary merge (run by ``Reducer.custom``'s Arrow
+  fold and by the Python-mapper ``map_reduce`` RDD path, mirroring
+  src/dist_map.h:34's std::function).
 """
 
 from __future__ import annotations
@@ -67,7 +68,7 @@ class Reducer:
     # would count rows and silently reset accumulated counts on re-merge.)
     count = _Reducer("count", F.sum, lambda a, b: a + b)
     # avg is not a binary merge (needs sum+count state) — Catalyst path only;
-    # the RDD fallback raises instead of silently mis-merging
+    # the Python-mapper RDD path raises instead of silently mis-merging
     avg = _Reducer(
         "avg",
         F.avg,
@@ -89,6 +90,18 @@ class Reducer:
 
     @staticmethod
     def custom(fn: Callable[[Any, Any], Any], name: str = "custom") -> _Reducer:
-        """Arbitrary user merge fn — forces the RDD reduceByKey path (slow path,
-        analog of user std::function reducers, src/dist_map.h:34)."""
+        """Arbitrary user merge ``fn(a, b)`` — the analog of user
+        std::function reducers (src/dist_map.h:34).
+
+        ``KeyedMap.sync`` (so ``from_df``, ``from_pairs``, ``set_batch`` and
+        ``map_reduce_expr``) runs it as a two-level Arrow fold: a map-side
+        ``mapInArrow`` fold per input partition, a hash shuffle on key, and
+        the same fold per key. The contract is the reference's V×V→V: ``fn``
+        gets two values of the value type V (as Arrow's ``to_pylist`` gives
+        them) and must return a V. The output schema is declared from the
+        input's key and value types, so building the plan launches no job; a
+        result V cannot hold (1.5 for a bigint, a third digit for
+        decimal(10,2), an overflow) raises at execution instead of being
+        cast. ``fn`` must be associative and commutative: merge order
+        within and across partitions is unspecified."""
         return _Reducer(name, None, fn)

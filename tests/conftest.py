@@ -24,11 +24,13 @@ def sf_dir():
 def assert_partition_invariant(spark, build, check):
     """Reference CI discipline (SURVEY.md §5): identical results across
     parallelism levels. Runs `build()` under two shuffle-partition settings and
-    asserts `check(result)` both times."""
+    asserts `check(result)` both times: a falsy result, or a tuple holding
+    one, fails."""
     orig = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         for n in ("1", "7"):
             spark.conf.set("spark.sql.shuffle.partitions", n)
-            check(build())
+            ok = check(build())
+            assert all(ok) if isinstance(ok, tuple) else ok, f"check failed at {n} partitions"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig)

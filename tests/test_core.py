@@ -67,6 +67,83 @@ def test_custom_reducer_rdd_path(spark):
     assert km.get(2) == 5
 
 
+# The custom-reducer Arrow fold, checked against the JVM path of the same
+# merge (the canned reducers) wherever one exists.
+PYSUM = Reducer.custom(lambda a, b: a + b, "pysum")
+PYMAX = Reducer.custom(lambda a, b: a if a >= b else b, "pymax")
+
+
+def test_custom_reducer_empty_input(spark):
+    empty = spark.createDataFrame([], "k long, v long")
+    km = KeyedMap.from_df(empty, "k", "v", PYSUM)
+    assert km.n_keys() == 0 and km.to_dict() == {}
+
+
+def test_custom_reducer_keeps_decimal_type(spark):
+    from decimal import Decimal
+
+    from pyspark.sql.types import DecimalType
+
+    df = spark.sql("SELECT id % 3 AS k, CAST(id / 100 AS DECIMAL(10,2)) AS v FROM range(30)")
+    km = KeyedMap.from_df(df, "k", "v", PYSUM)
+    assert km.df.schema["value"].dataType == DecimalType(10, 2)
+    want = {k: sum(Decimal(i).scaleb(-2) for i in range(k, 30, 3)) for k in range(3)}
+    assert km.to_dict() == want
+
+
+def test_custom_reducer_null_keys_fold_to_one_entry(spark):
+    df = spark.sql("SELECT IF(id % 2 = 0, NULL, id % 5) AS k, id AS v FROM range(100)")
+    got = KeyedMap.from_df(df, "k", "v", PYSUM).to_dict()
+    assert len(got) == 6 and got[None] == sum(range(0, 100, 2))
+    assert got == KeyedMap.from_df(df, "k", "v", Reducer.sum).to_dict()
+
+
+def test_custom_reducer_hot_key(spark):
+    # 60% of the rows on key 0, spread over 4 input partitions
+    df = spark.sql(
+        "SELECT IF(id % 10 < 6, 0, id % 1000) AS k, (id * 7919) % 100003 AS v FROM range(20000)"
+    ).repartition(4)
+    got = KeyedMap.from_df(df, "k", "v", PYMAX)
+    assert got.n_keys() == 1 + len({i % 1000 for i in range(20000) if i % 10 >= 6} - {0})
+    assert got.to_dict() == KeyedMap.from_df(df, "k", "v", Reducer.max).to_dict()
+
+
+def test_custom_reducer_set_batch(spark):
+    km = KeyedMap.from_pairs(spark, [("a", 1), ("b", 2)])
+    batch = spark.createDataFrame([("a", 10), ("c", 3), ("a", 5)], ["k", "v"])
+    merged = km.set_batch(batch, "k", "v", PYSUM)
+    assert merged.to_dict() == {"a": 16, "b": 2, "c": 3}
+    again = merged.set_batch(batch, "k", "v", PYMAX)
+    assert again.to_dict() == {"a": 16, "b": 2, "c": 3}
+
+
+@pytest.mark.parametrize(
+    "sql, fn, message",
+    [
+        # a double result for a bigint value
+        ("SELECT 1 AS k, CAST(id + 2 AS BIGINT) AS v FROM range(2)", lambda a, b: a / b, "truncated"),
+        # a third decimal digit for decimal(10,2)
+        ("SELECT 1 AS k, CAST(1.25 AS DECIMAL(10,2)) AS v FROM range(2)", lambda a, b: a * b, "data loss"),
+        # a numeric string for a bigint (a cast would parse it)
+        ("SELECT 1 AS k, id AS v FROM range(2)", lambda a, b: str(a + b), "returned string"),
+    ],
+)
+def test_custom_reducer_result_must_fit_value_type(spark, sql, fn, message):
+    km = KeyedMap.from_df(spark.sql(sql), "k", "v", Reducer.custom(fn))
+    with pytest.raises(Exception, match=message):
+        km.df.collect()
+
+
+def test_custom_reducer_partition_invariant(spark):
+    src = spark.range(0, N).select((F.col("id") % 97).alias("k"), F.col("id").alias("v"))
+    want = {k: sum(range(k, N, 97)) for k in range(97)}
+    assert_partition_invariant(
+        spark,
+        lambda: KeyedMap.from_df(src, "k", "v", PYSUM),
+        lambda km: km.to_dict() == want,
+    )
+
+
 def test_get_default_and_has_unset(spark):
     # dist_map_test.cc:26-31, hash_set_test.cc membership/delete.
     km = KeyedMap.from_pairs(spark, [("x", 1), ("y", 2)])

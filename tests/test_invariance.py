@@ -59,7 +59,7 @@ REPRESENTATIVE = [
     "time_weighted_avg_value",
     "pipeline_pretraining_report",
     # late round-2: iterative BFS, integer z² anomaly flags, min_by/max_by
-    # bars, RDD custom-reducer path, JL projection
+    # bars, Arrow custom-reducer fold, JL projection
     "graph_bfs_3hop",
     "event_rate_anomaly_hours",
     "ohlc_hourly_bars",

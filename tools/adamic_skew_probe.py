@@ -54,25 +54,13 @@ def synth_lineitem(spark, n_orders: int):
 def main() -> int:
     n_orders = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
 
-    from pyspark.sql import SparkSession
-
+    from hpmr_spark.engine import session_builder
     from skew_probe_boilerplate import stage_stats  # shared event-log parser
 
     tmp = tempfile.mkdtemp(prefix="adamic_skew_")
     evdir = os.path.join(tmp, "eventlog")
     os.makedirs(evdir, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("adamic-skew-probe")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .getOrCreate()
-    )
+    spark = session_builder("adamic-skew-probe", event_log_dir=evdir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     synth_lineitem(spark, n_orders).write.mode("overwrite").parquet(

@@ -68,7 +68,6 @@ SKIP = {
     "doc_lm_score_ppm",  # persists the pairs frame at build
     "graph_bfs_3hop",  # persists the edge frame at build (iterative)
     "graph_kcore_2",  # iterative peel: checkpoints at build
-    "custom_reducer_max_qty",  # RDD reduceByKey path — plan is a LogicalRDD
     "rfm_user_scores",  # persisted multi-consumer user frame (InMemoryTableScan flake)
     "pareto_revenue_concentration",  # persisted per-customer frame, same
     "graph_lpa_communities",  # persisted edge frames (iterative LPA), same

@@ -210,24 +210,15 @@ def main() -> int:
     evdir = os.path.join(tmp, "eventlog")
     os.makedirs(evdir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from hpmr_spark.engine import session_builder
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("boiler-skew-probe")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
+        session_builder("boiler-skew-probe", event_log_dir=evdir)
         # probe-scale skew thresholds: the planted hot key is ~30 MB at 1M
         # docs; production defaults (256 MB) correspond to the same hot-key
         # fraction at corpus scale
         .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-        )
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

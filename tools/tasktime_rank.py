@@ -53,25 +53,10 @@ def main() -> int:
 
     evdir = tempfile.mkdtemp(prefix="tasktime_ev_")
 
-    os.environ.setdefault("SPARK_GRAFT_EVENTLOG_DIR", evdir)
-    from pyspark.sql import SparkSession
-
     from __spark_entry__ import queries
+    from hpmr_spark.engine import session_builder
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("tasktime-rank")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .getOrCreate()
-    )
+    spark = session_builder("tasktime-rank", event_log_dir=evdir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
 
