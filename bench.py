@@ -259,6 +259,12 @@ def main() -> int:
         "loadavg_1m_start": cond_start["loadavg_1m"],
         "loadavg_1m_end": cond_end["loadavg_1m"],
         "n_cpus": cond_start["n_cpus"],
+        # n_cpus above is os.cpu_count(), kept for comparability with older
+        # artifacts; the run's parallelism is the session's N (engine
+        # sessions leave spark.default.parallelism unset, so this is N of
+        # local[N] and the JVM's available cores for local[*])
+        "local_cores": spark.sparkContext.defaultParallelism,
+        "machine_cpus": cond_start["n_cpus"],
         "plan_pin_md5": cond_start["plan_pin_md5"],
         # one fixed-SF session per bench run: every query is measured once,
         # cold, after the single lineitem warmup scan
@@ -300,7 +306,8 @@ def main() -> int:
     la = conditions["loadavg_1m_start"]
     print(
         f"bench comparability: loadavg {la}->{conditions['loadavg_1m_end']} "
-        f"on {conditions['n_cpus']} cpus; plan-pin {conditions['plan_pin_md5']}; "
+        f"on local[{conditions['local_cores']}] of {conditions['machine_cpus']} machine cpus; "
+        f"plan-pin {conditions['plan_pin_md5']}; "
         f"cold session, warmup {warmup_sec}s. Compare BENCH_r{{N}} only at "
         f"similar loadavg (BASELINE.md protocol).",
         file=sys.stderr,

@@ -560,223 +560,6 @@ _CHECK_FIRST = [
     "energy_distance_twosample",
 ]
 
-# Retained as the round-12 rotation log (not used for ordering): the rows
-# the r12 window checked, all green in CORRECTNESS_r10.
-_R12_CHECK_FIRST = [
-    # ============== ROUND-12 WINDOW (driver round 10) ==============
-    # CORRECTNESS_r09 landed 50/50 green, retiring the whole round-11
-    # window. Composition, in VERDICT r9's priority order:
-    # (a) all 12 round-12-new operators (own-round rule);
-    # (b) conformal_aps_label_sets — its `covered` OUTPUT semantics
-    #     changed this round (ADVICE r9 rank fix); the other
-    #     ADVICE/trainer-touched rows (huffman guard, DB-index guard,
-    #     ivfpq/trained-IVF driver-side Lloyd, all-pairs ceilings) emit
-    #     BIT-IDENTICAL values (selfcheck-verified at 3 SFs) and keep
-    #     selfcheck+invariance coverage, so they don't burn slots;
-    # (c) the rotating §2 canary: point_lookup_get (DistMap::get,
-    #     checked only in r01);
-    # (d) VERDICT r9 item 1+6 named leads: both remaining sink
-    #     roundtrips, dedup_incremental_epochs, the three never-checked
-    #     multimodal rows, hard_negative_mining (never-checked AND
-    #     ceiling-touched);
-    # (e) 29 risk-weighted never-checked retirements: Python-worker +
-    #     PyDataSource paths, write-at-build IVM/MERGE, streaming,
-    #     every remaining cache-aliasing-class persisted frame, the
-    #     10-shuffle rank machinery, the LN/EXP-commitment family, the
-    #     int128-nanos family, the sketch merge laws, the sqrt-form GEMM
-    #     contract, and the Spark-4 SQL surfaces.
-    # Accounting (second sitting: 22 own-round new operators total):
-    # 255 never-checked at r12 start + 22 own-round rows − 26
-    # retirements → 229 of 607 (minhash_merge_property also deferred —
-    # sketch laws keep kmv_merge_property + sketch_bounded_checks). Four more fill rows deferred for the
-    # wave-7 ops (rolling_median — the cache-aliasing class keeps
-    # cooccurrence/bigram_lm/chi²; bloom_semi_prune — sketch laws keep
-    # minhash/kmv/bounded_checks; mutual_information — int128 nanos
-    # keeps label_drift_js + target_encoding_loo; kde — LN/EXP keeps
-    # weighted_sample_topk_es). Item 1's ≤205 bar is unreachable in
-    # one round once the 17 new operators (correctly) take own-round
-    # rows — same 50-row-cap arithmetic the r8 close documented; the five
-    # lowest-risk fill rows (both plain Spark-4 SQL surfaces, the plain
-    # asof join, two of three LN/EXP reps — the family keeps
-    # weighted_sample_topk_es + kde_price_grid_nano in-window) deferred to make room for the wave-5/6
-    # operators; two more rotations clear the tail.
-    # (a) round-12 new operators
-    "adam_update_fold",
-    "grpo_group_advantages",
-    "gradient_noise_scale",
-    "logistic_sgd_fold",
-    "token_f1_paired_docs",
-    "context_recall_topk",
-    "citation_ngram_support",
-    "absmax_int8_block_quant",
-    "msfp_block_float_census",
-    "wand_upper_bound_prune",
-    "bigram_greedy_draft_accept",
-    "simrank_bipartite_iter1",
-    "brevity_penalty_census",
-    "roc_convex_hull",
-    "reservoir_sample_fold",
-    "brandes_betweenness_trade",
-    "gale_shapley_stable_match",
-    "multi_pattern_contamination_scan",
-    "token_pruning_census",
-    "linear_probe_displacement_census",
-    "knapsack_source_selection",
-    "freshness_decay_weights",
-    # (b) output-changed this round
-    "conformal_aps_label_sets",
-    # (c) §2 canary (DistMap::get — r01-only row)
-    "point_lookup_get",
-    # (d) VERDICT r9 named leads
-    "sink_orc_roundtrip",
-    "sink_text_roundtrip",
-    "dedup_incremental_epochs",
-    "multimodal_decode_meta",
-    "multimodal_frame_sample",
-    "multimodal_content_dedup",
-    "hard_negative_mining",
-    # (e) risk-weighted never-checked fill
-    "pandas_udf_token_count",
-    "pydatasource_seq_agg",
-    "ivm_running_daily_revenue",
-    "merge_upsert_customers",
-    "streaming_sliding_activity",
-    "cooccurrence_window2",
-    "bigram_lm_counts",
-    "chi_square_independence",
-    "median_absolute_deviation",
-    "mahalanobis_outliers_top20",
-    "clustering_coefficient_ppm",
-    "holt_linear_forecast_weekly",
-    "mmr_diversified_topk",
-    "weighted_sample_topk_es",
-    "label_drift_js_nano",
-    "target_encoding_loo",
-    "sketch_bounded_checks",
-    "kmv_merge_property",
-    "gemm_block_prune_report",
-]
-
-# Retained as the round-11 rotation log (not used for ordering): the rows
-# the r11 window checked, all green in CORRECTNESS_r09.
-_R11_CHECK_FIRST = [
-    # (a) round-11 new operators
-    "flesch_kincaid_readability",
-    "lz78_phrase_census",
-    "kalman_1d_level_filter",
-    "hmm_forward_loglik",
-    "croston_intermittent_forecast",
-    "elo_online_ratings",
-    "adjusted_rand_index",
-    "davies_bouldin_index",
-    "item_item_cosine_recs",
-    "count_min_sketch_est",
-    "knn_shapley_values",
-    "conformal_aps_label_sets",
-    "huffman_code_lengths",
-    "perceptron_online_epoch",
-    "assortativity_degree_trade",
-    "identifier_dynamic_table",
-    "katz_centrality_trade",
-    "osa_vocab_pair_distance",
-    # (b) changed this round
-    "approx_distinct_custkeys",
-    "similarity_topk_numpy",
-    "graph_kcore_2",
-    "cdc_chunk_dedup",
-    "km_survival_curve",
-    "ivfpq_topk_search",
-    "ivfpq_recall_clustered_gate",
-    "similarity_ivf_topk",
-    "similarity_ivf_trained_topk",
-    # (c) VERDICT r8 named leads + SS2 canary + multimodal
-    "text_token_stats",
-    "similarity_cosine_topk",
-    "streaming_tumbling_counts",
-    "sink_csv_roundtrip",
-    "sink_json_roundtrip",
-    "skew_salted_sum_by_status",
-    "dedup_exact_groups",
-    "dedup_simhash_pairs",
-    "grouped_map_lang_stats",
-    "reducer_keep_overwrite",
-    "multimodal_text_vector_join",
-    "multimodal_binary_meta",
-    # (d) oldest never-checked fill
-    "dedup_resolution_keep_docs",
-    "argmax_customer_per_nation",
-    "exists_subquery_priority",
-    "q18_large_volume_orders",
-    "calendar_gap_fill",
-    "percent_rank_prices",
-    "bool_aggregates",
-    "q5_local_supplier_volume",
-    "q7_volume_shipping",
-    "q9_product_type_profit",
-    "q10_returned_items",
-]
-
-# Retained verbatim as the r7 rotation log (not used for ordering): the
-# 50 rows the r7 driver window checked, all green in CORRECTNESS_r07.
-_R7_CHECK_FIRST = [
-    "mapreduce_revenue_by_order",  # flagship - keep first (entry() twin)
-    # one riskiest rep per zero-driver-checked module (42 modules)
-    "markov_stationary_power",     # aggregate2: persisted 8-iteration power
-    "funnel_time_to_convert",      # analytics: event-time funnel deltas
-    "api_quantiles_revenue_buckets",  # api_surface: KeyedMap.quantiles front door
-    "grouped_ols_trend",           # causal: exact-moment OLS
-    "match_recognize_vcp",         # cep_quant: MATCH_RECOGNIZE emulation
-    "crossmodal_text_to_vec_topk",  # crossmodal: text->vector bridge
-    "loso_source_contribution",    # datavalue: leave-one-source-out
-    "fisher_discriminant_dims",    # embed_select: per-dim Fisher ratios
-    "embedding_random_projection",  # embedding_prep: committed-seed JL
-    "convex_hull_upper_qty_price",  # geometry: monotone-chain hull fold
-    "closeness_harmonic_h12",      # graph_central: relaxation rounds
-    "hill_tail_index",             # heavytail: LN-parity commitment
-    "draft_accept_rate_ppm",       # llm_eval2: speculative-decode replay
-    "pass_at_k_estimate",          # llm_eval: combinatorial ratio CASE guard
-    "embedding_binary_hamming_topk",  # llm_prep2: bit-algebra top-k
-    "lm_greedy_decode_steps",      # lm_decode: iterative decode loop
-    "doc_perplexity_avg_nll",      # lm_scale: LN parity + persisted pairs
-    "matryoshka_truncation_recall",  # matryoshka: prefix-dim recall
-    "text_tfidf_scaled",           # ml_features: log-scaled tf-idf
-    "brier_decomposition_nano",    # mleval2: 3-term exact decomposition
-    "heaps_law_fit",               # model_sql: token-position builder (+ r7 perf fix)
-    "revenue_change_decomposition",  # opsmetrics: exact residual identity
-    "theil_u2_seasonal",           # opsstats: HUGEINT pre-scaled SSE
-    "attribution_position_based",  # physical_attr: position credit split
-    "spiegelhalter_z_nano",        # pipeline3: calibration z in nanos
-    "window_range_30day_spend",    # pipeline: RANGE interval window
-    "bandit_replay_ctr",           # policy: offline bandit replay
-    "dp_noised_segment_counts",    # privacy_seq: deterministic DP Laplace
-    "functional_dependency_audit",  # profiling2: FD counterexample scan
-    "percentile_grid_exact",       # profiling: exact multi-percentile grid
-    "quantile_normalize_doclen",   # qnorm: rank-map normalize
-    "rake_keyphrases",             # rake: phrase-window scoring
-    "slope_one_recommend",         # recommender: persisted ratings rollup
-    "from_json_props_stats",       # relational12: schema-on-read JSON
-    "corr_qty_discount_exact",     # relational6: exact-moment correlation
-    "neyman_allocation_sample",    # sampling2: variance-proportional alloc
-    "linear_counting_distinct",    # sketch2: bitmap sketch gate
-    "ecdf_dkw_band",               # stats_band: DKW band + coverage gate
-    "pattern_match_view_purchase",  # temporal2: sequence pattern join
-    "text_lang_id",                # text: n-gram language id (core LLM op)
-    "seasonal_decompose_additive",  # timeseries4: persisted day rollup
-    "dickey_fuller_unit_root",     # timeseries5: lag rn-join regression
-    # 4 more never-checked round-6-wave rows
-    "capture_recapture_estimate",  # opsstats wave Q: Lincoln-Petersen
-    "secretary_rule_success",      # graph_central wave: ADVICE-fixed join
-    "jackknife_ratio_variance",    # eval_stats3: delete-one moments
-    "triplet_violation_rate",      # datavalue: persisted quantized vectors
-    # two of the three newly gated-oracle ANN rows (VERDICT r6 item 2;
-    # ivfpq_topk_search was driver-checked in r6 and keeps selfcheck +
-    # invariance coverage of its new gate at both SFs)
-    "similarity_ivf_topk",
-    "similarity_ivf_trained_topk",
-    # the round's newest operator (DSIR hashed-ngram importance selection)
-    "dsir_importance_select",
-]
-
 
 def _reorder_registry() -> None:
     from hpmr_spark import catalog

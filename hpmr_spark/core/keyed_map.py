@@ -175,13 +175,6 @@ class KeyedMap:
         self._has_order = _has_order
         self._unique = _unique  # True once the ≤1-row-per-key invariant holds
         self._epoch = 0
-        # Driver-side cache of max(_order). Without it every set_batch epoch
-        # embedded the CURRENT plan twice (union side + broadcast max-order
-        # agg side), doubling the logical plan per epoch — exponential
-        # lineage growth, caught by tests/test_epoch_stress.py. With it the
-        # first epoch runs one 1-row agg job and every later epoch is a
-        # pure driver-side increment (our own batch order IS the new max).
-        self._max_order: int | None = None
 
     # ------------------------------------------------------------- construction
     @classmethod
@@ -235,38 +228,18 @@ class KeyedMap:
         self, batch: DataFrame, key_col: str, value_col: str, reducer: _Reducer = Reducer.overwrite
     ) -> "KeyedMap":
         """async_set epoch: union a batch of writes, merge on key
-        (src/dist_map.h:118-130). New rows get a later epoch order so
-        ``overwrite`` means "batch wins over existing state"."""
-        if self._has_order:
-            # Batch order must exceed EVERY existing order, including
-            # user-supplied order_col values from from_df (e.g. epoch-micros
-            # timestamps ~1.7e15) — a fixed (epoch+1)·2^40 base silently
-            # loses to those. The max is computed ONCE (1-row agg job) and
-            # cached driver-side; afterwards each epoch increments it — our
-            # own batch literal IS the new max, so no re-derivation. This
-            # keeps the per-epoch plan growth LINEAR: deriving the base as a
-            # crossJoin(broadcast(agg(cur))) embedded cur's plan twice per
-            # epoch and doubled the logical plan every set_batch
-            # (exponential — tests/test_epoch_stress.py is the sentinel).
-            cur = self._df
-            if self._max_order is None:
-                row = cur.agg(
-                    F.coalesce(F.max(ORDER), F.lit(0)).cast("long").alias("m")
-                ).collect()
-                self._max_order = int(row[0]["m"])
-            base = self._max_order + 1
-            nxt = _normalize(batch, key_col, value_col, None).withColumn(
-                ORDER, F.lit(base).cast("long")
-            )
-        else:
-            cur = self._df.withColumn(ORDER, F.lit(0).cast("long"))
-            base = 1
-            nxt = _normalize(batch, key_col, value_col, None).withColumn(
-                ORDER, F.lit(base).cast("long")
-            )
+        (src/dist_map.h:118-130). The state holds one row per key, so every
+        epoch stamps it order 0 and the batch order 1: ``overwrite`` means
+        "batch wins over existing state" whatever order column the state was
+        built from, and building the epoch runs no Spark job."""
+        cur = self._df.select(KEY, VALUE, F.lit(0).cast("long").alias(ORDER))
+        nxt = batch.select(
+            F.col(key_col).alias(KEY),
+            F.col(value_col).alias(VALUE),
+            F.lit(1).cast("long").alias(ORDER),
+        )
         merged = KeyedMap(cur.unionByName(nxt), _has_order=True, _unique=False).sync(reducer)
         merged._epoch = self._epoch + 1
-        merged._max_order = base  # sync keeps max(_order) = the batch epoch
         return merged
 
     # ------------------------------------------------------------- point ops

@@ -85,3 +85,22 @@ def session_builder(
 
 def get_spark(app_name: str = "hpmr-spark", **kwargs) -> SparkSession:
     return session_builder(app_name, **kwargs).getOrCreate()
+
+
+def count_jobs(spark: SparkSession, fn):
+    """Run ``fn()`` under a fresh job group and return ``(fn(), n)``, where n
+    is the number of Spark jobs it launched on this thread — e.g. the jobs a
+    query runs while its DataFrame is being built. Jobs Spark starts under
+    their own group (streaming micro-batches) are not counted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group, prev = f"count-jobs-{uuid.uuid4().hex}", sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    # the status store is fed by the listener bus; drain it before reading
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -56,10 +56,6 @@ def punct_count(col) -> Column:
     )
 
 
-def upper_count(col) -> Column:
-    return (F.length(col) - F.length(F.regexp_replace(col, "[A-Z]", ""))).cast("long")
-
-
 def stopword_count(col, stopwords=STOPWORDS) -> Column:
     toks = tokens(col)
     sw = F.array(*[F.lit(s) for s in stopwords])

@@ -13,10 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def to_double(vec) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
 def dot(a, b) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),

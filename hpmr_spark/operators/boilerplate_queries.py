@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.dedup.minhash import BROADCAST_MAX_DOCS
 from hpmr_spark.functions.hashing import sql_hash60
-from hpmr_spark.operators.dedup_queries import _parquet_num_rows
+from hpmr_spark.sources.tables import table_rows
 
 _SEG = 5  # tokens per segment
 _DF_MIN = 2  # segment is boilerplate if it appears in >= 2 distinct docs
@@ -155,7 +155,7 @@ def dedup_boilerplate_segments(spark, sf_dir):
     flags = fp.groupBy("h").agg(
         (F.min("doc_id") != F.max("doc_id")).cast("int").alias("_xdoc")
     )
-    n_docs = _parquet_num_rows(f"{sf_dir}/documents.parquet")
+    n_docs = table_rows(sf_dir, "documents")
     if n_docs is not None and n_docs <= BROADCAST_MAX_DOCS:
         joined = fp.join(F.broadcast(flags), "h")
     else:

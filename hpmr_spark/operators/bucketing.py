@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hpmr_spark.sources.tables import load_table
+
 N_BUCKETS = 8
 _prepared: set = set()
 
@@ -58,10 +60,10 @@ def prepare_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         if alt_base is None:
             shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     for df, name, key in ((li, li_name, "l_orderkey"), (o, o_name, "o_orderkey")):
@@ -76,10 +78,10 @@ def prepare_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 def _plain_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fallback when bucketed tables can't be materialized (read-only cwd /
     warehouse): same result via a plain shuffle join."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     return (

@@ -21,6 +21,7 @@ from hpmr_spark.dedup.shingles import SQL_SHINGLE_CTE
 from hpmr_spark.dedup.simhash import HAM_MAX, simhash_docs, simhash_near_pairs, sql_simhash_cte
 from hpmr_spark.similarity.brute_force import cosine_topk, threshold_pairs
 from hpmr_spark.similarity.lsh import ivf_topk, lsh_signature_pairs
+from hpmr_spark.sources.tables import table_rows
 from hpmr_spark.functions.hashing import sql_hash60
 from hpmr_spark.functions.vectors import sql_cosine
 
@@ -60,19 +61,6 @@ def dedup_ngram_jaccard(spark, sf_dir):
     return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold_pct=90)
 
 
-def _parquet_num_rows(path: str) -> int | None:
-    """Row count from the parquet FOOTER (driver-side metadata read — no
-    Spark job, no build-time count(), plan-snapshot-safe). This is the
-    'pipeline metadata' source for size-aware join dispatch: at 100 TB the
-    corpus catalog carries the row count; here the footer is it."""
-    try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None  # unknown size ⟹ scale-safe merge plans
-
-
 @register("dedup_minhash_lsh", _JACCARD_ORACLE)
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash(32 perms) + LSH(16 bands × 2 rows) + exact verify — must equal
@@ -82,7 +70,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     shingle/banded sides; unknown or larger stays merge-pinned."""
     return minhash_dedup_pairs(
         _t(spark, sf_dir, "documents"), threshold_pct=90, bands=16, rows=2,
-        n_docs=_parquet_num_rows(f"{sf_dir}/documents.parquet"),
+        n_docs=table_rows(sf_dir, "documents"),
     )
 
 

@@ -358,9 +358,9 @@ def km_survival_curve(spark, sf_dir):
     # warm at sf0.1, hashes identical); an unbounded one keeps the persist
     # path — coalescing a billion-duration histogram to 4 partitions would
     # be the real regression (plan_snapshot SKIP either way).
-    from hpmr_spark.operators.dedup_queries import _parquet_num_rows
+    from hpmr_spark.sources.tables import table_rows
 
-    n_events = _parquet_num_rows(f"{sf_dir}/events.parquet")
+    n_events = table_rows(sf_dir, "events")
     if n_events is not None and n_events <= 10_000_000:
         g = g.coalesce(4).localCheckpoint(eager=True)
     else:

@@ -119,9 +119,9 @@ def robin_hood_displacement_fold(spark, sf_dir):
     row 9). α < 1 guarded from the parquet footer (c_custkey is
     consecutive 1..n, so the committed subset has exactly n div 10
     keys)."""
-    from hpmr_spark.operators.dedup_queries import _parquet_num_rows
+    from hpmr_spark.sources.tables import table_rows
 
-    n_cust = _parquet_num_rows(f"{sf_dir}/customer.parquet")
+    n_cust = table_rows(sf_dir, "customer")
     if n_cust is not None and n_cust // _RH_KMOD >= _RH_M:
         raise ValueError(
             f"robin_hood_displacement_fold: declared key count "

@@ -120,9 +120,9 @@ def linear_probe_displacement_census(spark, sf_dir):
     the parquet footer (driver-side metadata, no Spark job). Above the
     table size the query raises with a routing message (the
     EXACT_PAIRS_N_CEILING pattern)."""
-    from hpmr_spark.operators.dedup_queries import _parquet_num_rows
+    from hpmr_spark.sources.tables import table_rows
 
-    n_cust = _parquet_num_rows(f"{sf_dir}/customer.parquet")
+    n_cust = table_rows(sf_dir, "customer")
     if n_cust is not None and n_cust // _LP_KMOD >= _LP_M:
         raise ValueError(
             f"linear_probe_displacement_census: declared key count "

@@ -656,9 +656,9 @@ def _exact_pairs_guard(op_name: str, n_rows, sf_dir: str):
     Spark job — the dedup/minhash.py size-aware-dispatch idiom); a caller
     with a known corpus size passes it explicitly."""
     if n_rows is None:
-        from hpmr_spark.operators.dedup_queries import _parquet_num_rows
+        from hpmr_spark.sources.tables import table_rows
 
-        n_rows = _parquet_num_rows(f"{sf_dir}/embeddings.parquet")
+        n_rows = table_rows(sf_dir, "embeddings")
     if n_rows is not None and n_rows > EXACT_PAIRS_N_CEILING:
         raise ValueError(
             f"{op_name}: exact all-pairs scoring over n_rows={n_rows} "

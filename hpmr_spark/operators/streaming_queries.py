@@ -259,6 +259,7 @@ def streaming_dedup_against_corpus(spark, sf_dir):
     one SQL query."""
     from pyspark.sql import functions as F
 
+    from hpmr_spark.sources.tables import load_table
     from hpmr_spark.streaming.windows import _docs_stream, _run_to_table
 
     prefix_fp = F.md5(F.array_join(F.slice(F.split("text", " "), 1, 5), " "))
@@ -267,7 +268,7 @@ def streaming_dedup_against_corpus(spark, sf_dir):
         "doc_id", prefix_fp.alias("fp")
     )
     corpus_fps = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 250)
         .select(prefix_fp.alias("fp"))
         .distinct()

@@ -412,9 +412,9 @@ def conformal_aps_label_sets(spark, sf_dir):
     )
     import math
 
-    from hpmr_spark.operators.dedup_queries import _parquet_num_rows
+    from hpmr_spark.sources.tables import table_rows
 
-    n_emb = _parquet_num_rows(f"{sf_dir}/embeddings.parquet")
+    n_emb = table_rows(sf_dir, "embeddings")
     if n_emb is not None:
         n_cal = n_emb // 2  # odd vec_ids of 0..n-1
     else:  # unknown footer: one bounded count job

@@ -53,16 +53,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
-def has_partial_aggregate(df: DataFrame) -> bool:
-    """Map-side combine present (HashAggregate partial before the exchange) —
-    the engine's analog of the reference's combine-on-insert
-    (/root/reference/src/bare_map.h:55-57)."""
-    plan = formatted_plan(df)
-    return bool(re.search(r"HashAggregate.*\n(?:.*\n)*?.*Exchange", plan)) or (
-        "partial_" in plan
-    )
-
-
 def simple_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "simple"

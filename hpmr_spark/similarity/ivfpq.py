@@ -75,14 +75,6 @@ def _sql_residual(v: str, cents: list[list[float]], cell: str) -> str:
     )
 
 
-def _sql_d2(sub: str, code_lits: list[int]) -> str:
-    arr = "array(" + ",".join(str(int(x)) for x in code_lits) + ")"
-    return (
-        f"aggregate(zip_with({sub},{arr},(a,b)->(a-b)*(a-b)),"
-        f"0L,(acc,x)->acc+x)"
-    )
-
-
 def _sql_codebook_2d(codebook: list, s: int) -> str:
     """The 16×8 codebook of subspace s as ONE 2-D literal array."""
     return "array(" + ",".join(

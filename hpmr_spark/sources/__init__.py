@@ -1,3 +1,3 @@
-from hpmr_spark.sources.tables import TABLES, load_table, load_tables
+from hpmr_spark.sources.tables import TABLES, footer, load_table, table_rows
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "footer", "load_table", "table_rows"]

@@ -28,6 +28,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from hpmr_spark.sources.tables import (
+    events_schema,
+    events_ts,
+    footer,
+    load_events,
+    load_table,
+    table_path,
+)
+
 _ctr = itertools.count()
 
 
@@ -37,32 +46,18 @@ _stream_dirs: dict = {}
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the events table. The file-stream source requires a directory,
     so the single events.parquet is symlinked into a session temp dir (zero
-    copy). ts is parquet TIMESTAMP(NANOS) — read as long (legacy conf) and
-    truncated to micros with exact integer division (see
-    sources/tables.py:load_events)."""
+    copy). The footer schema decides how ts is read (NANOS as bigint,
+    MICROS as NTZ) and ``events_ts`` turns it into a TIMESTAMP, as
+    sources/tables.py:load_events does."""
     import os
     import tempfile
 
-    path = f"{sf_dir}/events.parquet"
     if sf_dir not in _stream_dirs:
         d = tempfile.mkdtemp(prefix="hpmr_events_stream_")
-        os.symlink(path, os.path.join(d, "events.parquet"))
+        os.symlink(table_path(sf_dir, "events"), os.path.join(d, "events.parquet"))
         _stream_dirs[sf_dir] = d
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # pin UTC like sources/tables.py:load_events — the NTZ cast below (and
-    # window/date bucketing downstream) must not depend on the host zone
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(_stream_dirs[sf_dir])
-    # ts has shipped as both TIMESTAMP(NANOS) (read as long under the legacy
-    # conf → exact integer truncation to micros) and TIMESTAMP(MICROS) (read
-    # as NTZ → identity cast under the UTC session zone); adapt like
-    # sources/tables.py:load_events
-    from pyspark.sql.types import LongType
-
-    if isinstance(schema["ts"].dataType, LongType):
-        return stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    schema = events_schema(spark, sf_dir)
+    return events_ts(spark.readStream.schema(schema).parquet(_stream_dirs[sf_dir]), schema)
 
 
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,14 +68,13 @@ def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    path = f"{sf_dir}/documents.parquet"
+    path = table_path(sf_dir, "documents")
     key = ("docs", sf_dir)
     if key not in _stream_dirs:
         d = tempfile.mkdtemp(prefix="hpmr_docs_stream_")
         os.symlink(path, os.path.join(d, "documents.parquet"))
         _stream_dirs[key] = d
-    schema = spark.read.parquet(path).schema
-    return spark.readStream.schema(schema).parquet(_stream_dirs[key])
+    return spark.readStream.schema(footer(path).schema).parquet(_stream_dirs[key])
 
 
 #: Shuffle/state partitions for the memory-sink AvailableNow runs. Each
@@ -183,7 +177,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark requirement on the static side; this is the standard
     enrich-then-aggregate topology for feature/metric pipelines."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     joined = ev.join(F.broadcast(cust), "user_id", "inner")
@@ -392,8 +386,6 @@ def checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory-sink counter discipline) so double-builds stay deterministic."""
     import os
     import tempfile
-
-    from hpmr_spark.sources.tables import load_events
 
     run = next(_ctr)
     base = tempfile.mkdtemp(prefix=f"hpmr_ckpt_once_{run}_")

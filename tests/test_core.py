@@ -184,6 +184,23 @@ def test_set_batch_beats_user_order_col(spark):
     assert km.set_batch(batch, "k", "v", Reducer.keep).get("a") == 2
 
 
+def test_set_batch_builds_without_a_job(spark):
+    # Every epoch stamps the state order 0 and the batch order 1, so
+    # building an epoch — even over a user order column — runs no job.
+    from hpmr_spark.engine import count_jobs
+
+    src = spark.createDataFrame([("a", 1, 10**15), ("b", 7, 3)], ["k", "v", "ord"])
+    km = KeyedMap.from_df(src, "k", "v", Reducer.overwrite, order_col="ord")
+    batch = spark.createDataFrame([("a", 99), ("c", 5)], ["k", "v"])
+    for reducer in (Reducer.overwrite, Reducer.keep, Reducer.sum):
+        merged, n_jobs = count_jobs(spark, lambda: km.set_batch(batch, "k", "v", reducer))
+        assert n_jobs == 0
+    assert dict(merged.items()) == {"a": 100, "b": 7, "c": 5}
+    again, n_jobs = count_jobs(spark, lambda: merged.set_batch(batch, "k", "v", Reducer.overwrite))
+    assert n_jobs == 0
+    assert dict(again.items()) == {"a": 99, "b": 7, "c": 5}
+
+
 def test_chained_map_reduce(spark):
     # DistMap::mapreduce chaining (src/dist_map.h:256-279 result is same type).
     km = prange(spark, 0, 1000).map_reduce_expr(F.col("id") % 100, F.lit(1), Reducer.sum)

@@ -1673,12 +1673,12 @@ def round13_probe(spark, n: int, ops: str = ""):
         m = 1
         while m < 2 * n_keys:
             m *= 2
-        import hpmr_spark.operators.dedup_queries as dq
+        import hpmr_spark.sources.tables as tables
 
-        orig_t, orig_m, orig_nr = ht._t, ht._LP_M, dq._parquet_num_rows
+        orig_t, orig_m, orig_nr = ht._t, ht._LP_M, tables.table_rows
         ht._t = lambda s, d, name: cust
         ht._LP_M = m
-        dq._parquet_num_rows = lambda p: n
+        tables.table_rows = lambda d, name: n
         try:
             t0 = time.time()
             rows = ht.linear_probe_displacement_census(
@@ -1693,7 +1693,7 @@ def round13_probe(spark, n: int, ops: str = ""):
             )
         finally:
             ht._t, ht._LP_M = orig_t, orig_m
-            dq._parquet_num_rows = orig_nr
+            tables.table_rows = orig_nr
 
 
 def main():
