@@ -17,13 +17,14 @@ Spark-first design notes
   src/concurrent_map.h:46-52) are filters / semi / anti joins, so at cluster
   scale they stay distributed; ``get`` collects a single row to the driver,
   matching the reference's owner-broadcast semantics.
-* Arbitrary Python reducers (``Reducer.custom``) run as a two-level Arrow
-  fold: ``mapInArrow(fold)`` merges within each input partition (the
-  reference's combine-on-insert, so a hot key leaves a task as one row), a
-  hash ``repartition(key)`` is the shuffle, and the same ``fold`` merges per
-  key after it. The output schema is the input's own key/value types, so
-  building the plan runs no Spark job. The canned reducers stay JVM-side as
-  agg expressions.
+* Arbitrary Python reducers (``Reducer.custom``) run as a one-level Arrow
+  fold: a hash ``repartition(key)`` is the shuffle, and one
+  ``mapInArrow(fold)`` per shuffle partition merges every row of a key
+  there. Spark's key hash already co-locates -0.0 with 0.0 and every NaN,
+  also inside structs and arrays. The output schema is the input's own
+  key/value types, so building the plan runs no Spark job. The canned
+  reducers stay JVM-side as agg expressions, with partial aggregation before
+  the shuffle (the reference's combine-on-insert).
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, FloatType, StructField, StructType
 
+from hpmr_spark.functions.littables import _sql_lit
 from hpmr_spark.reducers import Reducer, _Reducer
 
 KEY = "key"
@@ -65,7 +67,7 @@ def _arrow_fold(fn: Callable[[Any, Any], Any], freeze: bool):
     def freeze_key(k):
         # hashable, grouping-equal key: structs/arrays become tuples (Arrow
         # rebuilds them from tuples), every NaN one object, -0.0 → 0.0 —
-        # Spark's grouping normalization, applied before the hash shuffle
+        # Spark's grouping normalization
         if isinstance(k, float):
             return nan if k != k else k + 0.0
         if isinstance(k, dict):
@@ -156,15 +158,15 @@ def _arrow_fold(fn: Callable[[Any, Any], Any], freeze: bool):
 
 
 def _custom_fold(df: DataFrame, fn: Callable[[Any, Any], Any]) -> DataFrame:
-    """Two-level fold of ``(KEY, VALUE)`` rows under a Python merge ``fn``:
-    map-side fold → hash shuffle on key → per-key fold. The declared schema
-    is the input's (value made nullable), so nothing is inferred."""
+    """One-level fold of ``(KEY, VALUE)`` rows under a Python merge ``fn``:
+    hash shuffle on key, then one Arrow fold per shuffle partition. The
+    declared schema is the input's (value made nullable), so nothing is
+    inferred."""
     kv = df.select(KEY, VALUE)
     key_f, val_f = kv.schema.fields
     freeze = isinstance(key_f.dataType, (FloatType, DoubleType, StructType, ArrayType))
     schema = StructType([key_f, StructField(VALUE, val_f.dataType, True)])
-    fold = _arrow_fold(fn, freeze)
-    return kv.mapInArrow(fold, schema).repartition(KEY).mapInArrow(fold, schema)
+    return kv.repartition(KEY).mapInArrow(_arrow_fold(fn, freeze), schema)
 
 
 class KeyedMap:
@@ -172,7 +174,7 @@ class KeyedMap:
 
     def __init__(self, df: DataFrame, *, _has_order: bool = False, _unique: bool = True):
         self._df = df
-        self._has_order = _has_order
+        self._has_order = _has_order  # an unsynced frame carries ORDER for sync
         self._unique = _unique  # True once the ≤1-row-per-key invariant holds
         self._epoch = 0
 
@@ -210,19 +212,16 @@ class KeyedMap:
         """Merge duplicate keys — THE shuffle (src/dist_map.h:147-210).
 
         Canned reducers run as JVM agg expressions (partial+final agg). A
-        custom reducer's Python ``fn`` runs as the two-level Arrow fold
-        (map-side fold, hash shuffle on key, per-key fold) with the input's
-        key/value types as the declared schema; the order column is dropped,
-        since ``fn`` sees values only."""
+        custom reducer's Python ``fn`` runs as the one-level Arrow fold (hash
+        shuffle on key, then one fold per shuffle partition) with the input's
+        key/value types as the declared schema. The order column only decides
+        keep/overwrite here: the synced state is ``(key, value)``."""
         if self._unique:
             return self
         if reducer.agg_factory is None:
-            return KeyedMap(_custom_fold(self._df, reducer.fn), _has_order=False, _unique=True)
-        aggs = [reducer.agg(VALUE, ORDER if self._has_order else None).alias(VALUE)]
-        if self._has_order:
-            aggs.append(F.max(ORDER).alias(ORDER))
-        out = self._df.groupBy(KEY).agg(*aggs)
-        return KeyedMap(out, _has_order=self._has_order, _unique=True)
+            return KeyedMap(_custom_fold(self._df, reducer.fn))
+        merged = reducer.agg(VALUE, ORDER if self._has_order else None).alias(VALUE)
+        return KeyedMap(self._df.groupBy(KEY).agg(merged))
 
     def set_batch(
         self, batch: DataFrame, key_col: str, value_col: str, reducer: _Reducer = Reducer.overwrite
@@ -250,10 +249,17 @@ class KeyedMap:
 
     def get_many(self, keys: list) -> dict:
         """Batched point lookup — one job for K keys instead of K jobs.
-        At scale this is an IN-filter pushed to the scan, not K collects."""
-        rows = (
-            self._df.where(F.col(KEY).isin(keys)).select(KEY, VALUE).collect()
-        )
+        At scale this is an IN-filter pushed to the scan, not K collects.
+        The predicate is one SQL ``IN`` list, parsed JVM-side in one call;
+        keys ``_sql_lit`` cannot render fall back to ``isin`` (one py4j
+        literal per key)."""
+        if not keys:
+            return {}
+        try:
+            pred = F.expr(f"`{KEY}` IN ({', '.join(_sql_lit(k) for k in keys)})")
+        except TypeError:
+            pred = F.col(KEY).isin(keys)
+        rows = self._df.where(pred).select(KEY, VALUE).collect()
         return {r[0]: r[1] for r in rows}
 
     def has(self, key: Any) -> bool:
@@ -264,7 +270,6 @@ class KeyedMap:
         """Delete one key (src/bare_hash_container.h:150-179)."""
         return KeyedMap(
             self._df.where(F.col(KEY) != F.lit(key)),
-            _has_order=self._has_order,
             _unique=self._unique,
         )
 
@@ -273,7 +278,6 @@ class KeyedMap:
         other = keys_df.select(F.col(key_col).alias(KEY))
         return KeyedMap(
             self._df.join(other, on=KEY, how="left_anti"),
-            _has_order=self._has_order,
             _unique=self._unique,
         )
 
@@ -337,13 +341,12 @@ class KeyedMap:
         """Pre-size partitioning (src/dist_map.h:82-88): hash-repartition on key."""
         return KeyedMap(
             self._df.repartition(n_partitions, KEY),
-            _has_order=self._has_order,
             _unique=self._unique,
         )
 
     def clear(self) -> "KeyedMap":
         """Drop all entries (src/dist_map.h:243-253)."""
-        return KeyedMap(self._df.limit(0), _has_order=self._has_order, _unique=True)
+        return KeyedMap(self._df.limit(0))
 
     # ------------------------------------------------------------ full scans
     def for_each(self, handler: Callable[[Any, Any], None]) -> None:

@@ -37,6 +37,10 @@ def _sql_lit(v) -> str:
         # repr round-trips doubles exactly through the Spark parser (r6)
         return f"CAST('{v!r}' AS DOUBLE)"
     if isinstance(v, str):
+        if "${" in v:
+            # spark.sql and F.expr substitute ${...} references before
+            # parsing, with no escape; a hex literal carries the text past it
+            return f"CAST(X'{v.encode().hex()}' AS STRING)"
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, list):
         return "array(" + ", ".join(_sql_lit(x) for x in v) + ")"

@@ -148,11 +148,12 @@ def custom_reducer_max_qty(spark, sf_dir):
     """User-defined reducer (the reference's std::function reducer,
     src/dist_map.h:34): an arbitrary Python merge fn (here max, so the
     oracle can pin it with SQL MAX) that Catalyst can't see. It
-    runs as the two-level Arrow fold — mapInArrow fold per input partition,
-    hash shuffle on key, mapInArrow fold per key — so the shuffle carries one
-    value per (partition, key), the same two-level reduce as the JVM path.
-    The declared bigint schema means no build-time job; canned reducers
-    never take this path."""
+    runs as the one-level Arrow fold — hash shuffle on key, then one
+    mapInArrow fold per shuffle partition — so the Python merge runs after
+    the shuffle, at its parallelism, whatever the input's partitioning
+    (sf0.1 lineitem is one row group). The declared bigint schema means no
+    build-time job; canned reducers never take this path and keep JVM
+    partial aggregation."""
     from hpmr_spark.core.keyed_map import KeyedMap
     from hpmr_spark.reducers import Reducer
 

@@ -94,14 +94,15 @@ class Reducer:
         std::function reducers (src/dist_map.h:34).
 
         ``KeyedMap.sync`` (so ``from_df``, ``from_pairs``, ``set_batch`` and
-        ``map_reduce_expr``) runs it as a two-level Arrow fold: a map-side
-        ``mapInArrow`` fold per input partition, a hash shuffle on key, and
-        the same fold per key. The contract is the reference's V×V→V: ``fn``
-        gets two values of the value type V (as Arrow's ``to_pylist`` gives
-        them) and must return a V. The output schema is declared from the
-        input's key and value types, so building the plan launches no job; a
-        result V cannot hold (1.5 for a bigint, a third digit for
-        decimal(10,2), an overflow) raises at execution instead of being
-        cast. ``fn`` must be associative and commutative: merge order
-        within and across partitions is unspecified."""
+        ``map_reduce_expr``) runs it as a one-level Arrow fold: a hash
+        shuffle on key, then one ``mapInArrow`` fold per shuffle partition,
+        so ``fn`` runs once per duplicate key, after the shuffle. The
+        contract is the reference's V×V→V: ``fn`` gets two values of the
+        value type V (as Arrow's ``to_pylist`` gives them) and must return a
+        V. The output schema is declared from the input's key and value
+        types, so building the plan launches no job; a result V cannot hold
+        (1.5 for a bigint, a third digit for decimal(10,2), an overflow)
+        raises at execution instead of being cast. ``fn`` must be
+        associative and commutative: merge order within a partition is
+        unspecified."""
         return _Reducer(name, None, fn)

@@ -3,6 +3,8 @@
 hash_set_test.cc workload shapes at reduced N.
 """
 
+from datetime import date
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -144,6 +146,75 @@ def test_custom_reducer_partition_invariant(spark):
     )
 
 
+def test_custom_reducer_plan_is_one_fold_after_one_shuffle(spark):
+    # The fold runs once, after the key shuffle: no map-side Python pass.
+    import re
+
+    from hpmr_spark.plans.explain import formatted_plan, n_shuffles
+
+    df = spark.range(1000).selectExpr("id % 7 AS k", "id AS v")
+    folded = KeyedMap.from_df(df, "k", "v", PYSUM).df
+    plan = formatted_plan(folded)
+    assert len(re.findall(r"\(\d+\) MapInArrow\b", plan)) == 1, plan
+    assert n_shuffles(folded) == 1, plan
+
+
+def _canon(km):
+    # repr-sorted items: NaN keys compare equal by spelling, not by ==
+    return sorted(repr(kv) for kv in km.items())
+
+
+@pytest.mark.parametrize(
+    "key_sql",
+    [
+        "d",
+        "named_struct('d', d, 'b', id % 2 = 0)",
+        "array(d, CAST('-0.0' AS DOUBLE))",
+        "array(named_struct('d', d))",
+    ],
+)
+def test_custom_reducer_float_keys_group_as_canned(spark, key_sql):
+    # 0.0, -0.0 and NaNs of two bit patterns, alone and inside structs and
+    # arrays, over 4 input partitions: the key shuffle must co-locate what
+    # grouping treats as one key.
+    d = (
+        "CASE id % 4 WHEN 0 THEN CAST('0.0' AS DOUBLE) WHEN 1 THEN CAST('-0.0' AS DOUBLE)"
+        " WHEN 2 THEN CAST('NaN' AS DOUBLE) ELSE -CAST('NaN' AS DOUBLE) END"
+    )
+    df = (
+        spark.range(4000)
+        .selectExpr("id", f"{d} AS d")
+        .selectExpr(f"{key_sql} AS k", "id AS v")
+        .repartition(4)
+    )
+    assert df.rdd.getNumPartitions() >= 4
+    # keep the key shuffle's 16 partitions apart: coalescing them would hide
+    # a shuffle that split one grouping key
+    confs = {"spark.sql.shuffle.partitions": "16",
+             "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    orig = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        got = KeyedMap.from_df(df, "k", "v", PYSUM)
+        want = KeyedMap.from_df(df, "k", "v", Reducer.sum)
+        assert got.n_keys() == want.n_keys()
+        assert _canon(got) == _canon(want)
+    finally:
+        for k, v in orig.items():
+            spark.conf.set(k, v)
+
+
+def test_custom_reducer_hot_key_single_partition(spark):
+    # every row in one input partition, 60% of them on key 0
+    df = spark.sql(
+        "SELECT IF(id % 10 < 6, 0, id % 1000) AS k, (id * 7919) % 100003 AS v FROM range(20000)"
+    ).repartition(1)
+    assert df.rdd.getNumPartitions() == 1
+    got = KeyedMap.from_df(df, "k", "v", PYMAX).to_dict()
+    assert got == KeyedMap.from_df(df, "k", "v", Reducer.max).to_dict()
+
+
 def test_get_default_and_has_unset(spark):
     # dist_map_test.cc:26-31, hash_set_test.cc membership/delete.
     km = KeyedMap.from_pairs(spark, [("x", 1), ("y", 2)])
@@ -159,6 +230,57 @@ def test_get_many_batched(spark):
     assert got == {3: 9, 7: 49}
 
 
+def _isin_lookup(km, keys):
+    rows = km.df.where(F.col("key").isin(keys)).select("key", "value").collect()
+    return {r[0]: r[1] for r in rows}
+
+
+@pytest.mark.parametrize(
+    "pairs, keys",
+    [
+        # quotes, backslashes and ${...} (which the SQL parser substitutes)
+        # survive the SQL IN list
+        (
+            [("a'b", 1), ("c\\d", 2), ("e\\'f", 3), ('g"h', 4), ("x\\", 5), ("", 6),
+             ("${spark.app.name}", 7), ("${nope}", 8)],
+            ["a'b", "c\\d", "e\\'f", 'g"h', "x\\", "", "absent'", "\\",
+             "${spark.app.name}", "${nope}"],
+        ),
+        # bigint bounds
+        ([(2**63 - 1, 1), (-(2**63), 2), (0, 3)], [2**63 - 1, -(2**63), 5]),
+        # NULL matches nothing, as in isin
+        ([(None, 1), (1, 2)], [None, 1]),
+        # NaN matches NaN (Spark SQL equality)
+        ([(float("nan"), 1), (0.5, 2), (-0.0, 3)], [float("nan"), 0.5, 1e300]),
+        # a type _sql_lit cannot render falls back to isin
+        ([(date(2020, 1, d), d) for d in (1, 2, 3)], [date(2020, 1, 2)]),
+    ],
+    ids=["quotes", "bigint-bounds", "null", "nan", "date-fallback"],
+)
+def test_get_many_matches_isin(spark, pairs, keys):
+    km = KeyedMap.from_pairs(spark, pairs)
+    got, want = km.get_many(keys), _isin_lookup(km, keys)
+    assert sorted(map(repr, got.items())) == sorted(map(repr, want.items()))
+    assert got  # every case finds at least one key
+
+
+def test_get_many_empty_runs_no_job(spark):
+    from hpmr_spark.engine import count_jobs
+
+    km = KeyedMap.from_pairs(spark, [(1, 2)])
+    got, n_jobs = count_jobs(spark, lambda: km.get_many([]))
+    assert got == {} and n_jobs == 0
+
+
+def test_synced_state_is_key_value(spark):
+    # the order column only decides keep/overwrite; synced state drops it
+    src = spark.createDataFrame([("a", 1, 5), ("a", 2, 9), ("b", 7, 3)], ["k", "v", "ord"])
+    for reducer in (Reducer.overwrite, Reducer.sum, PYSUM):
+        km = KeyedMap.from_df(src, "k", "v", reducer, order_col="ord")
+        assert km.df.columns == ["key", "value"]
+    assert KeyedMap.from_pairs(spark, [("a", 1)]).df.columns == ["key", "value"]
+
+
 def test_set_batch_epoch_merge(spark):
     # async_set → sync epochs: batch writes merge into state.
     km = KeyedMap.from_pairs(spark, [("a", 1), ("b", 2)])
@@ -171,8 +293,8 @@ def test_set_batch_epoch_merge(spark):
 
 def test_set_batch_beats_user_order_col(spark):
     # A map built via from_df with a real-world order column (epoch-micros
-    # scale, ≫ 2^40) must still let set_batch's overwrite win: the batch
-    # order is derived from max(existing)+1, not a fixed epoch base.
+    # scale, ≫ 2^40) must still let set_batch's overwrite win: every epoch
+    # stamps the state order 0 and the batch order 1.
     big = 1_700_000_000_000_000  # epoch-micros ballpark
     src = spark.createDataFrame(
         [("a", 1, big), ("a", 2, big + 5), ("b", 7, big)], ["k", "v", "ord"]

@@ -59,7 +59,8 @@ REPRESENTATIVE = [
     "time_weighted_avg_value",
     "pipeline_pretraining_report",
     # late round-2: iterative BFS, integer z² anomaly flags, min_by/max_by
-    # bars, Arrow custom-reducer fold, JL projection
+    # bars, one-level Arrow custom-reducer fold after the key shuffle, JL
+    # projection
     "graph_bfs_3hop",
     "event_rate_anomaly_hours",
     "ohlc_hourly_bars",

@@ -1,5 +1,5 @@
-"""values_df edge cases: empty rows, parameterized/nested DDL types and
-non-finite doubles."""
+"""values_df edge cases: empty rows, parameterized/nested DDL types,
+non-finite doubles and strings the SQL parser would rewrite."""
 
 import math
 
@@ -37,3 +37,10 @@ def test_non_finite_doubles_round_trip(spark):
     rows = values_df(spark, [(float("nan"),), (float("inf"),), (float("-inf"),), (0.5,)], "x double").collect()
     got = [r[0] for r in rows]
     assert math.isnan(got[0]) and got[1:] == [math.inf, -math.inf, 0.5]
+
+
+def test_strings_round_trip_verbatim(spark):
+    # quotes, backslashes and ${...} references (which spark.sql substitutes)
+    texts = ["a'b", "c\\d", "e\\'f", "${spark.app.name}", "${nope}", "x${", "é☃"]
+    rows = values_df(spark, [(i, t) for i, t in enumerate(texts)], "i int, t string")
+    assert [r[1] for r in rows.orderBy("i").collect()] == texts
