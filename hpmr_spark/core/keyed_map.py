@@ -176,7 +176,6 @@ class KeyedMap:
         self._df = df
         self._has_order = _has_order  # an unsynced frame carries ORDER for sync
         self._unique = _unique  # True once the ≤1-row-per-key invariant holds
-        self._epoch = 0
 
     # ------------------------------------------------------------- construction
     @classmethod
@@ -237,9 +236,7 @@ class KeyedMap:
             F.col(value_col).alias(VALUE),
             F.lit(1).cast("long").alias(ORDER),
         )
-        merged = KeyedMap(cur.unionByName(nxt), _has_order=True, _unique=False).sync(reducer)
-        merged._epoch = self._epoch + 1
-        return merged
+        return KeyedMap(cur.unionByName(nxt), _has_order=True, _unique=False).sync(reducer)
 
     # ------------------------------------------------------------- point ops
     def get(self, key: Any, default: Any = None) -> Any:
@@ -267,9 +264,11 @@ class KeyedMap:
         return bool(self._df.where(F.col(KEY) == F.lit(key)).take(1))
 
     def unset(self, key: Any) -> "KeyedMap":
-        """Delete one key (src/bare_hash_container.h:150-179)."""
+        """Delete one key (src/bare_hash_container.h:150-179). The NULL key
+        is kept, so ``unset(None)`` deletes nothing, as ``has(None)`` finds
+        nothing."""
         return KeyedMap(
-            self._df.where(F.col(KEY) != F.lit(key)),
+            self._df.where(F.coalesce(F.col(KEY) != F.lit(key), F.lit(True))),
             _unique=self._unique,
         )
 

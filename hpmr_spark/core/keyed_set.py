@@ -39,7 +39,8 @@ class KeyedSet:
         return bool(self._df.where(F.col(KEY) == F.lit(key)).take(1))
 
     def unset(self, key: Any) -> "KeyedSet":
-        return KeyedSet(self._df.where(F.col(KEY) != F.lit(key)))
+        # keep the NULL key, as KeyedMap.unset does
+        return KeyedSet(self._df.where(F.coalesce(F.col(KEY) != F.lit(key), F.lit(True))))
 
     def n_keys(self) -> int:
         return self._df.count()

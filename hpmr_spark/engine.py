@@ -58,14 +58,8 @@ def session_builder(
         # Scale-adaptive by definition: AQE sizes by bytes. Results are
         # partition-count invariant repo-wide under THIS conf
         # (selfcheck_r14_invariance.json — the r12-named sweep predates the
-        # conf). COUPLING: setting SPARK_GRAFT_CACHE_AQE=false re-creates
-        # the documented 4x regression on every persisted multi-consumer
-        # frame (MAD's histogram persist and the r11 postings persists were
-        # sized assuming this conf is on).
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHE_AQE", "true"),
-        )
+        # conf).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -157,7 +157,8 @@ def _sb_oracle() -> str:
 
 def stupid_backoff_df(docs):
     """DF-level Stupid-Backoff pipeline over a (doc_id, text) frame —
-    shared by the registered query and tools/scale_probe.py round9b.
+    the registered query's body; the round-9 1M-doc scale probe also ran
+    it (COVERAGE.md round-9 scale notes).
 
     MAP-SIDE LOO design (round-9 probe: the first build stacked a 5x
     per-occurrence key table through two 290M-row sort-merge joins —

@@ -664,7 +664,7 @@ def dedup_threshold_sweep(spark, sf_dir):
 # when the cluster count grows with the corpus so occupancy stays bounded
 # (the paper trains ~100k clusters for billions of vectors; assignment then
 # routes through the IVF machinery instead of 8 literal centroids). The
-# round-8 scale probe (tools/scale_probe.py round8semdedup) measures
+# round-8 scale probe (SCALE.md round-8 probes, SemDeDup table) measures
 # exactly that: within-cell candidate pairs track occupancy, not n².
 
 _SEMC_K = 8

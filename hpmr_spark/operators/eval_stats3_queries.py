@@ -135,8 +135,8 @@ def naive_bayes_lang_eval(spark, sf_dir):
         # plan-uniqueness dummy (persisted below — cache-aliasing rule)
         F.max(F.lit(0)).alias("_uq_nb"),
     ).drop("_uq_nb").persist(StorageLevel.DISK_ONLY)
-    # r12 storage-level probe at 1M docs (tools/persist_probe.py, cycle-2
-    # walls): MEMORY_AND_DISK 78.9s/326MB cached, _DESER 68.7s/508MB,
+    # r12 storage-level probe at 1M docs (SCALE.md round-12-opt probes,
+    # cycle-2 walls): MEMORY_AND_DISK 78.9s/326MB cached, _DESER 68.7s/508MB,
     # DISK_ONLY 66.9s/0MB, no-persist 66.3s. DISK_ONLY ties no-persist,
     # keeps the one-corpus-explode plan, and removes the §5 memory-pressure
     # hazard (a postings-scale in-memory cache can evict-thrash at 100 TB).

@@ -360,7 +360,7 @@ def bcubed_dedup_eval(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("cpt"),
         F.max(F.lit(0)).alias("_uq_bc"),  # plan-uniqueness dummy
     ).drop("_uq_bc").persist(StorageLevel.DISK_ONLY)
-    # r12 storage-level probe at 1M docs (tools/persist_probe.py):
+    # r12 storage-level probe at 1M docs (SCALE.md round-12-opt probes):
     # MEMORY_AND_DISK 3.4s, _DESER 3.2s, DISK_ONLY 3.2s, no-persist 3.1s —
     # within noise locally; DISK_ONLY removes the in-memory cache of a
     # frame that is ~n_docs rows at corpus scale (narrow but unbounded).

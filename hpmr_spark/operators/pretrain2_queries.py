@@ -152,8 +152,8 @@ _GOPHER_REP_ORACLE = _GOPHER_REP_ORACLE_TMPL.replace(
 
 def gopher_fractions_df(docs):
     """Frame-level builder over a (doc_id, text) DataFrame — reused by the
-    registered query below and by tools/scale_probe.py round9 (synthetic
-    corpora at 1M/3M/10M docs)."""
+    registered query below; the round-9 scale probe also ran it on
+    synthetic corpora at 1M/3M/10M docs (SCALE.md round-9 probes)."""
     d = docs.select(
         "doc_id",
         F.split("text", " ").alias("a"),

@@ -97,8 +97,9 @@ _MLM_ORACLE = f"""
 
 
 def mlm_masking_df(d):
-    """DF-level MLM pipeline over a (doc_id, lang, text) frame — shared by
-    the registered query and tools/scale_probe.py round9b."""
+    """DF-level MLM pipeline over a (doc_id, lang, text) frame — the
+    registered query's body; the round-9 1M-doc scale probe also ran it
+    (COVERAGE.md round-9 scale notes)."""
     tok = d.select(
         "doc_id",
         "lang",
@@ -505,8 +506,8 @@ def softdedup_doc_weights_df(docs):
 
 def softdedup_commonness_df(docs):
     """DF-level SoftDeDup per-source rollup over a (doc_id, source, text)
-    frame — shared by the registered query and tools/scale_probe.py
-    round9b."""
+    frame — the registered query's body; the round-9 1M-doc scale probe
+    also ran it (COVERAGE.md round-9 scale notes)."""
     w = softdedup_doc_weights_df(docs)
     return w.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

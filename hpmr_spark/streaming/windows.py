@@ -82,29 +82,15 @@ def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: test corpus sizes that commit overhead IS the stream's wall (measured
 #: r11: tumbling warm 1.25 s at 16 partitions, 0.93 s at 8, 0.78 s at 4 —
 #: compute is trivial either way). 8 keeps the stateful stage genuinely
-#: multi-partition while halving commit overhead; a production deployment
-#: sizes this to keyspace/executor count via the env knob. Results are
-#: partition-count invariant (tests/test_invariance.py; the full-registry
-#: invariance sweeps run the streams at BOTH values). Checkpoint-coupled
-#: queries (ivm_checkpoint_resume, statestore reader) keep their own
-#: fixed pin — a resumed checkpoint must match its writer's partitioning.
-import os as _os
-
-STREAM_SHUFFLE_PARTITIONS = int(
-    _os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-)
-
-#: State-store provider for the memory-sink AvailableNow runs (VERDICT r11
-#: item 5). Empty = Spark's default (HDFSBackedStateStoreProvider).
-#: Measured r12 (tools/rocksdb_probe.py, interleaved warm reps): RocksDB is
-#: SLOWER on this family — tumbling 1.7-1.8 vs 1.5-1.7 s, sliding 1.2-2.3
-#: vs 1.0-1.2, session 2.4-2.5 vs 2.2-2.4 — per-batch RocksDB instance
-#: open/commit overhead dominates at memory-sink state sizes; RocksDB pays
-#: off when state outgrows executor memory, so a production deployment
-#: with large/spilling state sets the class name here. Checkpoint-coupled
-#: queries (ivm_checkpoint_resume, statestore reader) never read this
-#: knob — a resumed checkpoint must match its writer's provider AND format.
-STREAM_STATESTORE_PROVIDER = _os.environ.get("SPARK_GRAFT_STREAM_STATESTORE", "")
+#: multi-partition while halving commit overhead. Because this pin
+#: overrides the session's shuffle partitions, the session-level sweeps
+#: never vary it; tests/test_invariance.py runs streams of all three output
+#: modes at 1 and 8 state partitions and requires identical rows. The runs
+#: use Spark's default HDFS-backed state store: RocksDB measured slower on
+#: this family (CLAUDE.md round-15 notes). Checkpoint-coupled queries
+#: (ivm_checkpoint_resume, statestore reader) keep their own fixed pin — a
+#: resumed checkpoint must match its writer's partitioning.
+STREAM_SHUFFLE_PARTITIONS = 8
 
 
 def _run_to_table(stream_df: DataFrame, label: str, output_mode: str) -> DataFrame:
@@ -118,14 +104,10 @@ def _run_to_table(stream_df: DataFrame, label: str, output_mode: str) -> DataFra
     spark = stream_df.sparkSession
     name = f"mem_{label}_{next(_ctr)}"
     orig = spark.conf.get("spark.sql.shuffle.partitions")
-    _pk = "spark.sql.streaming.stateStore.providerClass"
-    orig_provider = spark.conf.get(_pk, "")
     try:
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
         )
-        if STREAM_STATESTORE_PROVIDER:
-            spark.conf.set(_pk, STREAM_STATESTORE_PROVIDER)
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -136,11 +118,6 @@ def _run_to_table(stream_df: DataFrame, label: str, output_mode: str) -> DataFra
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig)
-        if STREAM_STATESTORE_PROVIDER:
-            if orig_provider:
-                spark.conf.set(_pk, orig_provider)
-            else:
-                spark.conf.unset(_pk)
     return spark.table(name)
 
 

@@ -224,6 +224,20 @@ def test_get_default_and_has_unset(spark):
     assert not km2.has("x") and km2.n_keys() == 1
 
 
+def test_unset_keeps_null_key(spark):
+    # `key != k` is NULL on the NULL key; unset(k) must not drop that row,
+    # and unset(None) deletes nothing, as has(None) finds nothing.
+    km = KeyedMap.from_pairs(spark, [(None, 1), ("a", 2), ("b", 3)])
+    want = {None: 1, "b": 3}
+    assert km.unset("a").to_dict() == want
+    gone = spark.createDataFrame([("a",)], "k string")
+    assert km.unset_many(gone, "k").to_dict() == want  # left-anti control
+    assert km.unset(None).to_dict() == km.to_dict()
+    s = KeyedSet.from_df(spark.createDataFrame([(None,), ("a",), ("b",)], "k string"), "k")
+    assert {r[0] for r in s.unset("a").to_df().collect()} == {None, "b"}
+    assert s.unset(None).n_keys() == 3
+
+
 def test_get_many_batched(spark):
     km = KeyedMap.from_pairs(spark, [(i, i * i) for i in range(100)])
     got = km.get_many([3, 7, 200])

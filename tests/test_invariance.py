@@ -177,3 +177,24 @@ def test_partition_invariance(spark, sf_dir, name):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig)
     assert h5 == h64, f"{name} result depends on shuffle partitioning"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_tumbling_counts",  # complete mode
+        "streaming_stateful_user_totals",  # update mode
+        "streaming_stream_stream_join",  # append mode
+    ],
+)
+def test_stream_state_partition_invariance(spark, sf_dir, name, monkeypatch):
+    # _run_to_table pins the stream's shuffle (= state) partitions to
+    # STREAM_SHUFFLE_PARTITIONS over the session's value, so the sweep above
+    # never varies them; vary the pin itself.
+    from hpmr_spark.streaming import windows
+
+    hashes = []
+    for n in (1, 8):
+        monkeypatch.setattr(windows, "STREAM_SHUFFLE_PARTITIONS", n)
+        hashes.append(canon(QUERIES[name](spark, sf_dir)))
+    assert hashes[0] == hashes[1], f"{name} result depends on state partitioning"
