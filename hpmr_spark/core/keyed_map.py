@@ -465,7 +465,7 @@ class KeyedMap:
         lookup (no shuffle, no broadcast join machinery) — for small hot
         dimension maps; use a broadcast join beyond max_rows."""
         m = self.as_map_column(max_rows)
-        return df.withColumn(out_col, m.getItem(F.col(key_col)))
+        return df.withColumn(out_col, m[F.col(key_col)])
 
     def persist(self) -> "KeyedMap":
         self._df = self._df.persist()

@@ -13,6 +13,10 @@ conf. Every knob here is chosen for scale-out first, then works locally:
 - Python workers get the package root on PYTHONPATH: functions pickled by
   reference (Python data sources, streaming state functions) import
   ``hpmr_spark`` on the worker, whatever directory the application runs from.
+- Python workers fork from ``hpmr_spark.pydaemon``: pyspark's daemon, except
+  that the per-task ``importlib.invalidate_caches()`` re-reads a zip on the
+  worker path (``pyspark.zip``) only when it has changed. That re-read was
+  170-250 ms of every Python task.
 """
 
 from __future__ import annotations
@@ -57,8 +61,7 @@ def session_builder(
         # it; observed as the 4x MAD-persist regression, OPTIMIZATION_r11.md).
         # Scale-adaptive by definition: AQE sizes by bytes. Results are
         # partition-count invariant repo-wide under THIS conf
-        # (selfcheck_r14_invariance.json — the r12-named sweep predates the
-        # conf).
+        # (selfcheck_r15_invariance.json).
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -71,6 +74,8 @@ def session_builder(
         # merged by Spark with pyspark's own path and the launching
         # process's PYTHONPATH when it starts a Python worker
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        # imported from that PYTHONPATH, so it works from any cwd too
+        .config("spark.python.daemon.module", "hpmr_spark.pydaemon")
     )
     if event_log_dir is not None:
         b = b.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", event_log_dir)

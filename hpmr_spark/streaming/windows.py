@@ -360,8 +360,10 @@ def checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user totals equal the batch aggregation of A ∪ B (the oracle);
     tests/test_streaming.py additionally pins numInputRows of phase 2 to
     EXACTLY |B|. Each invocation uses fresh source/checkpoint dirs (the
-    memory-sink counter discipline) so double-builds stay deterministic."""
+    memory-sink counter discipline) so double-builds stay deterministic, and
+    removes them once phase 2 has finished."""
     import os
+    import shutil
     import tempfile
 
     run = next(_ctr)
@@ -370,54 +372,58 @@ def checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(src, exist_ok=True)
 
-    ev = load_events(spark, sf_dir).select("user_id", "value")
-    ev.coalesce(1).write.mode("append").parquet(src)
+    try:
+        ev = load_events(spark, sf_dir).select("user_id", "value")
+        ev.coalesce(1).write.mode("append").parquet(src)
 
-    def run_phase(label: str):
-        stream = (
-            spark.readStream.schema("user_id long, value double")
-            .parquet(src)
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                    "value_cents"
-                ),
+        def run_phase(label: str):
+            stream = (
+                spark.readStream.schema("user_id long, value double")
+                .parquet(src)
+                .groupBy("user_id")
+                .agg(
+                    F.count(F.lit(1)).alias("n_events"),
+                    F.sum(F.round(F.col("value") * 100).cast("long")).alias(
+                        "value_cents"
+                    ),
+                )
             )
+            name = f"mem_ckptonce_{run}_{label}"
+            orig = spark.conf.get("spark.sql.shuffle.partitions")
+            try:
+                spark.conf.set("spark.sql.shuffle.partitions", "16")
+                q = (
+                    stream.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode("complete")
+                    .option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+                progress = [p for p in q.recentProgress]
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", orig)
+            return name, progress
+
+        _, p1 = run_phase("p1")
+
+        delta = (
+            load_events(spark, sf_dir)
+            .where(F.col("event_type") == "purchase")
+            .select("user_id", (F.col("value") * 2).alias("value"))
         )
-        name = f"mem_ckptonce_{run}_{label}"
-        orig = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "16")
-            q = (
-                stream.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            progress = [p for p in q.recentProgress]
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", orig)
-        return name, progress
+        delta.coalesce(1).write.mode("append").parquet(src)
+        n_delta = delta.count()
 
-    _, p1 = run_phase("p1")
-
-    delta = (
-        load_events(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select("user_id", (F.col("value") * 2).alias("value"))
-    )
-    delta.coalesce(1).write.mode("append").parquet(src)
-    n_delta = delta.count()
-
-    name2, p2 = run_phase("p2")
+        name2, p2 = run_phase("p2")
+    finally:
+        # the result is read back from the memory sink, not from here
+        shutil.rmtree(base, ignore_errors=True)
     phase2_rows = sum(int(p["numInputRows"]) for p in p2)
     # stash for the pytest assertion (module-level, last run wins)
     global _CKPT_ONCE_LAST
-    _CKPT_ONCE_LAST = {"n_delta": int(n_delta), "phase2_rows": phase2_rows}
+    _CKPT_ONCE_LAST = {"n_delta": int(n_delta), "phase2_rows": phase2_rows, "dir": base}
 
     return spark.table(name2).select("user_id", "n_events", "value_cents")
 

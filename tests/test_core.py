@@ -3,6 +3,7 @@
 hash_set_test.cc workload shapes at reduced N.
 """
 
+import warnings
 from datetime import date
 
 import pytest
@@ -373,7 +374,11 @@ def test_lookup_join_literal_map(spark):
     # hot-lookup idiom: small map becomes a literal Catalyst map column
     km = KeyedMap.from_pairs(spark, [(1, "a"), (2, "b")])
     df = spark.createDataFrame([(1,), (2,), (3,)], ["k"])
-    out = {r["k"]: r["value"] for r in km.lookup_join(df, "k").collect()}
+    # a Column key to getItem is deprecated (FutureWarning); indexing is not
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        joined = km.lookup_join(df, "k")
+    out = {r["k"]: r["value"] for r in joined.collect()}
     assert out == {1: "a", 2: "b", 3: None}
     assert km.to_dict() == {1: "a", 2: "b"}
 

@@ -55,11 +55,16 @@ def test_checkpoint_restart_processes_only_delta(spark, sf_dir):
     """streaming_checkpoint_exactly_once: phase 2 (restart on the same
     checkpoint) must ingest EXACTLY the delta file's rows — the file
     source's offsets live in the checkpoint, so nothing from phase 1 is
-    re-read (exactly-once accounting)."""
+    re-read (exactly-once accounting). Its source/checkpoint dir is gone
+    when it returns; the result is read from the memory sink."""
+    import os
+
     from hpmr_spark.streaming import windows as W
 
-    W.checkpoint_exactly_once(spark, sf_dir).collect()
+    rows = W.checkpoint_exactly_once(spark, sf_dir).collect()
     info = W._CKPT_ONCE_LAST
     assert info is not None
+    assert not os.path.exists(info["dir"]), info
+    assert rows
     assert info["phase2_rows"] == info["n_delta"], info
     assert info["n_delta"] > 0

@@ -1,7 +1,9 @@
 """Python workers import `hpmr_spark` whatever the working directory: an
 application that puts the package on its own `sys.path` (and not on
 PYTHONPATH) still runs a custom-reducer KeyedMap (its Arrow fold runs in
-Python workers) and the Python data source (pickled by reference)."""
+Python workers) and the Python data source (pickled by reference), and its
+workers fork from the engine daemon (`hpmr_spark.pydaemon`), which Spark
+imports from that same worker PYTHONPATH."""
 
 import os
 import subprocess
@@ -23,6 +25,16 @@ SCRIPT = textwrap.dedent(
     assert km.to_dict() == {{1: 6, 2: 5}}, km.to_dict()
     rows = queries()["pydatasource_seq_agg"](spark, "").collect()
     assert rows, "pydatasource_seq_agg returned no rows"
+
+    def probe(batches):
+        import pyarrow as pa
+        from hpmr_spark.pydaemon import installed
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({{"installed": [installed() is not None]}})
+
+    flags = [r[0] for r in spark.range(4, numPartitions=2).mapInArrow(probe, "installed boolean").collect()]
+    assert flags == [True, True], flags
     spark.stop()
     print("ok")
     """
