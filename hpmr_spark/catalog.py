@@ -25,6 +25,9 @@ ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None):
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:

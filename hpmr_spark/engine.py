@@ -17,11 +17,18 @@ conf. Every knob here is chosen for scale-out first, then works locally:
   that the per-task ``importlib.invalidate_caches()`` re-reads a zip on the
   worker path (``pyspark.zip``) only when it has changed. That re-read was
   170-250 ms of every Python task.
+
+Scratch storage has one owner too: ``scratch_dir`` hands out subdirectories
+of one per-process root that is removed when the process exits, as hpmr's
+containers free their storage when destroyed (src/dist_map.h).
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -80,6 +87,36 @@ def session_builder(
     if event_log_dir is not None:
         b = b.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", event_log_dir)
     return b
+
+
+_scratch_root: str | None = None
+_scratch_keyed: dict = {}
+
+
+def _remove_scratch_root(root: str, pid: int) -> None:
+    # a forked child inherits this handler; only the creating process owns
+    # the root
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(prefix: str, key=None) -> str:
+    """A directory under this process's scratch root (``hpmr_<pid>_*`` in
+    the system temp dir, made on first use and removed at exit).
+
+    ``key=None`` makes a fresh directory on every call: checkpoints and
+    outputs a rebuild must not see are written there. With a key the same
+    directory comes back for the whole process, for outputs that a rebuild
+    overwrites with the same content."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix=f"hpmr_{os.getpid()}_")
+        atexit.register(_remove_scratch_root, _scratch_root, os.getpid())
+    if key is None:
+        return tempfile.mkdtemp(prefix=f"{prefix}_", dir=_scratch_root)
+    if (prefix, key) not in _scratch_keyed:
+        _scratch_keyed[prefix, key] = tempfile.mkdtemp(prefix=f"{prefix}_", dir=_scratch_root)
+    return _scratch_keyed[prefix, key]
 
 
 def get_spark(app_name: str = "hpmr-spark", **kwargs) -> SparkSession:

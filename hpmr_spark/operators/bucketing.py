@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hpmr_spark.engine import scratch_dir
 from hpmr_spark.sources.tables import load_table
 
 N_BUCKETS = 8
@@ -30,7 +31,6 @@ def _writable_table_base(spark: SparkSession) -> str | None:
     live session — but `.option("path", ...)` per table can, which is the
     read-only-cwd escape hatch."""
     import os
-    import tempfile
 
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     try:
@@ -41,7 +41,7 @@ def _writable_table_base(spark: SparkSession) -> str | None:
         os.remove(probe)
         return None
     except OSError:
-        return tempfile.mkdtemp(prefix="hpmr_warehouse_")
+        return scratch_dir("warehouse")
 
 
 def prepare_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:

@@ -23,16 +23,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.functions.exprs import el_duck, el_spark
 
 _KS_UNITS = 64  # budget grid (committed)
-
-
-def _el_spark(a: str, i: str) -> str:
-    return f"element_at({a}, CAST({i} AS INT))"
-
-
-def _el_duck(a: str, i: str) -> str:
-    return f"list_extract({a}, CAST({i} AS INT))"
 
 
 def _ks_fold(engine: str, el) -> str:
@@ -87,7 +80,7 @@ def _popcount(engine: str) -> str:
 
 
 def _ks_oracle() -> str:
-    el = _el_duck
+    el = el_duck
     fold = _ks_fold("duck", el).replace("array(", "list_value(")
     pc = _popcount("duck").replace("_MVAL", f"({el('st', 'u + 66')})")
     return f"""
@@ -165,7 +158,7 @@ def knapsack_source_selection(spark, sf_dir):
             F.col("rich").alias("v"),
         )
     )
-    el = _el_spark
+    el = el_spark
     folded = items.groupBy().agg(
         F.expr(
             "aggregate(transform(array_sort(collect_list(struct(rk,"

@@ -42,20 +42,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.functions.exprs import el_duck, el_spark
 from hpmr_spark.functions.hashing import spark_sql_hash60, sql_hash60
 
 _RH_M = 2048  # committed table size (power of two, like the reference)
 _RH_KMOD = 10  # committed key subset: c_custkey % 10 = 0
 _CK_M = 2048  # cuckoo table size
 _CK_KMOD = 10
-
-
-def _el_spark(a: str, i: str) -> str:
-    return f"element_at({a}, CAST({i} AS INT))"
-
-
-def _el_duck(a: str, i: str) -> str:
-    return f"list_extract({a}, CAST({i} AS INT))"
 
 
 def _rh_fold(el) -> str:
@@ -80,7 +73,7 @@ def _rh_fold(el) -> str:
 
 def _rh_oracle() -> str:
     h = sql_hash60("'rh:' || CAST(c_custkey AS VARCHAR)")
-    fold = _rh_fold(_el_duck).replace("array(", "list_value(")
+    fold = _rh_fold(el_duck).replace("array(", "list_value(")
     return f"""
     WITH keys AS (
       SELECT DISTINCT c_custkey, {h} % {_RH_M} AS home
@@ -152,10 +145,10 @@ def robin_hood_displacement_fold(spark, sf_dir):
             "aggregate(transform(concat(hs, transform(hs,"
             f" x -> x + {_RH_M})), x -> array(x)),"
             " array(-1.0e0, 0.0e0, 0.0e0, 0.0e0, 0.0e0),"
-            f" {_rh_fold(_el_spark)})"
+            f" {_rh_fold(el_spark)})"
         ).alias("st"),
     )
-    e = _el_spark
+    e = el_spark
     return folded.select(
         F.lit(_RH_M).cast("long").alias("table_size"),
         "n_keys",

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.functions.exprs import el_duck, el_spark
 from hpmr_spark.functions.hashing import spark_sql_hash60, sql_hash60
 
 _LP_M = 2048  # committed table size (power of two, like the reference)
@@ -38,14 +39,6 @@ _LP_M = 2048  # committed table size (power of two, like the reference)
 # (ADVICE r10) and raises with a routing message instead of emitting a
 # silently-invalid census.
 _LP_KMOD = 10
-
-
-def _el_spark(a: str, i: str) -> str:
-    return f"element_at({a}, CAST({i} AS INT))"
-
-
-def _el_duck(a: str, i: str) -> str:
-    return f"list_extract({a}, CAST({i} AS INT))"
 
 
 def _lp_fold(el) -> str:
@@ -72,7 +65,7 @@ def _lp_fold(el) -> str:
 
 def _lp_oracle() -> str:
     h = sql_hash60("'lp:' || CAST(c_custkey AS VARCHAR)")
-    fold = _lp_fold(_el_duck).replace("array(", "list_value(")
+    fold = _lp_fold(el_duck).replace("array(", "list_value(")
     return f"""
     WITH keys AS (
       SELECT DISTINCT c_custkey, {h} % {_LP_M} AS home
@@ -159,10 +152,10 @@ def linear_probe_displacement_census(spark, sf_dir):
         F.expr(
             "aggregate(transform(flatten(array(cs, cs)), x -> array(x)),"
             " array(0.0e0, 0.0e0, 0.0e0, 0.0e0, 0.0e0),"
-            f" {_lp_fold(_el_spark)})"
+            f" {_lp_fold(el_spark)})"
         ).alias("st"),
     )
-    e = _el_spark
+    e = el_spark
     return folded.select(
         F.lit(_LP_M).cast("long").alias("table_size"),
         "n_keys",

@@ -26,16 +26,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.functions.exprs import el_duck, el_spark
 
 _N = 8  # market size per side (committed)
-
-
-def _el_spark(a: str, i: str) -> str:
-    return f"element_at({a}, CAST({i} AS INT))"
-
-
-def _el_duck(a: str, i: str) -> str:
-    return f"list_extract({a}, CAST({i} AS INT))"
 
 
 def _seq(engine: str, a: int, b: int) -> str:
@@ -157,7 +150,7 @@ _GS_INIT = (
 
 
 def _gs_oracle() -> str:
-    el = _el_duck
+    el = el_duck
     fold = _gs_fold("duck", el).replace("array(", "list_value(")
     prefs = _prefs_expr("duck", el)
     wrank = _wrank_expr("duck", el)
@@ -243,7 +236,7 @@ def gale_shapley_stable_match(spark, sf_dir):
             ).alias("vol")
         )
     )
-    el = _el_spark
+    el = el_spark
     arrs = volrow.select(
         "vol",
         F.expr(_prefs_expr("spark", el)).alias("prefs"),

@@ -33,19 +33,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
-
-
-def _el_spark(a: str, i: str) -> str:
-    return f"element_at({a}, CAST({i} AS INT))"
-
-
-def _el_duck(a: str, i: str) -> str:
-    return f"list_extract({a}, CAST({i} AS INT))"
-
-
-def _duck(fold_text: str) -> str:
-    """DuckDB has no array(...) constructor — swap for list_value(...)."""
-    return fold_text.replace("array(", "list_value(")
+from hpmr_spark.functions.exprs import el_duck, el_spark, to_duck
 
 
 # ------------------------------------------------------------------- Adam
@@ -96,7 +84,7 @@ _ADAM_ORACLE = f"""
              list_reduce(
                list_prepend([0.0, 0.0, 0.0, 1.0, 1.0, 0.0],
                             list([okey, g] ORDER BY okey)),
-               {_duck(_adam_fold(_el_duck))}) AS s
+               {to_duck(_adam_fold(el_duck))}) AS s
       FROM g GROUP BY o_custkey
     )
     SELECT o_custkey AS custkey,
@@ -131,10 +119,10 @@ def adam_update_fold(spark, sf_dir):
         F.expr(
             "aggregate(sort_array(collect_list(array(okey, g))),"
             " array(0.0e0, 0.0e0, 0.0e0, 1.0e0, 1.0e0, 0.0e0),"
-            f" {_adam_fold(_el_spark)})"
+            f" {_adam_fold(el_spark)})"
         ).alias("s")
     )
-    e = _el_spark
+    e = el_spark
     return folded.select(
         F.col("o_custkey").alias("custkey"),
         F.expr(f"CAST({e('s', '6')} AS BIGINT)").alias("n_steps"),
@@ -325,7 +313,7 @@ _LOG_ORACLE = f"""
              list_reduce(
                list_prepend([0.0, 0.0, 0.0, 0.0],
                             list([okey, x, y] ORDER BY okey)),
-               {_duck(_logistic_fold(_el_duck))}) AS s
+               {to_duck(_logistic_fold(el_duck))}) AS s
       FROM g GROUP BY o_custkey
     )
     SELECT o_custkey AS custkey,
@@ -360,10 +348,10 @@ def logistic_sgd_fold(spark, sf_dir):
         F.expr(
             "aggregate(sort_array(collect_list(array(okey, x, y))),"
             " array(0.0e0, 0.0e0, 0.0e0, 0.0e0),"
-            f" {_logistic_fold(_el_spark)})"
+            f" {_logistic_fold(el_spark)})"
         ).alias("s")
     )
-    e = _el_spark
+    e = el_spark
     return folded.select(
         F.col("o_custkey").alias("custkey"),
         F.expr(f"CAST({e('s', '4')} AS BIGINT)").alias("n_steps"),

@@ -22,19 +22,16 @@ extensible-connector analog on the streaming axis.
 
 from __future__ import annotations
 
-import itertools
-import tempfile
-
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register
+from hpmr_spark.engine import scratch_dir
+from hpmr_spark.streaming.windows import _run_to_table
 
 # committed generator constants (shared spirit with sources/pydatasource)
 PS_N = 2000
 PS_MULT = 2654435761
 PS_MOD = 97
-
-_ctr = itertools.count()
 
 _PS_ORACLE = f"""
     WITH gen AS (
@@ -63,8 +60,8 @@ def pystream_source_tumbling(spark, sf_dir):
     holds the full committed range deterministically.
 
     Classes are defined inside the query fn (session-less import rule);
-    the memory sink name is counter-unique and shuffle partitions are
-    pinned to 16 for the stateful run (streaming family conventions).
+    the stateful run goes through the shared memory-sink runner with a
+    fresh checkpoint dir (streaming family conventions).
     Runs the stream at build ⟹ plan_snapshot SKIP."""
     from pyspark.sql.datasource import (
         DataSource,
@@ -116,24 +113,10 @@ def pystream_source_tumbling(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("cnt"),
         F.sum("v").cast("long").alias("sval"),
     )
-    name = f"mem_pystream_{next(_ctr)}"
-    orig = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="pystream_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig)
-    return spark.table(name).select(
+    out = _run_to_table(
+        agg, "pystream", "complete", checkpoint=scratch_dir("pystream_ckpt")
+    )
+    return out.select(
         F.expr("unix_micros(win.start) div 60000000").cast("long").alias(
             "win_start_min"
         ),

@@ -18,13 +18,10 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
+from hpmr_spark.functions.exprs import cents
 from hpmr_spark.functions.littables import values_df
 
 # Money discipline: exact integer cents (see catalog.py).
-def _cents(col):
-    return F.round(col * 100).cast("long")
-
-
 @register(
     "q1_pricing_summary",
     """
@@ -49,8 +46,8 @@ def q1_pricing_summary(spark, sf_dir):
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum("l_quantity").cast("long").alias("sum_qty"),
-            F.sum(_cents(F.col("l_extendedprice"))).alias("sum_base_cents"),
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+            F.sum(cents(F.col("l_extendedprice"))).alias("sum_base_cents"),
+            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
                 "sum_disc_cents"
             ),
             F.round(F.sum("l_quantity") / F.count(F.lit(1)), 6).alias("avg_qty"),
@@ -79,7 +76,7 @@ def join_broadcast_part_revenue(spark, sf_dir):
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_brand")
         .agg(
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
                 "revenue_cents"
             ),
             F.count(F.lit(1)).alias("n_lines"),
@@ -137,7 +134,7 @@ def join_multiway_region_revenue(spark, sf_dir):
         .join(dims, F.col("o_custkey") == dims.c_custkey)
         .groupBy("r_name")
         .agg(
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
                 "revenue_cents"
             )
         )
@@ -164,7 +161,7 @@ def window_running_order_count(spark, sf_dir):
         "o_custkey",
         "o_orderkey",
         F.row_number().over(w).cast("long").alias("order_seq"),
-        F.sum(_cents(F.col("o_totalprice"))).over(w).alias("running_spend_cents"),
+        F.sum(cents(F.col("o_totalprice"))).over(w).alias("running_spend_cents"),
     )
 
 
@@ -204,7 +201,7 @@ def topk_global_orders(spark, sf_dir):
     return (
         o.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(10)
-        .select("o_orderkey", _cents(F.col("o_totalprice")).alias("totalprice_cents"))
+        .select("o_orderkey", cents(F.col("o_totalprice")).alias("totalprice_cents"))
     )
 
 

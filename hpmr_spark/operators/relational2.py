@@ -8,10 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
-
-
-def _cents(col):
-    return F.round(col * 100).cast("long")
+from hpmr_spark.functions.exprs import cents
 
 
 @register(
@@ -113,7 +110,7 @@ def window_lag_order_gap(spark, sf_dir):
 def date_trunc_monthly_revenue(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     return o.groupBy(F.date_trunc("month", "o_orderdate").alias("month")).agg(
-        F.sum(_cents(F.col("o_totalprice"))).alias("revenue_cents"),
+        F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
         F.count(F.lit(1)).alias("n_orders"),
     )
 
@@ -150,7 +147,7 @@ def q3_shipping_priority(spark, sf_dir):
         )
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
                 "revenue_cents"
             )
         )
@@ -179,7 +176,7 @@ def q6_forecast_revenue(spark, sf_dir):
         & (F.col("l_discount") >= 0.05)
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
-    ).agg(F.sum(_cents(F.col("l_extendedprice") * F.col("l_discount"))).alias("promo_cents"))
+    ).agg(F.sum(cents(F.col("l_extendedprice") * F.col("l_discount"))).alias("promo_cents"))
 
 
 @register(

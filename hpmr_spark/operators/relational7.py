@@ -22,10 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
-
-
-def _cents(col):
-    return F.round(col * 100).cast("long")
+from hpmr_spark.functions.exprs import cents
 
 
 def _ts(s: str):
@@ -79,7 +76,7 @@ def q5_local_supplier_volume(spark, sf_dir):
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
                 "revenue_cents"
             )
         )
@@ -141,7 +138,7 @@ def q7_volume_shipping(spark, sf_dir):
             F.year("l_shipdate").cast("long").alias("l_year"),
         )
         .agg(
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
                 "revenue_cents"
             )
         )
@@ -192,7 +189,7 @@ def q8_market_share(spark, sf_dir):
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("supp_nation")
     )
     r = _t(spark, sf_dir, "region").where(F.col("r_name") == "AMERICA")
-    vol = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    vol = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     nation_vol = F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0))
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -256,7 +253,7 @@ def q9_product_type_profit(spark, sf_dir):
             F.year("o_orderdate").cast("long").alias("o_year"),
         )
         .agg(
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
                 "profit_cents"
             )
         )
@@ -299,7 +296,7 @@ def q10_returned_items(spark, sf_dir):
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
                 "revenue_cents"
             )
         )
@@ -407,7 +404,7 @@ def q14_promo_revenue(spark, sf_dir):
         & (F.col("l_shipdate") < _ts("1996-10-01"))
     )
     p = _t(spark, sf_dir, "part")
-    vol = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    vol = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     promo = F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0))
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -452,7 +449,7 @@ def q15_top_supplier(spark, sf_dir):
     )
     s = _t(spark, sf_dir, "supplier")
     rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+        F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
             "total_revenue_cents"
         )
     )
@@ -535,7 +532,7 @@ def q17_small_quantity_revenue(spark, sf_dir):
             < F.col("sum_qty")
         )
         .agg(
-            F.sum(_cents(F.col("l_extendedprice"))).alias("total_cents"),
+            F.sum(cents(F.col("l_extendedprice"))).alias("total_cents"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -587,7 +584,7 @@ def q19_disjunctive_revenue(spark, sf_dir):
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .where(band)
         .agg(
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
                 "revenue_cents"
             ),
             F.count(F.lit(1)).alias("n_lines"),
@@ -670,17 +667,17 @@ def q22_global_sales_opportunity(spark, sf_dir):
     pos = (
         c.where(F.col("c_acctbal") > 0.0)
         .agg(
-            F.sum(_cents(F.col("c_acctbal"))).alias("sum_cents"),
+            F.sum(cents(F.col("c_acctbal"))).alias("sum_cents"),
             F.count(F.lit(1)).alias("cnt"),
         )
     )
     return (
         c.join(o_recent, c.c_custkey == o_recent.o_custkey, "left_anti")
         .crossJoin(F.broadcast(pos))
-        .where(_cents(F.col("c_acctbal")) * F.col("cnt") > F.col("sum_cents"))
+        .where(cents(F.col("c_acctbal")) * F.col("cnt") > F.col("sum_cents"))
         .groupBy((F.col("c_nationkey") % 5).cast("long").alias("cntrycode"))
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(_cents(F.col("c_acctbal"))).alias("totacctbal_cents"),
+            F.sum(cents(F.col("c_acctbal"))).alias("totacctbal_cents"),
         )
     )

@@ -21,10 +21,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
-
-
-def _cents(col):
-    return F.round(col * 100).cast("long")
+from hpmr_spark.functions.exprs import cents
 
 
 def _ts(s: str):
@@ -78,7 +75,7 @@ def q11_important_parts(spark, sf_dir):
     exact integer cross-multiplication (no doubles anywhere)."""
     li = _t(spark, sf_dir, "lineitem")
     pv = li.groupBy("l_partkey").agg(
-        F.sum(_cents(F.col("l_extendedprice"))).alias("val_cents")
+        F.sum(cents(F.col("l_extendedprice"))).alias("val_cents")
     )
     tot = pv.agg(F.sum("val_cents").cast("long").alias("total_cents"))
     return (
@@ -153,7 +150,7 @@ def window_moving_avg_7row(spark, sf_dir):
     the frame contents are identical across engines; the average itself is
     one final double division over exact (sum_cents, count)."""
     li = _t(spark, sf_dir, "lineitem").withColumn(
-        "cents", _cents(F.col("l_extendedprice"))
+        "cents", cents(F.col("l_extendedprice"))
     )
     w = (
         Window.partitionBy("l_suppkey")
@@ -443,7 +440,7 @@ def graph_pagerank_trade(spark, sf_dir):
         .groupBy(
             F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
         )
-        .agg(F.sum(_cents(F.col("l_extendedprice"))).alias("v"))
+        .agg(F.sum(cents(F.col("l_extendedprice"))).alias("v"))
     )
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
     edges = (

@@ -13,15 +13,12 @@ reader can prune on.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
-
-
-def _cents(col):
-    return F.round(col * 100).cast("long")
+from hpmr_spark.engine import scratch_dir
+from hpmr_spark.functions.exprs import cents
 
 
 # ---------------------------------------------------------------------------
@@ -65,7 +62,7 @@ def session_window_builtin(spark, sf_dir):
         ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(_cents(F.col("value"))).alias("value_cents"),
+            F.sum(cents(F.col("value"))).alias("value_cents"),
         )
         .select(
             "user_id",
@@ -181,7 +178,7 @@ def merge_upsert_customers(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     tgt = c.select(
-        F.col("c_custkey").alias("key"), _cents(F.col("c_acctbal")).alias("acct_cents")
+        F.col("c_custkey").alias("key"), cents(F.col("c_acctbal")).alias("acct_cents")
     )
     spend = (
         o.where(
@@ -189,7 +186,7 @@ def merge_upsert_customers(spark, sf_dir):
             & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
         )
         .groupBy(F.col("o_custkey").alias("key"))
-        .agg(F.sum(_cents(F.col("o_totalprice"))).alias("spend_cents"))
+        .agg(F.sum(cents(F.col("o_totalprice"))).alias("spend_cents"))
     )
     inserts = (
         spend.orderBy(F.desc("spend_cents"), F.asc("key"))
@@ -217,9 +214,6 @@ def merge_upsert_customers(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Partitioned parquet sink + partition-pruned read-back.
 # ---------------------------------------------------------------------------
-_part_dirs: dict = {}
-
-
 @register(
     "sink_partitioned_pruned",
     """
@@ -235,9 +229,7 @@ def sink_partitioned_pruned(spark, sf_dir):
     partition column choice IS the dominant scan optimization; the read-back
     equality against the unpartitioned source is the correctness check."""
     docs = _t(spark, sf_dir, "documents")
-    if sf_dir not in _part_dirs:
-        _part_dirs[sf_dir] = tempfile.mkdtemp(prefix="hpmr_part_sink_")
-    path = os.path.join(_part_dirs[sf_dir], "docs")
+    path = os.path.join(scratch_dir("part_sink", key=sf_dir), "docs")
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
     rd = spark.read.parquet(path).where(F.col("lang") == "en")
     return rd.groupBy("source").agg(
@@ -272,7 +264,7 @@ def window_value_functions(spark, sf_dir):
     from pyspark.sql import Window
 
     o = _t(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    oc = cents(F.col("o_totalprice"))
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -283,9 +275,9 @@ def window_value_functions(spark, sf_dir):
     return o.select(
         "o_orderkey",
         "o_custkey",
-        F.first_value(cents).over(w).cast("long").alias("first_cents"),
-        F.nth_value(cents, 2).over(w).cast("long").alias("second_cents"),
-        F.lead(cents).over(wl).cast("long").alias("next_cents"),
+        F.first_value(oc).over(w).cast("long").alias("first_cents"),
+        F.nth_value(oc, 2).over(w).cast("long").alias("second_cents"),
+        F.lead(oc).over(wl).cast("long").alias("next_cents"),
     )
 
 
@@ -317,7 +309,7 @@ def ordered_export_january(spark, sf_dir):
             "l_orderkey",
             "l_linenumber",
             "l_shipdate",
-            _cents(F.col("l_extendedprice")).alias("price_cents"),
+            cents(F.col("l_extendedprice")).alias("price_cents"),
         )
         .orderBy("l_shipdate", "l_orderkey", "l_linenumber", "price_cents")
     )

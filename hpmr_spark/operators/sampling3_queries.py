@@ -16,17 +16,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.functions.exprs import el_duck, el_spark
 from hpmr_spark.functions.hashing import spark_sql_hash60, sql_hash60
 
 _RSV_K = 5  # reservoir slots (committed)
-
-
-def _el_spark(a: str, i: str) -> str:
-    return f"element_at({a}, CAST({i} AS INT))"
-
-
-def _el_duck(a: str, i: str) -> str:
-    return f"list_extract({a}, CAST({i} AS INT))"
 
 
 def _rsv_fold(el) -> str:
@@ -51,7 +44,7 @@ def _rsv_fold(el) -> str:
 def _rsv_oracle() -> str:
     h = sql_hash60("'rsv:' || CAST(doc_id AS VARCHAR)")
     init = "[" + ", ".join(["-1.0"] * _RSV_K) + ", 0.0]"
-    fold = _rsv_fold(_el_duck).replace("array(", "list_value(")
+    fold = _rsv_fold(el_duck).replace("array(", "list_value(")
     exts = ", ".join(
         f"CAST(list_extract(s, {i}) AS BIGINT) AS slot{i}"
         for i in range(1, _RSV_K + 1)
@@ -97,16 +90,16 @@ def reservoir_sample_fold(spark, sf_dir):
     folded = g.groupBy("lang").agg(
         F.expr(
             f"aggregate(sort_array(collect_list(array(did, h))), {init},"
-            f" {_rsv_fold(_el_spark)})"
+            f" {_rsv_fold(el_spark)})"
         ).alias("s")
     )
     cols = [
-        F.expr(f"CAST({_el_spark('s', str(i))} AS BIGINT)").alias(f"slot{i}")
+        F.expr(f"CAST({el_spark('s', str(i))} AS BIGINT)").alias(f"slot{i}")
         for i in range(1, _RSV_K + 1)
     ]
     return folded.select(
         "lang",
-        F.expr(f"CAST({_el_spark('s', str(_RSV_K + 1))} AS BIGINT)").alias(
+        F.expr(f"CAST({el_spark('s', str(_RSV_K + 1))} AS BIGINT)").alias(
             "n_seen"
         ),
         *cols,

@@ -30,21 +30,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.functions.exprs import el_duck, el_spark, to_duck
 from hpmr_spark.functions.hashing import spark_sql_hash60, sql_hash60
 from hpmr_spark.sources.tables import load_events
-
-
-def _el_spark(a: str, i: str) -> str:
-    return f"element_at({a}, CAST({i} AS INT))"
-
-
-def _el_duck(a: str, i: str) -> str:
-    return f"list_extract({a}, CAST({i} AS INT))"
-
-
-def _duck(fold_text: str) -> str:
-    """DuckDB has no array(...) constructor — swap for list_value(...)."""
-    return fold_text.replace("array(", "list_value(")
 
 
 # ------------------------------------------------------------------ Kalman
@@ -85,7 +73,7 @@ _KAL_ORACLE = f"""
       SELECT list_reduce(
                list_prepend([0.0, 0.0, 0.0, 0.0, 0.0],
                             list([day, z] ORDER BY day)),
-               {_duck(_kalman_fold(_el_duck))}) AS s
+               {to_duck(_kalman_fold(el_duck))}) AS s
       FROM daily
     )
     SELECT CAST(list_extract(s, 5) AS BIGINT) AS n_days,
@@ -123,21 +111,21 @@ def kalman_1d_level_filter(spark, sf_dir):
         F.expr(
             "aggregate(sort_array(collect_list(array(day, z))),"
             " array(0.0e0, 0.0e0, 0.0e0, 0.0e0, 0.0e0),"
-            f" {_kalman_fold(_el_spark)})"
+            f" {_kalman_fold(el_spark)})"
         ).alias("s")
     )
     return s.select(
-        F.expr(f"CAST({_el_spark('s', '5')} AS BIGINT)").alias("n_days"),
-        F.expr(f"CAST(FLOOR({_el_spark('s', '1')}) AS BIGINT)").alias(
+        F.expr(f"CAST({el_spark('s', '5')} AS BIGINT)").alias("n_days"),
+        F.expr(f"CAST(FLOOR({el_spark('s', '1')}) AS BIGINT)").alias(
             "level_cents"
         ),
         F.expr(
-            f"CAST(FLOOR({_el_spark('s', '2')} / 1000000.0e0) AS BIGINT)"
+            f"CAST(FLOOR({el_spark('s', '2')} / 1000000.0e0) AS BIGINT)"
         ).alias("variance_scaled"),
-        F.expr(f"CAST(FLOOR({_el_spark('s', '3')}) AS BIGINT)").alias(
+        F.expr(f"CAST(FLOOR({el_spark('s', '3')}) AS BIGINT)").alias(
             "max_innov_cents"
         ),
-        F.expr(f"CAST({_el_spark('s', '4')} AS BIGINT)").alias(
+        F.expr(f"CAST({el_spark('s', '4')} AS BIGINT)").alias(
             "max_innov_day"
         ),
     )
@@ -178,7 +166,7 @@ _HMM_ORACLE = f"""
              list_reduce(
                list_prepend([0.5, 0.5, 0.0],
                             list([code] ORDER BY ts, event_id)),
-               {_duck(_hmm_fold(_el_duck))}) AS s
+               {to_duck(_hmm_fold(el_duck))}) AS s
       FROM ev GROUP BY user_id
     )
     SELECT user_id, CAST(n_events AS BIGINT) AS n_events,
@@ -207,14 +195,14 @@ def hmm_forward_loglik(spark, sf_dir):
             "aggregate(transform(sort_array(collect_list("
             "struct(ts, event_id, code))), p -> array(p.code)),"
             " array(0.5e0, 0.5e0, 0.0e0),"
-            f" {_hmm_fold(_el_spark)})"
+            f" {_hmm_fold(el_spark)})"
         ).alias("s"),
     )
     return seqs.select(
         "user_id",
         "n_events",
         F.expr(
-            f"CAST(FLOOR({_el_spark('s', '3')} * 1000000000.0e0) AS BIGINT)"
+            f"CAST(FLOOR({el_spark('s', '3')} * 1000000000.0e0) AS BIGINT)"
         ).alias("loglik_nano"),
     )
 
@@ -252,7 +240,7 @@ _CROSTON_ORACLE = f"""
              list_reduce(
                list_prepend([0.0, 0.0, 0.0, 0.0],
                             list([day, q] ORDER BY day)),
-               {_duck(_croston_fold(_el_duck))}) AS s
+               {to_duck(_croston_fold(el_duck))}) AS s
       FROM demand GROUP BY l_partkey
     )
     SELECT l_partkey,
@@ -296,22 +284,22 @@ def croston_intermittent_forecast(spark, sf_dir):
         F.expr(
             "aggregate(sort_array(collect_list(array(day, q))),"
             " array(0.0e0, 0.0e0, 0.0e0, 0.0e0),"
-            f" {_croston_fold(_el_spark)})"
+            f" {_croston_fold(el_spark)})"
         ).alias("s")
     )
     return folded.select(
         "l_partkey",
-        F.expr(f"CAST({_el_spark('s', '4')} AS BIGINT)").alias(
+        F.expr(f"CAST({el_spark('s', '4')} AS BIGINT)").alias(
             "n_demand_days"
         ),
         F.expr(
-            f"CAST(FLOOR({_el_spark('s', '1')} * 1000.0e0) AS BIGINT)"
+            f"CAST(FLOOR({el_spark('s', '1')} * 1000.0e0) AS BIGINT)"
         ).alias("size_milli"),
         F.expr(
-            f"CAST(FLOOR({_el_spark('s', '2')} * 1000.0e0) AS BIGINT)"
+            f"CAST(FLOOR({el_spark('s', '2')} * 1000.0e0) AS BIGINT)"
         ).alias("interval_milli"),
         F.expr(
-            f"CAST(FLOOR({_el_spark('s', '1')} / {_el_spark('s', '2')}"
+            f"CAST(FLOOR({el_spark('s', '1')} / {el_spark('s', '2')}"
             " * 1000.0e0) AS BIGINT)"
         ).alias("forecast_milli"),
     )
@@ -336,7 +324,7 @@ def _elo_fold(el) -> str:
 
 
 def _elo_fold_duck() -> str:
-    return _elo_fold(_el_duck).replace(
+    return _elo_fold(el_duck).replace(
         "transform(sequence(1, 25), i ->", "list_transform(range(1, 26), i ->"
     )
 
@@ -461,7 +449,7 @@ def elo_online_ratings(spark, sf_dir):
             " CAST(na AS DOUBLE), CAST(nb AS DOUBLE),"
             " CAST(sa2 AS DOUBLE)))),"
             " transform(sequence(1, 25), i -> 1500.0e0),"
-            f" {_elo_fold(_el_spark)})"
+            f" {_elo_fold(el_spark)})"
         ).alias("s"),
         F.count(F.lit(1)).cast("long").alias("n_matches"),
     )
@@ -472,7 +460,7 @@ def elo_online_ratings(spark, sf_dir):
     ).select(
         F.col("nationkey").cast("long").alias("nationkey"),
         F.expr(
-            f"CAST(FLOOR({_el_spark('s', 'nationkey + 1')} * 1000.0e0)"
+            f"CAST(FLOOR({el_spark('s', 'nationkey + 1')} * 1000.0e0)"
             " AS BIGINT)"
         ).alias("rating_milli"),
         "n_matches",

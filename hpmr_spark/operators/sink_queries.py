@@ -84,12 +84,12 @@ def sink_dynamic_partition_overwrite(spark, sf_dir):
     else is intact. At 100 TB this is how a single bad day/source is
     recomputed in place."""
     import os
-    import tempfile
 
+    from hpmr_spark.engine import scratch_dir
     from hpmr_spark.sources.tables import load_events
 
     ev = load_events(spark, sf_dir).select("event_id", "event_type", "value")
-    d = tempfile.mkdtemp(prefix="hpmr_dynpart_")
+    d = scratch_dir("dynpart")
     path = os.path.join(d, "events_by_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     orig = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")

@@ -10,20 +10,12 @@ and partition-directory pruning.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import scratch_dir
 from hpmr_spark.sources.tables import load_events
-
-_dirs: dict = {}
-
-
-def _tmpdir(key: str) -> str:
-    if key not in _dirs:
-        _dirs[key] = tempfile.mkdtemp(prefix=f"hpmr_src_{key}_")
-    return _dirs[key]
 
 
 # ---------------------------------------------------------------------------
@@ -49,8 +41,7 @@ def source_binaryfile_fingerprints(spark, sf_dir):
     table, proving the write→binaryFile-read cycle is lossless. At 100 TB
     the same plan points at an object-store prefix of image/audio blobs;
     content stays on executors throughout."""
-    key = f"binfp_{os.path.basename(str(sf_dir).rstrip('/'))}"
-    out = os.path.join(_tmpdir(key), "payloads")
+    out = os.path.join(scratch_dir("binfp", key=sf_dir), "payloads")
     os.makedirs(out, exist_ok=True)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
 
@@ -97,8 +88,7 @@ def partition_pruning_proof(spark, sf_dir):
     same layout by tests/test_sources2.py, which inspects the FileScan
     node. Together they are the layout contract of a 100 TB
     type/time-partitioned lake."""
-    key = f"prune_{os.path.basename(str(sf_dir).rstrip('/'))}"
-    out = os.path.join(_tmpdir(key), "events_by_type")
+    out = os.path.join(scratch_dir("prune", key=sf_dir), "events_by_type")
     ev = load_events(spark, sf_dir).select("event_id", "user_id", "event_type")
     ev.coalesce(1).write.mode("overwrite").partitionBy("event_type").parquet(out)
     filtered = spark.read.parquet(out).where(F.col("event_type") == "purchase")
@@ -136,8 +126,7 @@ def dpp_join_pruned_counts(spark, sf_dir):
     turns a date-dim filter into a fact-partition skip without
     hand-written predicates. Result is the joined per-type count,
     oracle-pinned."""
-    key = f"dpp_{os.path.basename(str(sf_dir).rstrip('/'))}"
-    out = os.path.join(_tmpdir(key), "events_by_type_dpp")
+    out = os.path.join(scratch_dir("dpp", key=sf_dir), "events_by_type_dpp")
     marker = os.path.join(out, "_SUCCESS")
     if not os.path.exists(marker):
         ev = load_events(spark, sf_dir).select("event_id", "user_id", "event_type")

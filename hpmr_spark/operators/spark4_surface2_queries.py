@@ -11,7 +11,7 @@ variables, VARIANT, UDTF, collation):
   hash-matches.
 - streaming_statestore_read: the State Store Data Source (Spark 4 /
   SPARK-45511, `spark.read.format("statestore")`): run a stateful
-  aggregation stream (AvailableNow, checkpointed to a session temp dir)
+  aggregation stream (AvailableNow, checkpointed to a scratch dir)
   and then read the resulting state store AS A DATAFRAME — the
   state-inspection / debugging surface. After AvailableNow drains the
   full input, the state equals the batch aggregate, so the state read is
@@ -90,29 +90,16 @@ def streaming_statestore_read(spark, sf_dir):
     (AvailableNow), then read its STATE STORE back as a DataFrame via
     the Spark 4 statestore source — the state-inspection surface. State
     after a drained AvailableNow run equals the batch aggregate, which
-    is the oracle. Streaming conventions: 16 pinned shuffle partitions
-    for the stateful run (partition-count invariant), unique memory-sink
-    name per call, fresh checkpoint temp dir (double-build safe)."""
-    import tempfile
+    is the oracle. The stream runs through the shared memory-sink runner
+    (partition-count invariant) with a fresh checkpoint dir per call
+    (double-build safe)."""
+    from hpmr_spark.engine import scratch_dir
+    from hpmr_spark.streaming.windows import _events_stream, _run_to_table
 
-    ev = _events_stream_local(spark, sf_dir)
+    ev = _events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    cp = tempfile.mkdtemp(prefix="hpmr_statestore_cp_")
-    name = f"mem_ssread_{next(_ctr)}"
-    orig = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig)
+    cp = scratch_dir("statestore_cp")
+    _run_to_table(agg, "ssread", "update", checkpoint=cp)
     st = spark.read.format("statestore").load(cp)
     # the state value struct carries the PHYSICAL aggregate name
     # ("count"), not the query alias — schema probed live
@@ -120,12 +107,3 @@ def streaming_statestore_read(spark, sf_dir):
         F.col("key.event_type").alias("event_type"),
         F.col("value.count").cast("long").alias("n_events_state"),
     )
-
-
-def _events_stream_local(spark, sf_dir):
-    """The streaming/windows.py events-stream helper (symlinked dir +
-    nanos/NTZ adaptation), reused without importing its module-level
-    memory-table counter."""
-    from hpmr_spark.streaming.windows import _events_stream
-
-    return _events_stream(spark, sf_dir)

@@ -10,9 +10,12 @@ same results as the classic planner."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
+from hpmr_spark.engine import scratch_dir
 from hpmr_spark.sources.pydatasource import (
     SEQ_MOD,
     SEQ_MULT,
@@ -125,14 +128,10 @@ def pydatasource_sink_roundtrip(spark, sf_dir):
     the custom sink fails the value hash. At scale the same writer surface
     wraps any internal service; shard-per-partition is the parallelism
     contract."""
-    import shutil
-    import tempfile
-
     from hpmr_spark.sources.pydatasource import register_jsonlines_sink
 
     register_jsonlines_sink(spark)
-    d = tempfile.mkdtemp(prefix="hpmr_jsonl_")
-    shutil.rmtree(d, ignore_errors=True)
+    d = os.path.join(scratch_dir("jsonl"), "out")
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",

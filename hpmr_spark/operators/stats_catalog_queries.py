@@ -13,7 +13,6 @@ variant lives in sketch_bounded_checks)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
@@ -143,44 +142,6 @@ def column_stats_orders(spark, sf_dir):
 
     return one("o_orderpriority").unionAll(one("o_orderstatus")).unionAll(
         one("o_custkey")
-    )
-
-
-@register(
-    "k_anonymity_audit",
-    """
-    WITH g AS (
-      SELECT c_mktsegment, c_nationkey, CAST(COUNT(*) AS BIGINT) AS grp_n
-      FROM customer GROUP BY c_mktsegment, c_nationkey
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
-           CAST(SUM(CASE WHEN grp_n < 5 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_small_groups,
-           CAST(SUM(CASE WHEN grp_n < 5 THEN grp_n ELSE 0 END) AS BIGINT)
-             AS n_suppressed_rows,
-           CAST(MIN(grp_n) AS BIGINT) AS min_k
-    FROM g
-    """,
-)
-def k_anonymity_audit(spark, sf_dir):
-    """Privacy audit before a data release: group sizes over the
-    quasi-identifier pair (segment, nation); groups under k=5 would be
-    suppressed or generalized. Reports group count, how many fall below k,
-    how many rows suppression would cost, and the worst-case k — the
-    numbers a release gate checks. One groupBy on the quasi-identifier key
-    then a metadata-sized rollup; at 100 TB the first agg is the only
-    data-sized stage."""
-    c = _t(spark, sf_dir, "customer")
-    g = c.groupBy("c_mktsegment", "c_nationkey").agg(
-        F.count(F.lit(1)).alias("grp_n")
-    )
-    return g.agg(
-        F.count(F.lit(1)).alias("n_groups"),
-        F.sum(F.when(F.col("grp_n") < 5, 1).otherwise(0)).alias("n_small_groups"),
-        F.sum(F.when(F.col("grp_n") < 5, F.col("grp_n")).otherwise(0)).alias(
-            "n_suppressed_rows"
-        ),
-        F.min("grp_n").alias("min_k"),
     )
 
 

@@ -12,10 +12,13 @@ discipline); layout decisions are integer floor division."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
+from hpmr_spark.engine import scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -380,9 +383,6 @@ def ivm_checkpoint_resume(spark, sf_dir):
     split. At 100 TB this is the nightly pattern: history partials are
     metadata-sized (groups, not rows), and only the delta touches new
     data."""
-    import os
-    import tempfile
-
     o = _t(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     cutoff = F.lit("1997-01-01").cast("date")
@@ -393,7 +393,7 @@ def ivm_checkpoint_resume(spark, sf_dir):
             F.sum(cents).alias("total_cents"),
         )
 
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="hpmr_ivm_"), "history_partials")
+    ckpt = os.path.join(scratch_dir("ivm"), "history_partials")
     partial(o.where(F.col("o_orderdate") < cutoff)).write.mode("overwrite").parquet(
         ckpt
     )
@@ -434,9 +434,6 @@ def ivm_join_delta_merge(spark, sf_dir):
     equality. At 100 TB: the delta join broadcasts the dims exactly like
     the full join, history state is group-sized metadata, and no historical
     fact row is ever re-read."""
-    import os
-    import tempfile
-
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
@@ -458,7 +455,7 @@ def ivm_join_delta_merge(spark, sf_dir):
             )
         )
 
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="hpmr_ivmj_"), "history_join")
+    ckpt = os.path.join(scratch_dir("ivmj"), "history_join")
     partial(o.where(F.col("o_orderdate") < cutoff)).write.mode("overwrite").parquet(
         ckpt
     )

@@ -18,20 +18,12 @@ stream-side build-filter pattern) and schema-on-read corruption handling
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import scratch_dir
 from hpmr_spark.operators.scale_sketch_queries import _bloom_pos_col, _bloom_pos_sql
-
-_dirs: dict = {}
-
-
-def _tmp(key: str) -> str:
-    if key not in _dirs:
-        _dirs[key] = tempfile.mkdtemp(prefix=f"hpmr_ss2_{key}_")
-    return _dirs[key]
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +60,7 @@ def streaming_bloom_prune_counts(spark, sf_dir):
     the batch SQL twin exactly, false positives included. Complete-mode
     memory sink; the stream is the orders parquet symlinked into a
     directory (the repo's file-stream convention)."""
-    from hpmr_spark.streaming.windows import _run_to_table
+    from hpmr_spark.streaming.windows import _run_to_table, _symlink_dir
 
     cust = _t(spark, sf_dir, "customer")
     build = cust.where(F.col("c_acctbal") < -900).select("c_custkey")
@@ -87,11 +79,7 @@ def streaming_bloom_prune_counts(spark, sf_dir):
         else F.array(F.lit(-1).cast("long"))
     )
 
-    key = f"ostream_{os.path.basename(str(sf_dir).rstrip('/'))}"
-    d = _tmp(key)
-    link = os.path.join(d, "orders.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(str(sf_dir), "orders.parquet"), link)
+    d = _symlink_dir("orders_stream", os.path.join(str(sf_dir), "orders.parquet"))
     schema = _t(spark, sf_dir, "orders").schema
     stream = spark.readStream.schema(schema).parquet(d)
 
@@ -133,8 +121,7 @@ def source_csv_permissive_quarantine(spark, sf_dir):
     (foreachPartition), one shard per upstream partition."""
     import shutil
 
-    key = f"csvq_{os.path.basename(str(sf_dir).rstrip('/'))}"
-    out = os.path.join(_tmp(key), "lines")
+    out = os.path.join(scratch_dir("csvq", key=sf_dir), "lines")
     # rebuildable in-process: recreate the shard dir each build and name
     # shards by partition index (overwriting), so building the query twice
     # can never duplicate rows

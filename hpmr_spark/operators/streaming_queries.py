@@ -206,10 +206,9 @@ def streaming_foreachbatch_sink(spark, sf_dir):
     real deployment). Complete output mode makes every batch a full
     snapshot, so overwrite-per-batch is idempotent under retries — the
     exactly-once pattern for non-transactional sinks."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
+    from hpmr_spark.engine import scratch_dir
     from hpmr_spark.streaming.windows import _events_stream
 
     ev = _events_stream(spark, sf_dir)
@@ -217,7 +216,7 @@ def streaming_foreachbatch_sink(spark, sf_dir):
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
     )
-    path = tempfile.mkdtemp(prefix="hpmr_feb_sink_") + "/out"
+    path = scratch_dir("feb_sink") + "/out"
 
     def write_batch(batch_df, epoch_id):
         batch_df.write.mode("overwrite").parquet(path)

@@ -12,19 +12,11 @@ by construction, no table format required.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
-
-_dirs: dict = {}
-
-
-def _snapdir(key: str) -> str:
-    if key not in _dirs:
-        _dirs[key] = tempfile.mkdtemp(prefix=f"hpmr_snap_{key}_")
-    return _dirs[key]
+from hpmr_spark.engine import scratch_dir
 
 
 @register(
@@ -58,8 +50,7 @@ def sink_versioned_snapshots(spark, sf_dir):
     faithful and isolated. At 100 TB the same layout plus a manifest file
     is exactly how Iceberg/Delta snapshots work; readers of v1 never see
     v2's files."""
-    key = f"v_{os.path.basename(str(sf_dir).rstrip('/'))}"
-    base = _snapdir(key)
+    base = scratch_dir("snap", key=sf_dir)
     o = _t(spark, sf_dir, "orders")
     agg1 = (
         o.where(F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))

@@ -6,29 +6,26 @@ used for persistence/transport; the engine analog is columnar write + read
 (df.write.parquet → spark.read.parquet), which also replaces the hps wire
 format (SURVEY.md §1.4). CSV/JSON readers are free engine extensions.
 
-Roundtrips write to a session temp dir; at scale the same code targets
-object storage — partitioned writes, no driver involvement.
+Roundtrips write to a keyed scratch dir (engine.scratch_dir); at scale the
+same code targets object storage — partitioned writes, no driver
+involvement.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_rt_dirs: dict = {}
+from hpmr_spark.engine import scratch_dir
 
 
 def roundtrip(df: DataFrame, fmt: str, label: str) -> DataFrame:
     """Write df in `fmt`, read it back with the same schema — the
     serialization identity check (ref bare_map_test.cc:157-168)."""
     spark = df.sparkSession
-    key = (fmt, label)
-    if key not in _rt_dirs:
-        _rt_dirs[key] = tempfile.mkdtemp(prefix=f"hpmr_rt_{fmt}_{label}_")
-    path = os.path.join(_rt_dirs[key], "data")
+    path = os.path.join(scratch_dir(f"rt_{fmt}", key=label), "data")
     writer = df.write.mode("overwrite")
     if fmt == "csv":
         writer.option("header", "true").csv(path)

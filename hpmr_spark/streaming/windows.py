@@ -20,6 +20,7 @@ running aggregate per key.
 from __future__ import annotations
 
 import itertools
+import os
 from typing import Iterator, Tuple
 
 import numpy as np
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from hpmr_spark.engine import scratch_dir
 from hpmr_spark.sources.tables import (
     events_schema,
     events_ts,
@@ -40,24 +42,15 @@ from hpmr_spark.sources.tables import (
 _ctr = itertools.count()
 
 
-_stream_dirs: dict = {}
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the events table. The file-stream source requires a directory,
-    so the single events.parquet is symlinked into a session temp dir (zero
+    so the single events.parquet is symlinked into a scratch dir (zero
     copy). The footer schema decides how ts is read (NANOS as bigint,
     MICROS as NTZ) and ``events_ts`` turns it into a TIMESTAMP, as
     sources/tables.py:load_events does."""
-    import os
-    import tempfile
-
-    if sf_dir not in _stream_dirs:
-        d = tempfile.mkdtemp(prefix="hpmr_events_stream_")
-        os.symlink(table_path(sf_dir, "events"), os.path.join(d, "events.parquet"))
-        _stream_dirs[sf_dir] = d
+    d = _symlink_dir("events_stream", table_path(sf_dir, "events"))
     schema = events_schema(spark, sf_dir)
-    return events_ts(spark.readStream.schema(schema).parquet(_stream_dirs[sf_dir]), schema)
+    return events_ts(spark.readStream.schema(schema).parquet(d), schema)
 
 
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,16 +58,19 @@ def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     symlink trick as _events_stream). The corpus-ingest topology: new
     documents arrive as files and flow through stateless/stateful dedup
     before they reach training storage."""
-    import os
-    import tempfile
-
     path = table_path(sf_dir, "documents")
-    key = ("docs", sf_dir)
-    if key not in _stream_dirs:
-        d = tempfile.mkdtemp(prefix="hpmr_docs_stream_")
-        os.symlink(path, os.path.join(d, "documents.parquet"))
-        _stream_dirs[key] = d
-    return spark.readStream.schema(footer(path).schema).parquet(_stream_dirs[key])
+    return spark.readStream.schema(footer(path).schema).parquet(
+        _symlink_dir("docs_stream", path)
+    )
+
+
+def _symlink_dir(prefix: str, path: str) -> str:
+    """The keyed scratch dir holding one symlink to ``path``."""
+    d = scratch_dir(prefix, key=path)
+    link = os.path.join(d, os.path.basename(path))
+    if not os.path.islink(link):
+        os.symlink(path, link)
+    return d
 
 
 #: Shuffle/state partitions for the memory-sink AvailableNow runs. Each
@@ -87,20 +83,24 @@ def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: never vary it; tests/test_invariance.py runs streams of all three output
 #: modes at 1 and 8 state partitions and requires identical rows. The runs
 #: use Spark's default HDFS-backed state store: RocksDB measured slower on
-#: this family (CLAUDE.md round-15 notes). Checkpoint-coupled queries
-#: (ivm_checkpoint_resume, statestore reader) keep their own fixed pin — a
-#: resumed checkpoint must match its writer's partitioning.
+#: this family (CLAUDE.md round-15 notes). checkpoint_exactly_once keeps
+#: its own fixed pin: its second phase resumes the first phase's
+#: checkpoint, whose state partitioning it must match.
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
-def _run_to_table(stream_df: DataFrame, label: str, output_mode: str) -> DataFrame:
+def _run_to_table(
+    stream_df: DataFrame, label: str, output_mode: str, checkpoint: str | None = None
+) -> DataFrame:
     """Run an AvailableNow stream into a memory sink and return its table.
 
     Stateful operators keep one state store per shuffle partition; at the
     test corpus sizes a high partition count just multiplies state-store
     commit overhead, so the stream runs at STREAM_SHUFFLE_PARTITIONS
     (results are partition-count invariant — tests/test_invariance.py). A
-    production deployment sizes this to keyspace/executor count instead."""
+    production deployment sizes this to keyspace/executor count instead.
+    ``checkpoint`` keeps the run's offsets and state at that location (a
+    fresh ``scratch_dir``) for a caller that reads them afterwards."""
     spark = stream_df.sparkSession
     name = f"mem_{label}_{next(_ctr)}"
     orig = spark.conf.get("spark.sql.shuffle.partitions")
@@ -108,13 +108,10 @@ def _run_to_table(stream_df: DataFrame, label: str, output_mode: str) -> DataFra
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
         )
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        w = stream_df.writeStream.format("memory").queryName(name)
+        if checkpoint is not None:
+            w = w.option("checkpointLocation", checkpoint)
+        q = w.outputMode(output_mode).trigger(availableNow=True).start()
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig)
@@ -362,12 +359,10 @@ def checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACTLY |B|. Each invocation uses fresh source/checkpoint dirs (the
     memory-sink counter discipline) so double-builds stay deterministic, and
     removes them once phase 2 has finished."""
-    import os
     import shutil
-    import tempfile
 
     run = next(_ctr)
-    base = tempfile.mkdtemp(prefix=f"hpmr_ckpt_once_{run}_")
+    base = scratch_dir("ckpt_once")
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(src, exist_ok=True)

@@ -185,6 +185,8 @@ def test_partition_invariance(spark, sf_dir, name):
         "streaming_tumbling_counts",  # complete mode
         "streaming_stateful_user_totals",  # update mode
         "streaming_stream_stream_join",  # append mode
+        "pystream_source_tumbling",  # Python source, checkpointed
+        "streaming_statestore_read",  # reads the checkpoint's state back
     ],
 )
 def test_stream_state_partition_invariance(spark, sf_dir, name, monkeypatch):

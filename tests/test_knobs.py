@@ -1,5 +1,6 @@
-"""Census of the environment knobs the package reads, and a compile check
-of the command-line tools (no Spark session).
+"""Census of the environment knobs the package reads and of the modules
+that make temp dirs, and a compile check of the command-line tools (no
+Spark session).
 
 The package reads exactly the session-shape knobs that tier-1 and the
 local[4]/shuffle=7 invariance sweep set; data-path variables belong to the
@@ -20,6 +21,16 @@ def test_package_reads_only_session_knobs():
     for path in (ROOT / "hpmr_spark").rglob("*.py"):
         names.update(re.findall(r"SPARK_GRAFT_[A-Z_]+", path.read_text()))
     assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", "SPARK_GRAFT_SHUFFLE_PARTITIONS"}
+
+
+def test_only_the_scratch_owner_makes_temp_dirs():
+    # scratch paths come from engine.scratch_dir, which removes them at exit
+    users = {
+        str(path.relative_to(ROOT))
+        for path in (ROOT / "hpmr_spark").rglob("*.py")
+        if "tempfile" in path.read_text()
+    }
+    assert users == {"hpmr_spark/engine.py"}
 
 
 @pytest.mark.parametrize("name", sorted(p.name for p in (ROOT / "tools").glob("*.py")))

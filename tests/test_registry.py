@@ -49,6 +49,24 @@ def test_no_failed_query_modules():
     assert FAILED_MODULES == {}
 
 
+def test_duplicate_registration_refused():
+    # a second registration would silently replace the first, so its
+    # function and oracle would never run; all_queries imports each module
+    # under a guard, so a refusal there shows up as a failed module
+    from hpmr_spark.all_queries import FAILED_MODULES
+    from hpmr_spark.catalog import ORACLES, QUERIES, register
+
+    assert FAILED_MODULES == {}
+    assert len(QUERIES) == 615
+    register("dup_probe", "SELECT 1 AS x")(lambda spark, sf_dir: None)
+    try:
+        with pytest.raises(ValueError, match="already registered"):
+            register("dup_probe", "SELECT 2 AS x")
+    finally:
+        del QUERIES["dup_probe"], ORACLES["dup_probe"]
+    assert len(QUERIES) == 615
+
+
 def test_every_query_analyzes(spark, sf_dir, registry):
     qs, _ = registry
     failures = {}

@@ -62,7 +62,7 @@ def _lz78(words):
     return n
 
 
-def test_lz78_hand_example(spark):
+def test_lz78_hand_example(spark, tmp_path):
     # a b a b a b c a b a b -> phrases a | b | a~b | a~b~c | a~b~a | b(partial)
     from pyspark.sql import functions as F
 
@@ -70,9 +70,7 @@ def test_lz78_hand_example(spark):
 
     assert _lz78("a b a b a b c a b a b".split()) == 6
 
-    import tempfile
-
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     spark.createDataFrame(
         [(1, "a b a b a b c a b a b", "en", "s", 21)],
         ["doc_id", "text", "lang", "source", "n_chars"],

@@ -8,7 +8,6 @@ Every 5-gram extractor must route short docs through an empty-array branch.
 """
 
 import os
-import tempfile
 
 import pytest
 
@@ -23,10 +22,10 @@ FIVE_GRAM_QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def short_doc_sf_dir(spark):
+def short_doc_sf_dir(spark, tmp_path_factory):
     """A minimal sf_dir whose documents table includes <5-token docs
     (including the empty string) alongside normal ones."""
-    d = tempfile.mkdtemp(prefix="hpmr_short_docs_")
+    d = str(tmp_path_factory.mktemp("short_docs"))
     rows = [
         (1, "src0", "alpha beta gamma delta epsilon zeta eta theta"),
         (2, "src1", "alpha beta gamma delta epsilon zeta eta theta iota"),

@@ -14,11 +14,11 @@ def test_partition_filters_reach_filescan(spark, sf_dir):
     # run the query once so the partitioned layout exists
     row = QUERIES["partition_pruning_proof"](spark, sf_dir).collect()[0]
     assert row.n_source_files == 1 and row.n_rows > 0
-    from hpmr_spark.operators.sources2_queries import _tmpdir
     import os
 
-    key = f"prune_{os.path.basename(str(sf_dir).rstrip('/'))}"
-    out = os.path.join(_tmpdir(key), "events_by_type")
+    from hpmr_spark.engine import scratch_dir
+
+    out = os.path.join(scratch_dir("prune", key=sf_dir), "events_by_type")
     filtered = spark.read.parquet(out).where(F.col("event_type") == "purchase")
     plan = filtered._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan

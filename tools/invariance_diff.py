@@ -13,7 +13,7 @@ under any parallelism / partitioning. Usage:
       SPARK_GRAFT_MASTER=local[4] SPARK_GRAFT_SHUFFLE_PARTITIONS=7 \
       SPARK_GRAFT_SELFCHECK_JSON=/tmp/inv.json python tools/selfcheck.py
     python tools/invariance_diff.py /tmp/base.json /tmp/inv.json \
-      selfcheck_r7_invariance.json
+      selfcheck_r15_invariance.json
 """
 
 from __future__ import annotations
