@@ -13,11 +13,13 @@ extension queries register from their own modules.
 
 from __future__ import annotations
 
+import functools
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hpmr_spark.engine import owned_by
 from hpmr_spark.sources.tables import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -29,10 +31,16 @@ def register(name: str, oracle: str | None):
         raise ValueError(f"query {name!r} is already registered")
 
     def deco(fn):
-        QUERIES[name] = fn
+        # the query owns the frames it materializes while it is being built
+        @functools.wraps(fn)
+        def build(*args, **kwargs):
+            with owned_by(name):
+                return fn(*args, **kwargs)
+
+        QUERIES[name] = build
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return build
 
     return deco
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, FloatType, StructField, StructType
 
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.littables import _sql_lit
 from hpmr_spark.reducers import Reducer, _Reducer
 
@@ -201,8 +202,11 @@ class KeyedMap:
         """Ingest (k, v) pairs with arrival-order determinism: the iteration
         index becomes the order column, so keep/overwrite are well-defined
         (unlike the reference, where arrival order is thread/network
-        nondeterministic — SURVEY.md §2.2)."""
+        nondeterministic — SURVEY.md §2.2). No pairs give an empty map with
+        NULL-typed columns, which the first ``set_batch`` widens."""
         rows = [(k, v, i) for i, (k, v) in enumerate(pairs)]
+        if not rows:
+            return cls(spark.createDataFrame([], f"{KEY} void, {VALUE} void"))
         df = spark.createDataFrame(rows, [KEY, VALUE, ORDER])
         return cls(df, _has_order=True, _unique=False).sync(reducer)
 
@@ -468,7 +472,7 @@ class KeyedMap:
         return df.withColumn(out_col, m[F.col(key_col)])
 
     def persist(self) -> "KeyedMap":
-        self._df = self._df.persist()
+        self._df = materialize(self._df)
         return self
 
     def checkpoint(self) -> "KeyedMap":

@@ -27,7 +27,12 @@ class KeyedSet:
 
     @classmethod
     def from_keys(cls, spark: SparkSession, keys: Iterable) -> "KeyedSet":
-        df = spark.createDataFrame([(k,) for k in keys], [KEY])
+        """No keys give an empty set with a NULL-typed column, which the
+        first ``add_batch`` widens."""
+        rows = [(k,) for k in keys]
+        if not rows:
+            return cls(spark.createDataFrame([], f"{KEY} void"))
+        df = spark.createDataFrame(rows, [KEY])
         return cls(df.distinct())
 
     def add_batch(self, df: DataFrame, key_col: str) -> "KeyedSet":

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hpmr_spark.dedup.shingles import shingle_sets
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import N_PERM
 
 #: Committed bound for size-aware join dispatch (VERDICT r7 item 2). The
@@ -143,7 +144,7 @@ def minhash_dedup_pairs(
         # a blanket full-corpus shuffle of raw text would be pure waste.
         par = docs.sparkSession.sparkContext.defaultParallelism
         docs = docs.repartition(par, "doc_id")
-    sh = shingle_sets(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(shingle_sets(docs), StorageLevel.MEMORY_AND_DISK)
     signatures = signatures_from_shingles(sh, n_perm=n_perm)
     cands = lsh_candidate_pairs(signatures, bands, rows, n_docs=n_docs)
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.dedup.shingles import shingle_sets
+from hpmr_spark.engine import materialize
 
 
 def ngram_jaccard_pairs(
@@ -46,7 +47,7 @@ def ngram_jaccard_pairs(
 
     sh = shingle_sets(docs)
     if prefix_filter:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+        sh = materialize(sh, StorageLevel.MEMORY_AND_DISK)
     sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
     inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
     if df_cap is not None:
@@ -134,7 +135,7 @@ def containment_pairs(docs: DataFrame, threshold_pct: int = 70) -> DataFrame:
     df·prefix_df, linear-ish on common-vocabulary corpora."""
     from pyspark import StorageLevel
 
-    sh = shingle_sets(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(shingle_sets(docs), StorageLevel.MEMORY_AND_DISK)
     sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
     inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
     freq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))

@@ -20,17 +20,23 @@ conf. Every knob here is chosen for scale-out first, then works locally:
 
 Scratch storage has one owner too: ``scratch_dir`` hands out subdirectories
 of one per-process root that is removed when the process exits, as hpmr's
-containers free their storage when destroyed (src/dist_map.h).
+containers free their storage when destroyed (src/dist_map.h). Cached frames
+have one as well: ``materialize`` persists a frame under the registered query
+being built, so one query's cache entry is never read by another.
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
+import contextvars
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -117,6 +123,39 @@ def scratch_dir(prefix: str, key=None) -> str:
     if (prefix, key) not in _scratch_keyed:
         _scratch_keyed[prefix, key] = tempfile.mkdtemp(prefix=f"{prefix}_", dir=_scratch_root)
     return _scratch_keyed[prefix, key]
+
+
+_owner: contextvars.ContextVar[str | None] = contextvars.ContextVar("hpmr_owner", default=None)
+_OWNER_COL = "_hpmr_owner"
+
+
+@contextlib.contextmanager
+def owned_by(name: str):
+    """Make ``name`` the owner of the frames ``materialize`` persists inside
+    the block; a nested block keeps the outermost owner."""
+    token = _owner.set(_owner.get() or name)
+    try:
+        yield
+    finally:
+        _owner.reset(token)
+
+
+def materialize(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> DataFrame:
+    """``df.persist(level)``, keyed to the owner set by ``owned_by``.
+
+    The CacheManager hands a cached entry to every later plan that is
+    canonically equal to it. Inside an owned block the owner's name is added
+    as a literal column and dropped again before the persist, so frames that
+    different queries build never share an entry, while a rebuild of the
+    same query reads its own. The optimizer prunes the column: the executed
+    plan is the unmarked one. Outside an owned block this is a plain
+    persist."""
+    owner = _owner.get()
+    if owner is not None:
+        df = df.withColumn(_OWNER_COL, F.lit(owner)).drop(_OWNER_COL)
+    return df.persist(level)
 
 
 def get_spark(app_name: str = "hpmr-spark", **kwargs) -> SparkSession:

@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.sources.tables import load_events
 
 # ---------------------------------------------------------------------------
@@ -295,21 +296,15 @@ def median_absolute_deviation(spark, sf_dir):
     coalesces the cached layout so the old 4x tiny-partition persist
     regression no longer applies. Locally neutral (probed A/B/C all
     ~3-4 s warm within contention noise — /tmp probes, OPTIMIZATION_r11.md);
-    at 100 TB it removes ~3 redundant row-scale scan+agg re-executions
-    (plan_snapshot SKIP — persisted frame)."""
+    at 100 TB it removes ~3 redundant row-scale scan+agg re-executions."""
     from pyspark import StorageLevel
 
     from hpmr_spark.functions.ranking import global_running
 
     o = _t(spark, sf_dir, "orders")
     c = o.select(F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-    d = c.groupBy("cents").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        # plan-uniqueness dummy (persisted below — cache-aliasing rule:
-        # other queries build cents histograms over the same scan)
-        F.max(F.lit(0)).alias("_uq_mad"),
-    ).drop("_uq_mad")
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
+    d = c.groupBy("cents").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    d = materialize(d, StorageLevel.MEMORY_AND_DISK)
     t = d.agg(F.sum("cnt").cast("long").alias("n"))
 
     def rank_select(hist, col):
@@ -487,8 +482,8 @@ def rfm_user_scores(spark, sf_dir):
     )
     # multi-consumer post-agg frame (fused bounds agg + windows + totals +
     # the n count): persist, or every consumer re-derives the events
-    # aggregation (CLAUDE.md persist rule; query is in plan_snapshot SKIP)
-    m = m.persist()
+    # aggregation (CLAUDE.md persist rule)
+    m = materialize(m)
     t = m.agg(F.count(F.lit(1)).alias("n"))
     r = global_row_numbers(
         m,
@@ -544,15 +539,12 @@ def pareto_revenue_concentration(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     # multi-consumer post-agg frame (total + ranked subtree feed three
     # consumers): persist, or each re-derives the per-customer aggregation
-    # (CLAUDE.md persist rule; query is in plan_snapshot SKIP). The extra
-    # _nrows column makes this plan NON-identical to the _wealth frame
-    # gini/lorenz build — CacheManager matches canonical plans, and a
-    # cached twin would silently rewrite the SIBLING queries' plans
-    # (observed: gini +1 shuffle once pareto materialized).
-    r = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
-        F.count(F.lit(1)).alias("_nrows"),
-    ).drop("_nrows").persist()
+    # (CLAUDE.md persist rule).
+    r = materialize(
+        o.groupBy("o_custkey").agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+        )
+    )
     t = r.agg(
         F.count(F.lit(1)).alias("n_cust"), F.sum("cents").alias("total")
     )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.sources.tables import load_events
 
 # ---------------------------------------------------------------------------
@@ -295,16 +296,10 @@ def markov_stationary_power(spark, sf_dir):
     tr = (
         e.join(b, (F.col("user_id") == F.col("u2")) & (F.col("rn") == F.col("rn2")))
         .groupBy(F.col("event_type").alias("s1"), F.col("s2"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cij"),
-            F.max(F.lit(10)).alias("_uq_msp"),
-        )
-        .drop("_uq_msp")
+        .agg(F.count(F.lit(1)).cast("long").alias("cij"))
     )
     rowc = tr.groupBy("s1").agg(F.sum("cij").cast("long").alias("ci"))
-    full = tr.join(rowc, "s1").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )  # 8 iterations
+    full = materialize(tr.join(rowc, "s1"), StorageLevel.MEMORY_AND_DISK)  # 8 iterations
     pi = rowc.select(F.col("s1").alias("state"), F.lit(200000).cast("long").alias("pi"))
     for _ in range(_MSP_ITER):
         pi = (

@@ -25,6 +25,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.ranking import global_order_multi
 
 _DAY_SQL = """
@@ -94,16 +95,14 @@ def binseg_changepoints_revenue(spark, sf_dir):
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
             .cast("long")
             .alias("cents"),
-            F.max(F.lit(0)).alias("_uq_binseg"),
         )
-        .drop("_uq_binseg")
     )
-    e = global_order_multi(
+    e = materialize(global_order_multi(
         day.select("d", "cents"),
         ["d"],
         rn_out="rn",
         running=[("cents", "sum", False, "p")],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ), StorageLevel.MEMORY_AND_DISK)
     tot = e.agg(
         F.max("rn").cast("long").alias("n"),
         F.max(F.expr("CAST(p AS DECIMAL(38,0))")).alias("s"),
@@ -126,14 +125,14 @@ def binseg_changepoints_revenue(spark, sf_dir):
         )
 
     e1 = e.crossJoin(F.broadcast(tot)).where(F.col("rn") < F.col("n"))
-    s1 = argmax(
+    s1 = materialize(argmax(
         e1, f"ABS(n * {big('p')} - rn * s)", ["d", "p"]
     ).select(
         F.col("t").alias("t1"),
         F.col("g").alias("g1"),
         F.col("d").alias("d1"),
         F.expr(f"{big('p')}").alias("p1"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ), StorageLevel.MEMORY_AND_DISK)
     left = e.crossJoin(F.broadcast(s1)).where(F.col("rn") < F.col("t1"))
     s2a = argmax(left, f"ABS(t1 * {big('p')} - rn * p1)", ["d"])
     right = (

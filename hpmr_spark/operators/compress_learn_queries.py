@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 # ------------------------------------------------------------ Huffman
 
@@ -431,7 +432,7 @@ def assortativity_degree_trade(spark, sf_dir):
             .alias("v")
         )
     )
-    pe = pe.persist()
+    pe = materialize(pe)
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
     und = (
         pe.crossJoin(F.broadcast(tot))
@@ -440,9 +441,9 @@ def assortativity_degree_trade(spark, sf_dir):
                 F.greatest("src", "dst").alias("w"))
         .distinct()
     )
-    sym = und.select(F.col("u").alias("a"), F.col("w").alias("b")).unionAll(
+    sym = materialize(und.select(F.col("u").alias("a"), F.col("w").alias("b")).unionAll(
         und.select(F.col("w").alias("a"), F.col("u").alias("b"))
-    ).persist()
+    ))
     deg = sym.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )

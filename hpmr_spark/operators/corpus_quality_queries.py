@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
+from hpmr_spark.engine import materialize
 
 
 # ---------------------------------------------------------------------------
@@ -77,7 +78,7 @@ def doc_lm_score_ppm(spark, sf_dir):
             )
         ).alias("p"),
     ).select("doc_id", "p.w1", "p.w2")
-    pairs = pairs.persist()
+    pairs = materialize(pairs)
     c = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n"))
     lm = c.withColumn(
         "p_ppm", F.expr("n * 1000000 div sum(n) over (partition by w1)")

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 
 # ---------------------------------------------------------------------------
@@ -96,14 +97,14 @@ def triplet_violation_rate(spark, sf_dir):
     from hpmr_spark.functions.ranking import bounded_rank
 
     emb = _t(spark, sf_dir, "embeddings")
-    v = emb.select(
+    v = materialize(emb.select(
         "vec_id",
         "label",
         F.expr(
             "transform(embedding,"
             " x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
         ).alias("q"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # anchors + pos + neg + lookups
+    ), StorageLevel.MEMORY_AND_DISK)  # anchors + pos + neg + lookups
     seeds = (
         v.withColumn(
             "h", hash60(F.concat(F.lit("tri|"), F.col("vec_id").cast("string")))

@@ -39,6 +39,7 @@ from pyspark.storagelevel import StorageLevel
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.dedup.minhash import lsh_candidate_pairs, signatures_from_shingles
 from hpmr_spark.dedup.shingles import SQL_SHINGLE_CTE, shingle_sets
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import MINHASH_A, MINHASH_B, N_PERM, P32, sql_hash60
 from hpmr_spark.functions.ranking import bounded_rank
 
@@ -116,9 +117,7 @@ def lm_beam_search_decode(spark, sf_dir):
     frame (beam x vocab <= 62 rows) is TakeOrdered-topped and the 2-row
     beam localCheckpoint'ed (lineage cut — see the inline comment), then
     ranked via the broadcast bounded_rank self-join (never a global
-    window); the persisted bigram frame is vocab^2-bounded (plan-unique
-    dummy agg — cross-query cache-aliasing rule vs the greedy twin's
-    frame)."""
+    window); the persisted bigram frame is vocab^2-bounded."""
     d = _t(spark, sf_dir, "documents").select(F.split("text", " ").alias("a"))
     pairs = d.select(
         F.explode(
@@ -128,15 +127,12 @@ def lm_beam_search_decode(spark, sf_dir):
             )
         ).alias("p")
     ).select("p.w1", "p.w2")
-    c = pairs.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.max(F.lit(0)).alias("_uq_beam"),
-    )
+    c = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("n"))
     ctx = c.groupBy("w1").agg(F.sum("n").cast("long").alias("ctx"))
-    cj = (
+    cj = materialize(
         c.join(ctx, "w1")
-        .select("w1", "w2", "n", "ctx")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("w1", "w2", "n", "ctx"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     beam = None
     outs = []
@@ -252,7 +248,7 @@ def matrix_profile_daily(spark, sf_dir):
     Zero-variance windows are excluded by a committed integer predicate
     (they have no z-normalization).""".replace("{W}", str(_MP_W))
     o = _t(spark, sf_dir, "orders")
-    day = (
+    day = materialize(
         o.groupBy(
             F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
         )
@@ -261,10 +257,8 @@ def matrix_profile_daily(spark, sf_dir):
                 "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))"
                 " AS BIGINT) div 100"
             ).alias("v"),
-            F.max(F.lit(0)).alias("_uq_matprof"),
-        )
-        .drop("_uq_matprof")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     a = day.select(F.col("d").alias("ad"))
     b = day.select(F.col("d").alias("bd"), F.col("v").alias("bv"))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.littables import values_df
 from hpmr_spark.dedup.exact import dedup_exact
 from hpmr_spark.dedup.minhash import minhash_dedup_pairs
@@ -515,7 +516,7 @@ def ivfpq_recall_clustered_gate(spark, sf_dir):
 
     from hpmr_spark.similarity.ivfpq import ivfpq_topk
 
-    c = spark.sql(_gate_corpus_sql_spark()).persist(StorageLevel.MEMORY_AND_DISK)
+    c = materialize(spark.sql(_gate_corpus_sql_spark()), StorageLevel.MEMORY_AND_DISK)
     q = c.where(F.col("vec_id") % 100 == 0)
     ann = ivfpq_topk(c, q, k=10, n_cells=16, n_probe=2)
     return _ann_recall_gated(
@@ -828,7 +829,7 @@ def semdedup_centroid_prune(spark, sf_dir):
     ]
 
     mn = argmin_struct(cents)
-    a2 = vi.select(
+    a2 = materialize(vi.select(
         "vec_id",
         "v",
         mn.getField("cell").cast("long").alias("cell"),
@@ -836,7 +837,7 @@ def semdedup_centroid_prune(spark, sf_dir):
         F.expr(
             "aggregate(zip_with(v,v,(a,b)->a*b),CAST(0 AS BIGINT),(acc,x)->acc+x)"
         ).alias("n2"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ), StorageLevel.MEMORY_AND_DISK)
 
     a = a2.select(
         F.col("cell").alias("cell"),

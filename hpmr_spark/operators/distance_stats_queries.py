@@ -44,6 +44,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.ranking import bounded_rank, global_order_multi
 
 # ---------------------------------------------------------------------------
@@ -111,7 +112,7 @@ def emd_1d_price_shift(spark, sf_dir):
     # same bucketed window pass already emits — so the fact-scale rn-equi
     # self-join that previously fetched next_cents (2 extra exchanges)
     # disappears. Exact integer identity: same _num, same emd_cents.
-    e = global_order_multi(
+    e = materialize(global_order_multi(
         s,
         ["cents"],
         running=[
@@ -120,7 +121,7 @@ def emd_1d_price_shift(spark, sf_dir):
             ("cnt_a", "sum", False, "ra"),
             ("cnt_b", "sum", False, "rb"),
         ],
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # two consumers (totals + sum)
+    ), StorageLevel.MEMORY_AND_DISK)  # two consumers (totals + sum)
     tot = e.agg(
         F.max("ra").cast("long").alias("na"),
         F.max("rb").cast("long").alias("nb"),

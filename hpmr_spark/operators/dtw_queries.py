@@ -36,6 +36,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 _INF = 10**17
 _TOP_N = 4
@@ -168,17 +169,15 @@ def dtw_nation_revenue(spark, sf_dir):
         .limit(_TOP_N)
         .select("nk")
     )
-    grid = (
+    grid = materialize(
         top4.crossJoin(F.broadcast(months))
         .join(nm, ["nk", "mi"], "left")
         .select(
             "nk",
             "rel",
             F.coalesce(F.col("cents"), F.lit(0)).cast("long").alias("y"),
-            F.lit(0).alias("_uq_dtw"),
-        )
-        .drop("_uq_dtw")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # a-side + b-side consumers
+        ),
+        StorageLevel.MEMORY_AND_DISK,  # a-side + b-side consumers
     )
     ga = grid.select(
         F.col("nk").alias("nk_a"), F.col("rel").alias("rel"), F.col("y").alias("ya")

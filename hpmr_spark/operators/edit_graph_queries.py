@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 # ---------------------------------------------------------------- Katz
 
@@ -103,7 +104,7 @@ def katz_centrality_trade(spark, sf_dir):
             .alias("v")
         )
     )
-    pe = pe.persist()
+    pe = materialize(pe)
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
     und = (
         pe.crossJoin(F.broadcast(tot))
@@ -112,10 +113,9 @@ def katz_centrality_trade(spark, sf_dir):
                 F.greatest("src", "dst").alias("w"))
         .distinct()
     )
-    sym = (
+    sym = materialize(
         und.select(F.col("u").alias("a"), F.col("w").alias("b"))
         .unionAll(und.select(F.col("w").alias("a"), F.col("u").alias("b")))
-        .persist()
     )
     v = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "p", F.lit(1).cast("long")

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import sql_hash60, spark_sql_hash60
 from hpmr_spark.functions.ranking import global_order_multi
 
@@ -196,17 +197,14 @@ def hodges_lehmann_location(spark, sf_dir):
     pair join is a constant ~2.9M rows regardless of corpus size;
     histogram + global_order_multi prefix + argmin. Scale-free."""
     o = _t(spark, sf_dir, "orders")
-    days = (
+    days = materialize(
         o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("d"))
         .agg(
             F.expr(
                 "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))"
                 " AS BIGINT) div 100"
             ).alias("x"),
-            F.max(F.lit(97)).alias("_uq_hl"),
         )
-        .drop("_uq_hl")
-        .persist()
     )
     a = days.select(F.col("d").alias("da"), F.col("x").alias("xa"))
     b = days.select(F.col("d").alias("db"), F.col("x").alias("xb"))
@@ -278,20 +276,17 @@ def cliffs_delta_effect(spark, sf_dir):
     and the counts consume it), one bounded ~1700×680 cross pair count.
     Scale-free (calendar-bounded at every corpus size)."""
     o = _t(spark, sf_dir, "orders")
-    days = (
+    days = materialize(
         o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("d"))
         .agg(
             F.expr(
                 "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))"
                 " AS BIGINT) div 100"
             ).alias("x"),
-            F.max(F.lit(101)).alias("_uq_cd"),
         )
-        .drop("_uq_cd")
         .select(
             F.expr("datediff(d, DATE '1970-01-01')").alias("ed"), "x"
         )
-        .persist()
     )
     wd = days.where(F.expr("(ed + 3) % 7 < 5")).select(
         F.col("x").alias("xa")

@@ -37,6 +37,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60, spark_sql_hash60
 from hpmr_spark.functions.ranking import global_order_multi
 from hpmr_spark.operators.mleval_queries import _SCORED_SQL, _scored
@@ -98,20 +99,14 @@ def youden_j_threshold(spark, sf_dir):
     rows at ANY corpus scale) → ONE fused two-pass prefix machinery
     (global_order_multi: both strict running sums in one pass, never a
     global window) → 1-row TakeOrdered argmax. The tiny histogram is
-    persisted (totals + prefix consumers — multi-consumer rule)
-    ⟹ plan_snapshot SKIP."""
+    persisted (totals + prefix consumers — multi-consumer rule)."""
     s = _scored(spark, sf_dir)
-    # dummy-carrying aggregate: plan-unique vs the AUC query's identical
-    # histogram (cross-query cache-aliasing rule)
-    g = (
+    g = materialize(
         s.groupBy("score_ppm")
         .agg(
             F.count(F.lit(1)).cast("long").alias("cnt"),
             F.sum("y").cast("long").alias("pos"),
-            F.max(F.lit(43)).alias("_uq_yj"),
         )
-        .drop("_uq_yj")
-        .persist()
     )
     tot = g.agg(
         F.sum("cnt").cast("long").alias("n"),
@@ -344,8 +339,7 @@ def krippendorff_alpha_nominal(spark, sf_dir):
 
     Spark shape: explode 3 raters (map-side), ONE (doc, label) count —
     persisted: both the per-unit and the marginal rollups consume it
-    (multi-consumer rule) — then two tiny aggs. Linear at any scale
-    ⟹ plan_snapshot SKIP (persist)."""
+    (multi-consumer rule) — then two tiny aggs. Linear at any scale."""
     d = _t(spark, sf_dir, "documents")
     ratings = d.select(
         "doc_id", F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("r")
@@ -354,14 +348,9 @@ def krippendorff_alpha_nominal(spark, sf_dir):
         "r",
         F.expr(_ka_label(spark_sql_hash60, "doc_id", "r")).alias("lab"),
     )
-    dl = (
+    dl = materialize(
         ratings.groupBy("doc_id", "lab")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("c"),
-            F.max(F.lit(47)).alias("_uq_ka"),
-        )
-        .drop("_uq_ka")
-        .persist()
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     per_unit = dl.groupBy("doc_id").agg(
         (F.lit(9) - F.sum(F.col("c") * F.col("c"))).cast("long").alias("disag")
@@ -478,21 +467,18 @@ def randomization_test_mean_diff(spark, sf_dir):
     Spark shape: ONE fact-keyed day agg (calendar-bounded, persisted —
     the observed row and the B-fold explode both consume it; the
     bounded-rollup pattern: the B×days frame is ~600k rows at EVERY
-    corpus scale, so the test is scale-free) ⟹ plan_snapshot SKIP."""
+    corpus scale, so the test is scale-free)."""
     o = _t(spark, sf_dir, "orders")
-    days = (
+    days = materialize(
         o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("day"))
         .agg(
             F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
             .cast("long")
             .alias("cents"),
-            F.max(F.lit(53)).alias("_uq_rt"),
         )
-        .drop("_uq_rt")
         .select(
             F.expr("datediff(day, DATE '1970-01-01')").alias("ed"), "cents"
         )
-        .persist()
     )
     ina_obs = F.expr("(ed + 3) % 7 < 5")
     obs = days.agg(

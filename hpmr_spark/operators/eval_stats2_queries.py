@@ -17,6 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import (
     MINHASH_A,
     MINHASH_B,
@@ -103,10 +104,6 @@ def conformal_threshold_coverage(spark, sf_dir):
     # SMJ on the reduced frame at cluster scale)
     o_agg = o.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
-        # plan-uniqueness dummy: target_encoding_loo builds a canonically
-        # similar per-customer aggregation (CLAUDE.md cache-aliasing rule
-        # for persisted frames)
-        F.max(F.lit(0)).alias("_uq_conf"),
     )
     w = o_agg.join(
         c.select("c_custkey", F.col("c_mktsegment").alias("segment")),
@@ -141,13 +138,13 @@ def conformal_threshold_coverage(spark, sf_dir):
     # bounds agg + the window input) with DIFFERENT pruned column sets, so
     # without the cache the score groupBy shuffles twice (the round-4
     # prune-breaks-ReuseExchange class); frame is customer-cardinality
-    hist = (
+    hist = materialize(
         sc.groupBy("score")
         .agg(
             F.sum("is_cal").cast("long").alias("cal_cnt"),
             F.sum(1 - F.col("is_cal")).cast("long").alias("test_cnt"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     cum = global_order_multi(
         hist,
@@ -346,9 +343,7 @@ def km_survival_curve(spark, sf_dir):
     g = obs.groupBy("dur_us").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
         F.sum("died").cast("long").alias("d"),
-        # plan-uniqueness dummy (persisted below — cache-aliasing rule)
-        F.max(F.lit(0)).alias("_uq_km"),
-    ).drop("_uq_km")
+    )
     # the duration histogram feeds the total, the prefix machinery's three
     # branches, and the final ordered pass. Size-aware dispatch (the r8
     # BROADCAST_MAX_DOCS discipline, via the declared parquet footer count
@@ -357,14 +352,14 @@ def km_survival_curve(spark, sf_dir):
     # lineage out of every downstream machinery job (measured 8.8 → 2.8 s
     # warm at sf0.1, hashes identical); an unbounded one keeps the persist
     # path — coalescing a billion-duration histogram to 4 partitions would
-    # be the real regression (plan_snapshot SKIP either way).
+    # be the real regression.
     from hpmr_spark.sources.tables import table_rows
 
     n_events = table_rows(sf_dir, "events")
     if n_events is not None and n_events <= 10_000_000:
         g = g.coalesce(4).localCheckpoint(eager=True)
     else:
-        g = g.persist(StorageLevel.MEMORY_AND_DISK)
+        g = materialize(g, StorageLevel.MEMORY_AND_DISK)
     n = g.agg(F.sum("cnt").cast("long").alias("total"))
     cum = global_running(
         g, ["dur_us"], "cnt", kind="sum", strict=True, out="lt"
@@ -774,11 +769,8 @@ def nelson_aalen_hazard(spark, sf_dir):
     g = obs.groupBy("dur_us").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
         F.sum("died").cast("long").alias("d"),
-        # plan-uniqueness dummy (persisted below — cache-aliasing rule;
-        # km's histogram has the same canonical plan otherwise)
-        F.max(F.lit(1)).alias("_uq_na"),
-    ).drop("_uq_na")
-    g = g.persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    g = materialize(g, StorageLevel.MEMORY_AND_DISK)
     n = g.agg(F.sum("cnt").cast("long").alias("total"))
     cum = global_running(
         g, ["dur_us"], "cnt", kind="sum", strict=True, out="lt"

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 # ---------------------------------------------------------------------------
 # Multinomial Naive Bayes language classifier, self-eval confusion matrix.
@@ -111,8 +112,7 @@ def naive_bayes_lang_eval(spark, sf_dir):
     used to feed FOUR independent aggregates (cwl, nl, vv — the last a
     distinct-Expand — and dwc), i.e. four full explode passes in one
     plan. Now the per-doc postings frame dwc (doc, lang, word, k) is
-    built ONCE and persisted (the r12 postings-frame discipline:
-    plan-unique dummy, plan_snapshot SKIP), and everything else derives
+    built ONCE and persisted (the r12 postings-frame discipline), and everything else derives
     from it by exact integer re-aggregation: cwl = Σk by (w, lang)
     (two-level aggregation, partial-agg friendly), nl = Σk by lang,
     v = |distinct w of cwl| — identical values (exact counts), one
@@ -130,11 +130,9 @@ def naive_bayes_lang_eval(spark, sf_dir):
     # (ADVICE r6): the fan and its (w, lang) shuffle-join run on the
     # (doc, word, count) frame — distinct words per doc, not raw token
     # occurrences. k·term is exact integer arithmetic, values unchanged.
-    dwc = toks.groupBy("doc_id", "lang", "w").agg(
+    dwc = materialize(toks.groupBy("doc_id", "lang", "w").agg(
         F.count(F.lit(1)).cast("long").alias("k"),
-        # plan-uniqueness dummy (persisted below — cache-aliasing rule)
-        F.max(F.lit(0)).alias("_uq_nb"),
-    ).drop("_uq_nb").persist(StorageLevel.DISK_ONLY)
+    ), StorageLevel.DISK_ONLY)
     # r12 storage-level probe at 1M docs (SCALE.md round-12-opt probes,
     # cycle-2 walls): MEMORY_AND_DISK 78.9s/326MB cached, _DESER 68.7s/508MB,
     # DISK_ONLY 66.9s/0MB, no-persist 66.3s. DISK_ONLY ties no-persist,

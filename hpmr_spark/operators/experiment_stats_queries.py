@@ -24,6 +24,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 
 # ---------------------------------------------------------------------------
@@ -133,8 +134,8 @@ def cuped_adjusted_lift(spark, sf_dir):
     )
     # per-user frame feeds pool AND arm aggregates (no cross-tree CSE in
     # Catalyst): persist the already-aggregated n_customers-sized frame so
-    # the customer⋈orders join runs once (plan_snapshot SKIP)
-    u = u.persist(StorageLevel.MEMORY_AND_DISK)
+    # the customer⋈orders join runs once
+    u = materialize(u, StorageLevel.MEMORY_AND_DISK)
     pool = u.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.expr("CAST(x AS DECIMAL(38,0))")).alias("sx"),
@@ -203,7 +204,7 @@ def theil_sen_slope_milli(spark, sf_dir):
     exact."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    wk = (
+    wk = materialize(
         o.join(c, c["c_custkey"] == o["o_custkey"])
         .groupBy(
             F.col("c_nationkey").alias("nation"),
@@ -212,12 +213,8 @@ def theil_sen_slope_milli(spark, sf_dir):
                 " DATE '1992-01-06') div 7 AS BIGINT)"
             ).alias("x"),
         )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("y"),
-            F.max(F.lit(0)).alias("_uq_ts"),
-        )
-        .drop("_uq_ts")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("y")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     a = wk.select(
         F.col("nation").alias("na"), F.col("x").alias("xa"), F.col("y").alias("ya")
@@ -390,14 +387,10 @@ def t_closeness_audit(spark, sf_dir):
         ),
         F.col("c_mktsegment").alias("segment"),
     )
-    cell = (
+    cell = materialize(
         base.groupBy("nation", "bal_bucket", "segment")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("c_gs"),
-            F.max(F.lit(0)).alias("_uq_tclose"),
-        )
-        .drop("_uq_tclose")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(F.count(F.lit(1)).cast("long").alias("c_gs")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     tot = cell.agg(F.sum("c_gs").cast("long").alias("big_n"))
     seg = cell.groupBy("segment").agg(F.sum("c_gs").cast("long").alias("c_s"))

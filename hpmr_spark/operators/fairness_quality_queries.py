@@ -32,6 +32,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.operators.mleval_queries import _SCORED_SQL, _scored
 
 # ---------------------------------------------------------------------------
@@ -93,8 +94,7 @@ def fairness_equalized_odds_audit(spark, sf_dir):
 
     Spark shape: one scan + join to recover the group bit, one group agg
     (3 rows — persisted, gaps + final consumers), one 1-row gaps agg
-    broadcast back. Linear at any scale ⟹ plan_snapshot SKIP
-    (persist)."""
+    broadcast back. Linear at any scale."""
     s = _scored(spark, sf_dir)
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", (F.col("label") % 3).cast("long").alias("grp")
@@ -122,11 +122,9 @@ def fairness_equalized_odds_audit(spark, sf_dir):
             )
             .cast("long")
             .alias("fp"),
-            F.max(F.lit(89)).alias("_uq_fa"),
         )
-        .drop("_uq_fa")
     )
-    rates = per.select(
+    rates = materialize(per.select(
         "grp",
         "n",
         F.expr("sel * 1000000 div n").alias("sel_ppm"),
@@ -136,7 +134,7 @@ def fairness_equalized_odds_audit(spark, sf_dir):
         F.expr(
             "CASE WHEN n - pos > 0 THEN fp * 1000000 div (n - pos) END"
         ).alias("fpr_ppm"),
-    ).persist()
+    ))
     gaps = rates.agg(
         (F.max("sel_ppm") - F.min("sel_ppm")).cast("long").alias("dp_gap_ppm"),
         (F.max("tpr_ppm") - F.min("tpr_ppm")).cast("long").alias("tpr_gap_ppm"),

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 _BW_K = 6  # hop cap (committed): pairs beyond 6 hops count as disconnected
 
@@ -92,7 +93,7 @@ def brandes_betweenness_trade(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     s = _t(spark, sf_dir, "supplier")
-    pe = (
+    pe = materialize(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -102,7 +103,6 @@ def brandes_betweenness_trade(spark, sf_dir):
             F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
             .alias("v")
         )
-        .persist()
     )
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
     und = (

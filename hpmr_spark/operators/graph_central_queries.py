@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.sources.tables import load_events
 
 # ---------------------------------------------------------------------------
@@ -108,9 +109,7 @@ def closeness_harmonic_h12(spark, sf_dir):
             F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
             .cast("long")
             .alias("v"),
-            F.max(F.lit(7)).alias("_uq_cl"),
         )
-        .drop("_uq_cl")
     )
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
     und = (
@@ -119,9 +118,9 @@ def closeness_harmonic_h12(spark, sf_dir):
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w"))
         .distinct()
     )
-    sym = und.select(F.col("u").alias("a"), F.col("w").alias("b")).unionAll(
+    sym = materialize(und.select(F.col("u").alias("a"), F.col("w").alias("b")).unionAll(
         und.select(F.col("w").alias("a"), F.col("u").alias("b"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # 3 relaxation rounds
+    ), StorageLevel.MEMORY_AND_DISK)  # 3 relaxation rounds
     d = sym.select(F.col("a").alias("s"), F.col("b").alias("t"), F.lit(1).cast("long").alias("d"))
     for _ in range(3):
         ext = (
@@ -129,11 +128,11 @@ def closeness_harmonic_h12(spark, sf_dir):
             .where(F.col("t2") != F.col("s"))
             .select("s", F.col("t2").alias("t"), (F.col("d") + 1).alias("d"))
         )
-        d = (
+        d = materialize(
             d.unionAll(ext)
             .groupBy("s", "t")
-            .agg(F.min("d").cast("long").alias("d"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .agg(F.min("d").cast("long").alias("d")),
+            StorageLevel.MEMORY_AND_DISK,
         )
     return d.groupBy(F.col("s").cast("long").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("n_reach"),

@@ -32,6 +32,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 _DEG_CAP = 64  # max degree for a COMMON neighbor (hub cap)
 _AA_TOPK = 50
@@ -87,12 +88,12 @@ def link_prediction_adamic_adar(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
     b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    und = (
+    und = materialize(
         a.join(b, "ok")
         .where(F.col("pa") < F.col("pb"))
         .select(F.col("pa").alias("u"), F.col("pb").alias("w"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
     sym = und.select(F.col("u").alias("s"), F.col("w").alias("t")).unionAll(
         und.select(F.col("w").alias("s"), F.col("u").alias("t"))

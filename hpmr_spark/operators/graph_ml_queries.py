@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.littables import values_df
 
 
@@ -82,16 +83,15 @@ def graph_triangle_count(spark, sf_dir):
     # pe and und are tiny post-agg frames consumed by multiple subtrees
     # (tot+und; e1/e2/e3) — persist both or Catalyst re-derives the whole
     # 4-table join per consumer (was 37 shuffles; see CLAUDE.md CSE note)
-    pe = pe.persist()
+    pe = materialize(pe)
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
+    und = materialize(
         pe.crossJoin(F.broadcast(tot))
         .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
         .select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w")
         )
         .distinct()
-        .persist()
     )
     e1 = und.select(F.col("u").alias("a"), F.col("w").alias("b"))
     e2 = und.select(F.col("u").alias("b"), F.col("w").alias("c"))
@@ -265,7 +265,7 @@ def graph_bfs_3hop(spark, sf_dir):
     # persist the derived edge list: every superstep re-reads it, and without
     # this the 4-join derivation re-executes per hop (standard discipline for
     # iterative graph algorithms — pagerank does the same)
-    sym = sym.persist()
+    sym = materialize(sym)
     spark_ = und.sparkSession
     dist = values_df(spark_, [(0, 0)], "node long, dist int")
     for _ in range(3):
@@ -451,25 +451,18 @@ def graph_lpa_communities(spark, sf_dir):
     ship. Fixed rounds = unrolled CTEs in the oracle, a loop here; each
     round is one join + one grouped count + one partitioned top-1 — the
     chained keyed-mapreduce epoch shape at any graph size. Edge frames
-    persist (multi-consumer; plan_snapshot SKIP)."""
+    persist (multi-consumer)."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     s = _t(spark, sf_dir, "supplier")
 
-    pe = (
+    pe = materialize(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v"),
-            # add-then-dropped column keeps this persisted plan UNIQUE so it
-            # cannot cache-alias graph_triangle_count's pe (CLAUDE.md rule)
-            F.count(F.lit(1)).alias("_ne"),
-        )
-        .drop("_ne")
-        .persist()
+        .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v"))
     )
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
     und = (
@@ -480,10 +473,9 @@ def graph_lpa_communities(spark, sf_dir):
         )
         .distinct()
     )
-    ed = (
+    ed = materialize(
         und.select(F.col("u").alias("src"), F.col("w").alias("dst"))
         .unionAll(und.select(F.col("w").alias("src"), F.col("u").alias("dst")))
-        .persist()
     )
     lab = ed.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").cast("long").alias("lab")

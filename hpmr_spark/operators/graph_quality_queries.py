@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.operators.graph_ml_queries import _LPA_EDGES, _lpa_round_sql
 
 _MODULARITY_ORACLE = (
@@ -98,23 +99,21 @@ def graph_modularity_ppm(spark, sf_dir):
             F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
             .cast("long")
             .alias("v"),
-            F.max(F.lit(4)).alias("_uq_mod"),
         )
-        .drop("_uq_mod")
     )
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
+    und = materialize(
         pe.crossJoin(F.broadcast(tot))
         .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
         .select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w")
         )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)  # ed/deg/wic/ec/m consumers
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,  # ed/deg/wic/ec/m consumers
     )
-    ed = und.select(F.col("u").alias("src"), F.col("w").alias("dst")).unionAll(
+    ed = materialize(und.select(F.col("u").alias("src"), F.col("w").alias("dst")).unionAll(
         und.select(F.col("w").alias("src"), F.col("u").alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ), StorageLevel.MEMORY_AND_DISK)
     nodes = ed.select(F.col("src").alias("node")).distinct()
     lab = nodes.select("node", F.col("node").cast("long").alias("lab"))
     for _ in range(3):
@@ -132,7 +131,7 @@ def graph_modularity_ppm(spark, sf_dir):
         lab = lab.join(best, "node", "left").select(
             "node", F.coalesce(F.col("newlab"), F.col("lab")).alias("lab")
         )
-    lab = lab.persist(StorageLevel.MEMORY_AND_DISK)
+    lab = materialize(lab, StorageLevel.MEMORY_AND_DISK)
     mm = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
     la = lab.select(F.col("node").alias("u"), F.col("lab").alias("lab_u"))
     lb = lab.select(F.col("node").alias("w"), F.col("lab").alias("lab_w"))

@@ -30,6 +30,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.sources.tables import load_events
 
@@ -76,9 +77,10 @@ def hill_tail_index(spark, sf_dir):
     sum_ln_nano, hill_alpha)."""
     o = _t(spark, sf_dir, "orders")
     r = o.select(F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-    top = r.orderBy(F.col("cents").desc()).limit(_HILL_K + 1).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )  # threshold + log-sum consumers
+    top = materialize(
+        r.orderBy(F.col("cents").desc()).limit(_HILL_K + 1),
+        StorageLevel.MEMORY_AND_DISK,  # threshold + log-sum consumers
+    )
     thr = top.agg(F.min("cents").cast("long").alias("x_k1"))
     lns = (
         top.crossJoin(F.broadcast(thr))
@@ -188,7 +190,7 @@ def influence_cascade_reach(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     s = _t(spark, sf_dir, "supplier")
-    pe = (
+    pe = materialize(
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
@@ -197,10 +199,8 @@ def influence_cascade_reach(spark, sf_dir):
             F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
             .cast("long")
             .alias("v"),
-            F.max(F.lit(5)).alias("_uq_ic"),
-        )
-        .drop("_uq_ic")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # und + seed consumers
+        ),
+        StorageLevel.MEMORY_AND_DISK,  # und + seed consumers
     )
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
     und = (
@@ -221,9 +221,9 @@ def influence_cascade_reach(spark, sf_dir):
         % 4
         == 0
     )
-    sym = act.select(F.col("u").alias("a"), F.col("w").alias("b")).unionAll(
+    sym = materialize(act.select(F.col("u").alias("a"), F.col("w").alias("b")).unionAll(
         act.select(F.col("w").alias("a"), F.col("u").alias("b"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # 3 hop expansions
+    ), StorageLevel.MEMORY_AND_DISK)  # 3 hop expansions
     seed = (
         pe.groupBy("src")
         .agg(F.sum("v").alias("sv"))
@@ -231,17 +231,17 @@ def influence_cascade_reach(spark, sf_dir):
         .limit(1)
         .select(F.col("src").alias("node"))
     )
-    hops = [seed.persist(StorageLevel.MEMORY_AND_DISK)]
+    hops = [materialize(seed, StorageLevel.MEMORY_AND_DISK)]
     for _ in range(3):
         prev_all = hops[0]
         for h in hops[1:]:
             prev_all = prev_all.unionAll(h)
-        nxt = (
+        nxt = materialize(
             sym.join(hops[-1].select(F.col("node").alias("a")), "a")
             .select(F.col("b").alias("node"))
             .distinct()
-            .join(prev_all, "node", "left_anti")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .join(prev_all, "node", "left_anti"),
+            StorageLevel.MEMORY_AND_DISK,
         )
         hops.append(nxt)
     out = None

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import sql_hash60, spark_sql_hash60
 from hpmr_spark.functions.ranking import bounded_rank
 
@@ -105,10 +106,10 @@ def successive_halving_replay(spark, sf_dir):
     first). Emits per rung: arms evaluated, arms kept, best metric.
 
     Spark shape: ONE doc pass builds the (cell, rung, metric) frame
-    (cells×rungs-BOUNDED, persisted + plan-unique dummy); each halving
+    (cells×rungs-BOUNDED, persisted); each halving
     is a broadcast bounded_rank over ≤ |cells| rows (never a global
     window); summaries are 4 tiny aggs unioned.
-    Persist ⟹ plan_snapshot SKIP."""
+    Per-rung localCheckpoints ⟹ plan_snapshot SKIP."""
     d = _t(spark, sf_dir, "documents")
     rungs = spark.range(0, _SH_RUNGS).select(F.col("id").alias("r"))
     measured = (
@@ -121,13 +122,8 @@ def successive_halving_replay(spark, sf_dir):
             )
         )
     )
-    universe = (
-        d.groupBy("lang", "source")
-        .agg(F.max(F.lit(71)).alias("_uq_sh"))
-        .drop("_uq_sh")
-        .crossJoin(F.broadcast(rungs))
-    )
-    base = (
+    universe = d.select("lang", "source").distinct().crossJoin(F.broadcast(rungs))
+    base = materialize(
         universe.join(measured, ["lang", "source", "r"], "left")
         .select(
             "lang",
@@ -135,7 +131,6 @@ def successive_halving_replay(spark, sf_dir):
             "r",
             F.coalesce(F.col("metric"), F.lit(_SH_SENTINEL)).alias("metric"),
         )
-        .persist()
     )
     survivors = base.where(F.col("r") == 0).select("lang", "source")
     out = []

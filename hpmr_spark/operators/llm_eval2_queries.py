@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.functions.ranking import bounded_rank
 
@@ -237,7 +238,7 @@ def nearest_centroid_eval(spark, sf_dir):
     from pyspark import StorageLevel
 
     emb = _t(spark, sf_dir, "embeddings")
-    v = emb.select(
+    v = materialize(emb.select(
         "vec_id",
         "label",
         F.posexplode(
@@ -248,7 +249,7 @@ def nearest_centroid_eval(spark, sf_dir):
         ).alias("dim0", "x"),
     ).select(
         "vec_id", "label", (F.col("dim0") + 1).alias("dim"), "x"
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # centroid build + classify pass
+    ), StorageLevel.MEMORY_AND_DISK)  # centroid build + classify pass
     cent = v.groupBy(F.col("label").alias("c"), "dim").agg(
         F.expr("CAST(CAST(SUM(x) AS DECIMAL(38,0)) div COUNT(*) AS BIGINT)").alias(
             "mu"

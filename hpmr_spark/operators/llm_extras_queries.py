@@ -14,6 +14,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.littables import values_df
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 
@@ -200,7 +201,7 @@ def bpe_train_8_merges(spark, sf_dir):
     8 collects at build ⟹ plan_snapshot SKIP."""
     from pyspark import StorageLevel
 
-    w = _bpe_vocab(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    w = materialize(_bpe_vocab(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     rules = _bpe_train_rules(w, N_MERGES)
     w.unpersist()
     return values_df(
@@ -222,10 +223,6 @@ def _bpe_vocab(spark, sf_dir):
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .where(F.length("token") >= 2)
-        # plan-uniqueness dummy (CLAUDE.md cache-aliasing rule):
-        # bpe_merge_step builds a canonically similar word-count frame
-        .withColumn("_uq_bpe", F.lit(0))
-        .drop("_uq_bpe")
     )
 
 
@@ -338,7 +335,7 @@ def bpe_apply_compression_report(spark, sf_dir):
     build ⟹ plan_snapshot SKIP."""
     from pyspark import StorageLevel
 
-    ws = _bpe_vocab(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    ws = materialize(_bpe_vocab(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     rules = _bpe_train_rules(ws, N_MERGES)
     t = ws.select(
         "source", "n", F.regexp_replace("token", "(.)", r"|$1").alias("tk")

@@ -14,6 +14,7 @@ from functools import reduce
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 _SEED = "join"
 _STEPS = 5
@@ -74,7 +75,7 @@ def lm_greedy_decode_steps(spark, sf_dir):
         ).alias("p")
     ).select("p.w1", "p.w2")
     c = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    c = c.persist()
+    c = materialize(c)
 
     steps = []
     cur = None

@@ -29,6 +29,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import sql_hash60, hash60
 
 # ---------------------------------------------------------------------------
@@ -92,7 +93,7 @@ def doc_perplexity_avg_nll(spark, sf_dir):
 
     # corpus-sized frame: spill-tolerant persist (same discipline as the
     # minhash shingle frame) — memory-only showed pressure at the 3x probe
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = materialize(pairs, StorageLevel.MEMORY_AND_DISK)
     c12 = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("n12"))
     c1 = pairs.groupBy("w1").agg(F.count(F.lit(1)).cast("long").alias("n1"))
     toks = d.select(F.explode("a").alias("w"))

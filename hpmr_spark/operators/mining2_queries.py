@@ -20,6 +20,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 # ---------------------------------------------------------------------------
 # A-priori frequent triples over order baskets.
@@ -66,16 +67,11 @@ def frequent_triples_support(spark, sf_dir):
     triple once; supports are exact. Extends assoc_rules_support_ppm
     (2-itemsets) one lattice level up."""
     li = _t(spark, sf_dir, "lineitem")
-    # distinct via a dummy-carrying aggregate so the PERSISTED basket frame
-    # is plan-unique (assoc_rules builds the same canonical distinct —
-    # cache-aliasing rule)
-    b = (
-        li.groupBy(
+    b = materialize(
+        li.select(
             F.col("l_orderkey").alias("oid"), F.col("l_partkey").alias("item")
-        )
-        .agg(F.max(F.lit(0)).alias("_uq_tri"))
-        .drop("_uq_tri")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
     a = b.select(F.col("oid").alias("o1"), F.col("item").alias("i1"))
     c = b.select(F.col("oid").alias("o2"), F.col("item").alias("i2"))
@@ -90,8 +86,8 @@ def frequent_triples_support(spark, sf_dir):
         .unionAll(f2.select(F.col("p2").alias("item")))
         .distinct()
     )
-    pb = b.join(F.broadcast(hot), "item").select("oid", "item").persist(
-        StorageLevel.MEMORY_AND_DISK
+    pb = materialize(
+        b.join(F.broadcast(hot), "item").select("oid", "item"), StorageLevel.MEMORY_AND_DISK
     )
     pa = pb.select(F.col("oid").alias("oa"), F.col("item").alias("ia"))
     pc = pb.select(F.col("oid").alias("oc"), F.col("item").alias("ic"))
@@ -178,14 +174,7 @@ def source_unique_coverage_value(spark, sf_dir):
             ).alias("gram"),
         )
     )
-    # distinct via dummy aggregate: split_leakage_audit fingerprints the
-    # same 5-gram windows — the persisted frame must be plan-unique
-    sg = (
-        grams.groupBy("source", "gram")
-        .agg(F.max(F.lit(0)).alias("_uq_cov"))
-        .drop("_uq_cov")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sg = materialize(grams.select("source", "gram").distinct(), StorageLevel.MEMORY_AND_DISK)
     owners = sg.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("n_sources"))
     ps = (
         sg.join(owners, "gram")

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.functions.ranking import global_order_multi
 from hpmr_spark.operators.mleval_queries import _SCORED_SQL, _scored
@@ -219,15 +220,11 @@ def pinball_loss_quantile_eval(spark, sf_dir):
     hist = (
         s.where(F.col("split") == 0)
         .groupBy("cents")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.max(F.lit(8)).alias("_uq_pb"),
-        )
-        .drop("_uq_pb")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    cum = global_order_multi(
+    cum = materialize(global_order_multi(
         hist, ["cents"], rn_out="rn", running=[("cnt", "sum", False, "cum")]
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # two quantile consumers
+    ), StorageLevel.MEMORY_AND_DISK)  # two quantile consumers
     tn = hist.agg(F.sum("cnt").cast("long").alias("n"))
 
     def train_q(q_num: int, q_den: int, out: str):

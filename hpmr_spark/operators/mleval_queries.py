@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.functions.ranking import global_running
 
@@ -287,13 +288,13 @@ def isotonic_calibration_minimax(spark, sf_dir):
     max-sets). Output: per-bin raw vs isotonic rate — the calibration
     map a serving system applies at inference."""
     s = _scored(spark, sf_dir)
-    bins = (
+    bins = materialize(
         s.groupBy(F.expr("score_ppm div 50000").cast("long").alias("bin"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("w"),
             F.sum("y").cast("long").alias("p"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     grid = spark.range(0, _ISO_BINS + 1).select(F.col("id").cast("long").alias("j"))
     pfx = (

@@ -20,6 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 
 # ---------------------------------------------------------------------------
@@ -379,9 +380,7 @@ def kneser_ney_bigram_ppb(spark, sf_dir):
     left/right contexts) are what distinguish KN from plain interpolation
     — the standard n-gram LM smoothing used for corpus scoring. The
     bigram-type frame feeds five consumers (probe/top-10, c1, both
-    continuation aggs, T) and is persisted with a plan-uniqueness dummy
-    (CLAUDE.md cache-aliasing rule — doc_perplexity builds the same
-    canonical pairs aggregation); everything downstream is
+    continuation aggs, T) and is persisted; everything downstream is
     vocab²-bounded, probe joins broadcast 10 rows."""
     d = _t(spark, sf_dir, "documents").select(F.split("text", " ").alias("a"))
     pairs = d.select(
@@ -392,19 +391,10 @@ def kneser_ney_bigram_ppb(spark, sf_dir):
             )
         ).alias("p")
     ).select("p.w1", "p.w2")
-    c12 = (
-        pairs.groupBy("w1", "w2")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n12"),
-            # plan-uniqueness dummy: doc_perplexity_avg_nll persists a frame
-            # whose canonical aggregation this would otherwise equal
-            F.max(F.lit(0)).alias("_uniq_kn"),
-        )
-        .drop("_uniq_kn")
-    )
+    c12 = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("n12"))
     from pyspark import StorageLevel
 
-    c12 = c12.persist(StorageLevel.MEMORY_AND_DISK)
+    c12 = materialize(c12, StorageLevel.MEMORY_AND_DISK)
     c1 = c12.groupBy("w1").agg(F.sum("n12").cast("long").alias("n1"))
     fo = c12.groupBy("w1").agg(F.count(F.lit(1)).cast("long").alias("n1w1"))
     co = c12.groupBy("w2").agg(F.count(F.lit(1)).cast("long").alias("n1w2"))

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.functions.ranking import global_row_number, global_running
 
@@ -353,13 +354,12 @@ def bcubed_dedup_eval(spark, sf_dir):
     # r11: the cells frame (TWO committed md5 evaluations per doc) used to
     # be re-derived by five consumer subtrees (pc, tc, both term-join
     # sides, the final agg) — persist it so the doc scan + hashing run
-    # once (guide §2.4; plan_snapshot SKIP). The cluster-rollup joins are
+    # once (guide §2.4). The cluster-rollup joins are
     # merge-pinned: pc/tc are corpus-derived aggregates (the r7/r13
     # broadcast-OOM discipline).
-    cells = lab.groupBy("pred", "truth").agg(
+    cells = materialize(lab.groupBy("pred", "truth").agg(
         F.count(F.lit(1)).cast("long").alias("cpt"),
-        F.max(F.lit(0)).alias("_uq_bc"),  # plan-uniqueness dummy
-    ).drop("_uq_bc").persist(StorageLevel.DISK_ONLY)
+    ), StorageLevel.DISK_ONLY)
     # r12 storage-level probe at 1M docs (SCALE.md round-12-opt probes):
     # MEMORY_AND_DISK 3.4s, _DESER 3.2s, DISK_ONLY 3.2s, no-persist 3.1s —
     # within noise locally; DISK_ONLY removes the in-memory cache of a

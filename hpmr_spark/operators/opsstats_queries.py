@@ -33,6 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.functions.ranking import global_order_multi
 from hpmr_spark.sources.tables import load_events
@@ -82,7 +83,7 @@ def delete_cascade_audit(spark, sf_dir):
         hash60(F.concat(F.lit("del|"), F.col("c_custkey").cast("string"))) % 20 == 0
     ).select("c_custkey")
     nd = dele.agg(F.count(F.lit(1)).cast("long").alias("n_customers_deleted"))
-    om = (
+    om = materialize(
         o.join(
             F.broadcast(dele.withColumn("g", F.lit(1))),
             o["o_custkey"] == dele["c_custkey"],
@@ -92,8 +93,8 @@ def delete_cascade_audit(spark, sf_dir):
             "o_orderkey",
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
             F.coalesce(F.col("g"), F.lit(0)).alias("gone"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)  # order agg + lineitem join
+        ),
+        StorageLevel.MEMORY_AND_DISK,  # order agg + lineitem join
     )
     lig = (
         li.join(
@@ -173,13 +174,12 @@ def theil_u2_seasonal(spark, sf_dir):
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
             .cast("long")
             .alias("cents"),
-            F.max(F.lit(9)).alias("_uq_tu"),
         )
-        .drop("_uq_tu")
     )
-    e = global_order_multi(day, ["d"], rn_out="rn").select("rn", "cents").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )  # three lag consumers
+    e = materialize(
+        global_order_multi(day, ["d"], rn_out="rn").select("rn", "cents"),
+        StorageLevel.MEMORY_AND_DISK,  # three lag consumers
+    )
     b1 = e.select((F.col("rn") + 1).alias("rn"), F.col("cents").alias("y1"))
     b7 = e.select((F.col("rn") + 7).alias("rn"), F.col("cents").alias("y7"))
     p = e.join(b1, "rn").join(b7, "rn").select(

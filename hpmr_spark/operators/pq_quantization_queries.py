@@ -238,11 +238,9 @@ def pq_adc_topk_search(spark, sf_dir):
     from pyspark.sql import Window
 
     e = _t(spark, sf_dir, "embeddings")
-    # NO persist here: vi's canonical plan equals pq_encode_subvectors' /
-    # kmeans_assign_step's vector frame — a materialized cache would hijack
-    # their snapshotted plans (the pareto/gini cross-query aliasing trap).
-    # The frame is a narrow projection of a small parquet scan; the three
-    # consumers (corpus encode, seed bottom-k, query bottom-k) each re-scan.
+    # NO persist here: the frame is a narrow projection of a small parquet
+    # scan; the three consumers (corpus encode, seed bottom-k, query
+    # bottom-k) each re-scan.
     vi = e.select(
         "vec_id",
         F.expr(

@@ -39,6 +39,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 
 # ---------------------------------------------------------------------------
@@ -354,12 +355,10 @@ def ccnet_ppl_buckets(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     toks = d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("w"))
     # per-doc token counts feed BOTH the vocab agg and the scoring join (no
-    # cross-tree CSE) — persist the pre-aggregated frame, made plan-unique
-    # with a junk agg column (cross-query cache-aliasing discipline)
-    dt = toks.groupBy("doc_id", "lang", "w").agg(
+    # cross-tree CSE) — persist the pre-aggregated frame
+    dt = materialize(toks.groupBy("doc_id", "lang", "w").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.max(F.lit(90201)).alias("_u_ccnet"),
-    ).persist(StorageLevel.DISK_ONLY)
+    ), StorageLevel.DISK_ONLY)
     c = dt.groupBy("w").agg(F.sum("cnt").cast("long").alias("n_w"))
     t = c.agg(F.sum("n_w").cast("long").alias("tot"))
     cost = c.crossJoin(F.broadcast(t)).select(

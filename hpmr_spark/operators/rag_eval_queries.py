@@ -27,6 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 # pred/gold pairing: even doc_id pairs with doc_id+1 (committed)
 _PAIR_PRED = "doc_id % 2 = 0"
@@ -76,17 +77,13 @@ def token_f1_paired_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     # persisted: 3 consumers (lens, pred side, gold side) — no cross-tree
     # CSE in Catalyst, so without the persist each re-derives the explode
-    # + count over the corpus. Plan-uniqueness dummy per the cache-aliasing
-    # rule (wand's postings frame has the same canonical shape).
-    toks = (
+    # + count over the corpus.
+    toks = materialize(
         d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
         .where(F.col("w") != "")
         .groupBy("doc_id", "w")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.max(F.lit(0)).alias("_uq_tf1"),
-        )
-        .persist(StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).alias("c")),
+        StorageLevel.DISK_ONLY,
     )
     lens = toks.groupBy("doc_id").agg(F.sum("c").cast("long").alias("len"))
     p = toks.where(F.expr(_PAIR_PRED)).select(
@@ -185,10 +182,8 @@ def context_recall_topk(spark, sf_dir):
     is a partitioned bounded top-k window."""
     d = _t(spark, sf_dir, "documents")
     # persisted: consumed by the query-term side and the corpus side of
-    # the inverted-index join (no cross-tree CSE). distinct() gives it an
-    # aggregate whose grouping set is plan-unique already (doc, lang,
-    # source, w), but carry a dummy anyway per the cache-aliasing rule.
-    toks = (
+    # the inverted-index join (no cross-tree CSE).
+    toks = materialize(
         d.select(
             "doc_id",
             "lang",
@@ -196,9 +191,8 @@ def context_recall_topk(spark, sf_dir):
             F.explode(F.array_distinct(F.split("text", " "))).alias("w"),
         )
         .where(F.col("w") != "")
-        .groupBy("doc_id", "lang", "source", "w")
-        .agg(F.max(F.lit(0)).alias("_uq_cr"))
-        .persist(StorageLevel.DISK_ONLY)
+        .distinct(),
+        StorageLevel.DISK_ONLY,
     )
     q = d.where(F.col("doc_id") % _CR_QMOD == 0).select(
         F.col("doc_id").alias("qid"),

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 # ---------------------------------------------------------------------------
 # IPF raking
@@ -224,18 +225,15 @@ def energy_distance_twosample(spark, sf_dir):
     Spark shape: one persisted day rollup (scale-free ~2400 rows), three
     bounded pair aggregates. Constant cost at any corpus scale."""
     o = _t(spark, sf_dir, "orders")
-    days = (
+    days = materialize(
         o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("d"))
         .agg(
             F.expr(
                 "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))"
                 " AS BIGINT) div 100"
             ).alias("x"),
-            F.max(F.lit(103)).alias("_uq_ed"),
         )
-        .drop("_uq_ed")
         .select(F.expr("datediff(d, DATE '1970-01-01')").alias("ed"), "x")
-        .persist()
     )
     wd = days.where(F.expr("(ed + 3) % 7 < 5")).select(
         F.col("x").alias("xa")

@@ -23,6 +23,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 # ---------------------------------------------------------------------------
 # Reciprocal-rank fusion of two term-density retrievers.
@@ -205,24 +206,20 @@ def graph_hits_scores(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     s = _t(spark, sf_dir, "supplier")
-    pe = (
+    pe = materialize(
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
         .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v"),
-            F.max(F.lit(0)).alias("_uq_hits"),
-        )
-        .drop("_uq_hits")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     tot = pe.agg(F.sum("v").alias("t"))
-    e = (
+    e = materialize(
         pe.crossJoin(F.broadcast(tot))
         .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select("src", "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("src", "dst"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     a1 = e.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("a")

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 _N_ITEMS = 20
 _N_USERS = 5
@@ -114,16 +115,12 @@ def slope_one_recommend(spark, sf_dir):
         .limit(_N_ITEMS)
         .select("part")
     )
-    ratings = (
+    ratings = materialize(
         li.join(o, o["o_orderkey"] == li["l_orderkey"])
         .join(F.broadcast(top20), li["l_partkey"] == top20["part"])
         .groupBy(F.col("o_custkey").alias("cust"), F.col("part"))
-        .agg(
-            F.sum(F.col("l_quantity").cast("long")).cast("long").alias("r"),
-            F.max(F.lit(0)).alias("_uq_s1"),
-        )
-        .drop("_uq_s1")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # 4 consumers
+        .agg(F.sum(F.col("l_quantity").cast("long")).cast("long").alias("r")),
+        StorageLevel.MEMORY_AND_DISK,  # 4 consumers
     )
     a = ratings.select(
         F.col("cust").alias("ca"), F.col("part").alias("pj"), F.col("r").alias("ra")

@@ -21,6 +21,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.exprs import cents
 
 
@@ -443,11 +444,10 @@ def graph_pagerank_trade(spark, sf_dir):
         .agg(F.sum(cents(F.col("l_extendedprice"))).alias("v"))
     )
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    edges = (
+    edges = materialize(
         pe.crossJoin(F.broadcast(tot))
         .where(F.col("v") * 625 > F.col("t"))
         .select("src", "dst")
-        .cache()
     )
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = n.select(F.col("n_nationkey").alias("node"))

@@ -26,6 +26,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import spark_sql_hash60, sql_hash60
 
 # ------------------------------------------------------------------ WAND
@@ -108,18 +109,13 @@ def wand_upper_bound_prune(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     # persisted postings frame: 2 direct consumers (idf, scored-side) +
     # the query-term subtree — no cross-tree CSE, so the un-persisted form
-    # re-derived the corpus explode per consumer (12 shuffles). Dummy agg
-    # keeps the plan unique vs token_f1's identical-shape frame
-    # (cache-aliasing rule).
-    toks = (
+    # re-derived the corpus explode per consumer (12 shuffles).
+    toks = materialize(
         d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
         .where(F.col("w") != "")
         .groupBy("doc_id", "w")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("tf"),
-            F.max(F.lit(0)).alias("_uq_wand"),
-        )
-        .persist(StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).cast("long").alias("tf")),
+        StorageLevel.DISK_ONLY,
     )
     nd = d.agg(F.count(F.lit(1)).cast("long").alias("nd"))
     idf = (
@@ -136,9 +132,9 @@ def wand_upper_bound_prune(spark, sf_dir):
     )
     # persisted: scored feeds the per-term upper bounds AND the candidate
     # scoring join
-    scored = toks.join(idf, "w").select(
+    scored = materialize(toks.join(idf, "w").select(
         "doc_id", "w", (F.col("tf") * F.col("idf_nano")).alias("s_nano")
-    ).persist(StorageLevel.DISK_ONLY)
+    ), StorageLevel.DISK_ONLY)
     ub = scored.groupBy("w").agg(F.max("s_nano").cast("long").alias("ub_nano"))
     qterm = (
         toks.where(F.col("doc_id") % _WAND_QMOD == 0)

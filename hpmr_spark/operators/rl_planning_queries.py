@@ -32,6 +32,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.littables import values_df
 from hpmr_spark.functions.hashing import sql_hash60, spark_sql_hash60
 from hpmr_spark.sources.tables import load_events
@@ -244,15 +245,11 @@ def condorcet_copeland_winner(spark, sf_dir):
             F.col("n_regionkey").alias("region"),
             F.col("o_orderpriority").alias("p"),
         )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.max(F.lit(73)).alias("_uq_cw"),
-        )
-        .drop("_uq_cw")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
     # persisted: nr + both pair-join sides consume the windowed frame
-    # (multi-consumer rule; bounded 25 rows); plan-unique dummy agg above
-    ranked = (
+    # (multi-consumer rule; bounded 25 rows)
+    ranked = materialize(
         cnts.select(
             "region",
             "p",
@@ -262,7 +259,6 @@ def condorcet_copeland_winner(spark, sf_dir):
             )
             .alias("rk"),
         )
-        .persist()
     )
     nr = ranked.agg(
         F.countDistinct("region").cast("long").alias("n")

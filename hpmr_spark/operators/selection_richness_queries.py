@@ -40,6 +40,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.littables import values_df
 from hpmr_spark.operators.dedup_queries import (
     _DUCK_D2,
@@ -353,11 +354,10 @@ def good_turing_unseen_mass(spark, sf_dir):
     diagnostic for tokenizer/vocab planning. All-integer floor divisions.
 
     Spark shape: one token pass → word counts → the tiny spectrum
-    (persisted, plan-unique dummy — it feeds the self-join's both sides
+    (persisted — it feeds the self-join's both sides
     AND the totals row, and without the persist each consumer re-runs the
     corpus pass: the multi-consumer rule). The spectrum self-join is
-    broadcast-sized at any corpus scale (≤ max word frequency rows).
-    Persist ⟹ plan_snapshot SKIP."""
+    broadcast-sized at any corpus scale (≤ max word frequency rows)."""
     d = _t(spark, sf_dir, "documents")
     grams = (
         "CASE WHEN size(t) >= 3 THEN transform(sequence(1, size(t) - 2),"
@@ -370,16 +370,9 @@ def good_turing_unseen_mass(spark, sf_dir):
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    # dummy-carrying aggregate so the PERSISTED spectrum frame is
-    # plan-unique (cross-query cache-aliasing rule)
-    spec = (
+    spec = materialize(
         wc.groupBy(F.col("c").alias("r"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("nr"),
-            F.max(F.lit(41)).alias("_uq_gt"),
-        )
-        .drop("_uq_gt")
-        .persist()
+        .agg(F.count(F.lit(1)).cast("long").alias("nr"))
     )
     tot = spec.agg(F.sum(F.col("r") * F.col("nr")).cast("long").alias("n"))
     r0 = (

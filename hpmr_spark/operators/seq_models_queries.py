@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.exprs import el_duck, el_spark, to_duck
 from hpmr_spark.functions.hashing import spark_sql_hash60, sql_hash60
 from hpmr_spark.sources.tables import load_events
@@ -407,8 +408,8 @@ def elo_online_ratings(spark, sf_dir):
         )
     )
     # the weekly rollup feeds wks + two duel joins — persist the tiny frame
-    # (multi-consumer post-agg rule); query sits in plan_snapshot SKIP
-    wr = wr.persist()
+    # (multi-consumer post-agg rule)
+    wr = materialize(wr)
     wks = wr.select("wk").distinct().select(
         "wk", F.expr(f"struct({_elo_matches(spark_sql_hash60)})").alias("_m")
     ).select("wk", "_m.na", "_m.nb")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 
 _LC_M = 4096
@@ -144,14 +145,13 @@ def clustering_coefficient_ppm(spark, sf_dir):
     # persist the tiny aggregated frames: pe feeds tot+und, und feeds
     # deg/e1/e2/e3 — without caching Catalyst re-derives the 4-table join
     # per consumer (46 shuffles observed; same fix as graph_triangle_count)
-    pe = pe.persist()
+    pe = materialize(pe)
     tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
+    und = materialize(
         pe.crossJoin(F.broadcast(tot))
         .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w"))
         .distinct()
-        .persist()
     )
     deg = (
         und.select(F.col("u").alias("node"))

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 # ---------------------------------------------------------------------------
 # ECDF with DKW band at 11 grid points.
@@ -154,15 +155,11 @@ def pmi_top_pairs(spark, sf_dir):
         )
         .select("p.w1", "p.w2")
         .groupBy("w1", "w2")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cxy"),
-            F.max(F.lit(6)).alias("_uq_pmi"),  # plan-unique (cache aliasing)
-        )
-        .drop("_uq_pmi")
+        .agg(F.count(F.lit(1)).cast("long").alias("cxy"))
     )
     from pyspark import StorageLevel
 
-    bi = bi.persist(StorageLevel.MEMORY_AND_DISK)  # nb/uni1/uni2/top consumers
+    bi = materialize(bi, StorageLevel.MEMORY_AND_DISK)  # nb/uni1/uni2/top consumers
     nb = bi.agg(F.sum("cxy").cast("long").alias("nbi"))
     uni1 = bi.groupBy("w1").agg(F.sum("cxy").cast("long").alias("cx"))
     uni2 = bi.groupBy("w2").agg(F.sum("cxy").cast("long").alias("cy"))

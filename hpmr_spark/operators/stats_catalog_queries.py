@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from hpmr_spark.catalog import register, _t
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.ranking import global_row_number
 
 
@@ -408,15 +409,15 @@ def voptimal_histogram_dp(spark, sf_dir):
         F.sum(F.expr("CAST(v AS DECIMAL(38,0)) * v")).alias("q"),
     )
     grid = spark.range(0, _VO_K + 1).select(F.col("id").cast("long").alias("j"))
-    pfx = (
+    pfx = materialize(
         grid.join(F.broadcast(mq), F.col("k") < F.col("j"), "left")
         .groupBy("j")
         .agg(
             F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("pc"),
             F.coalesce(F.sum("s"), F.expr("CAST(0 AS DECIMAL(38,0))")).alias("ps"),
             F.coalesce(F.sum("q"), F.expr("CAST(0 AS DECIMAL(38,0))")).alias("pq"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     tot = pfx.where(F.col("j") == _VO_K).select(
         F.col("pc").cast("long").alias("n0"),
@@ -430,11 +431,11 @@ def voptimal_histogram_dp(spark, sf_dir):
         F.col("j").alias("j"), F.col("pc").alias("bc"), F.col("ps").alias("bs"),
         F.col("pq").alias("bq"),
     )
-    cost = (
+    cost = materialize(
         a.join(F.broadcast(b), F.col("j") > F.col("i"))
         .crossJoin(F.broadcast(tot))
-        .select("i", "j", F.expr(_vo_cost("div")).alias("cost"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("i", "j", F.expr(_vo_cost("div")).alias("cost")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     f = cost.where(F.col("i") == 0).select(
         "j", F.expr("CAST(cost * 32 + 0 AS BIGINT)").alias("packed")

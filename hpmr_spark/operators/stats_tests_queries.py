@@ -15,6 +15,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.sources.tables import load_events
 
@@ -66,7 +67,7 @@ def chi_square_independence(spark, sf_dir):
     o = ev.groupBy(
         "event_type", F.dayofweek("ts").alias("wd")
     ).agg(F.count(F.lit(1)).cast("long").alias("obs"))
-    o = o.persist()
+    o = materialize(o)
     r = o.groupBy("event_type").agg(F.sum("obs").cast("long").alias("r"))
     c = o.groupBy("wd").agg(F.sum("obs").cast("long").alias("c"))
     n = o.agg(F.sum("obs").cast("long").alias("n"))
@@ -278,8 +279,7 @@ def sprt_purchase_rate(spark, sf_dir):
     )
     # the prefix frame feeds four consumers (both crossings, the count,
     # the final value): persist the SMALL (rn, llr) projection
-    # (plan-uniqueness via the projection itself; plan_snapshot SKIP)
-    llr = llr.persist(StorageLevel.MEMORY_AND_DISK)
+    llr = materialize(llr, StorageLevel.MEMORY_AND_DISK)
     hi = llr.where(F.col("llr_nano") >= _SPRT_A).agg(F.min("rn").alias("rn_h1"))
     lo = llr.where(F.col("llr_nano") <= -_SPRT_A).agg(F.min("rn").alias("rn_h0"))
     t = llr.agg(

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import scratch_dir
+from hpmr_spark.engine import materialize
 from hpmr_spark.operators.scale_sketch_queries import _bloom_pos_col, _bloom_pos_sql
 
 
@@ -151,7 +152,7 @@ def source_csv_permissive_quarantine(spark, sf_dir):
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(out)
     )
-    back = back.cache()  # required: _corrupt_record queries need a materialized frame
+    back = materialize(back)  # required: _corrupt_record queries need a materialized frame
     return back.agg(
         F.sum(F.when(F.col("_corrupt_record").isNull(), 1).otherwise(0))
         .cast("long")

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.ranking import bounded_rank
 
 # ---------------------------------------------------------------------------
@@ -193,18 +194,11 @@ def jaro_winkler_pairs(spark, sf_dir):
     commitments at all (the strongest oracle class).
 
     Spark shape: the vocabulary frame is corpus-DERIVED but
-    vocab-bounded; ranking is the broadcast bounded_rank (persisted,
-    dummy-agg'd — rank + join-back consumers), pairing is an rn-equi
-    self-join, and the comparator is pure in-row HOF arithmetic.
-    Persist ⟹ plan_snapshot SKIP."""
+    vocab-bounded; ranking is the broadcast bounded_rank (persisted —
+    rank + join-back consumers), pairing is an rn-equi
+    self-join, and the comparator is pure in-row HOF arithmetic."""
     d = _t(spark, sf_dir, "documents")
-    vocab = (
-        d.select(F.explode(F.split("text", " ")).alias("w"))
-        .groupBy("w")
-        .agg(F.max(F.lit(79)).alias("_uq_jw"))
-        .drop("_uq_jw")
-        .persist()
-    )
+    vocab = materialize(d.select(F.explode(F.split("text", " ")).alias("w")).distinct())
     ranked = bounded_rank(vocab, "w", "w", primary_desc=False, out="rn")
     x = ranked.select(F.col("w").alias("a"), F.col("rn").alias("ra"))
     y = ranked.select(F.col("w").alias("b"), F.col("rn").alias("rb"))
@@ -304,15 +298,10 @@ def mink_prob_membership(spark, sf_dir):
         "doc_id", "source", F.explode(F.split("text", " ")).alias("w")
     )
     # the LM frame is vocab-bounded and consumed by tot + the token join
-    # (multi-consumer rule) — persisted with a plan-unique dummy
-    wc = (
+    # (multi-consumer rule) — persisted
+    wc = materialize(
         toks.groupBy("w")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("c"),
-            F.max(F.lit(83)).alias("_uq_mk"),
-        )
-        .drop("_uq_mk")
-        .persist()
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     tot = wc.agg(F.sum("c").cast("long").alias("n"))
     lp = (

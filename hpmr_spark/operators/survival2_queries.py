@@ -25,6 +25,7 @@ import hpmr_spark.operators.eval_stats2_queries  # noqa: F401 — registers
 # km_survival_curve's oracle BEFORE _rmst_oracle() reads it (direct imports
 # of this module must not depend on all_queries' import order)
 from hpmr_spark.catalog import ORACLES, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.ranking import bounded_rank
 
 
@@ -76,15 +77,12 @@ def rmst_survival_time(spark, sf_dir):
     it with the broadcast bounded_rank, rn-equi-joins consecutive rows
     for the interval widths, and one 1-row agg. Oracle wraps the KM
     oracle text verbatim — one source of truth. The KM frame feeds rank
-    + extremes consumers ⟹ persisted ⟹ plan_snapshot SKIP."""
+    + extremes consumers ⟹ persisted."""
     from hpmr_spark.operators.eval_stats2_queries import km_survival_curve
 
-    # the 2-column projection makes this plan distinct from the KM query's
-    # own 4-column output (both are in plan_snapshot SKIP regardless)
-    km = (
+    km = materialize(
         km_survival_curve(spark, sf_dir)
         .select("dur_us", "surv_ppm")
-        .persist()
     )
     ranked = bounded_rank(km, "dur_us", "dur_us", primary_desc=False, out="rn")
     a = ranked.select(

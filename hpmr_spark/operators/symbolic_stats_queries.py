@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import sql_hash60, spark_sql_hash60
 from hpmr_spark.functions.ranking import bounded_rank
 
@@ -87,12 +88,11 @@ def sax_symbolic_motifs(spark, sf_dir):
 
     Spark shape: one fact-keyed day agg collapses everything to the
     CALENDAR-BOUNDED PAA frame (~350 rows at EVERY corpus scale — the
-    bounded-rollup pattern, persisted + plan-unique dummy); ranking is
+    bounded-rollup pattern, persisted); ranking is
     the broadcast bounded_rank self-join (never a global window); the
-    word walk runs in-row over the one collected symbol array.
-    Persist ⟹ plan_snapshot SKIP."""
+    word walk runs in-row over the one collected symbol array."""
     o = _t(spark, sf_dir, "orders")
-    paa = (
+    paa = materialize(
         o.groupBy(
             F.expr(
                 f"datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01')"
@@ -104,10 +104,7 @@ def sax_symbolic_motifs(spark, sf_dir):
                 "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))"
                 " div COUNT(DISTINCT CAST(o_orderdate AS DATE)) AS BIGINT)"
             ).alias("m"),
-            F.max(F.lit(59)).alias("_uq_sax"),
         )
-        .drop("_uq_sax")
-        .persist()
     )
     n = paa.agg(F.count(F.lit(1)).cast("long").alias("nb"))
     ranked = bounded_rank(paa, "m", "b", primary_desc=False, out="rk")
@@ -253,14 +250,13 @@ def bh_fdr_control(spark, sf_dir):
     gate any many-cells eval sweep (per-language, per-source) needs.
 
     Spark shape: one grid agg (the hypothesis frame is BOUNDED by the
-    lang×source domain at every corpus scale — persisted, plan-unique
-    dummy), broadcast bounded_rank (never a global window), one tiny k*
-    agg broadcast back. Persist ⟹ plan_snapshot SKIP."""
+    lang×source domain at every corpus scale — persisted), broadcast
+    bounded_rank (never a global window), one tiny k*
+    agg broadcast back."""
     d = _t(spark, sf_dir, "documents")
-    cells = (
-        d.groupBy("lang", "source")
-        .agg(F.max(F.lit(61)).alias("_uq_bh"))
-        .drop("_uq_bh")
+    cells = materialize(
+        d.select("lang", "source")
+        .distinct()
         .select(
             "lang",
             "source",
@@ -268,7 +264,6 @@ def bh_fdr_control(spark, sf_dir):
                 _bh_p(spark_sql_hash60, "lang", "source").format(d="div")
             ).alias("p_ppm"),
         )
-        .persist()
     )
     ranked = bounded_rank(
         cells.withColumn(

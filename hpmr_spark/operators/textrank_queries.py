@@ -17,8 +17,8 @@ the label-drift nano floors. Top-10 keywords by (pr_3 DESC, word).
 
 Engine shape: one corpus pass builds token counts and adjacent pairs
 (zip_with against the array tail — never a token self-join); the graph
-(≤ 100 nodes / ≤ 4 950 undirected edges) is persisted (plan-unique
-dummy agg) and each iteration is a bounded broadcast join, so fact
+(≤ 100 nodes / ≤ 4 950 undirected edges) is persisted and each
+iteration is a bounded broadcast join, so fact
 rows are touched exactly twice at ANY corpus scale. The oracle uses
 the positional self-join and windowed top-k DuckDB-side.
 
@@ -32,6 +32,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 _N_NODES = 100
 _N_ITER = 3
@@ -112,11 +113,11 @@ def textrank_keywords(spark, sf_dir):
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    top100 = (
+    top100 = materialize(
         ft_words.orderBy(F.col("n").desc(), F.col("w"))
         .limit(_N_NODES)
-        .select("w")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # node set, 4 consumers
+        .select("w"),
+        StorageLevel.MEMORY_AND_DISK,  # node set, 4 consumers
     )
     pairs = (
         t.select(
@@ -143,24 +144,20 @@ def textrank_keywords(spark, sf_dir):
             F.least("w1", "w2").alias("u"), F.greatest("w1", "w2").alias("v")
         )
         .groupBy("u", "v")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("wgt"),
-            F.max(F.lit(0)).alias("_uq_txr"),
-        )
-        .drop("_uq_txr")
+        .agg(F.count(F.lit(1)).cast("long").alias("wgt"))
     )
-    dir_ = (
+    dir_ = materialize(
         edges.select(F.col("u").alias("src"), F.col("v").alias("dst"), "wgt")
         .unionAll(
             edges.select(F.col("v").alias("src"), F.col("u").alias("dst"), "wgt")
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)  # consumed by deg + 3 iterations
+        ),
+        StorageLevel.MEMORY_AND_DISK,  # consumed by deg + 3 iterations
     )
     deg = dir_.groupBy("src").agg(F.sum("wgt").cast("long").alias("wu"))
-    full = (
+    full = materialize(
         dir_.join(deg, "src")
-        .select("src", "dst", "wgt", "wu")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("src", "dst", "wgt", "wu"),
+        StorageLevel.MEMORY_AND_DISK,
     )
 
     pr = top100.select("w", F.lit(1000000).cast("long").alias("pr"))

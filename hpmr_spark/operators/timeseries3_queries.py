@@ -33,6 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 # Shared daily-rollup SQL text for the oracles.
 _DAY_SQL = """
@@ -43,23 +44,14 @@ _DAY_SQL = """
 """
 
 
-def _day_frame(spark, sf_dir, uq: str):
-    """Daily revenue rollup (d = days since epoch, cents = exact BIGINT).
-
-    `uq` makes the PERSISTED frame plan-unique per query (the add-then-
-    drop dummy aggregate from the cross-query cache-aliasing rule — a
-    persisted plan that canonically equals a sibling query's frame
-    hijacks that sibling's plan once materialized)."""
+def _day_frame(spark, sf_dir):
+    """Daily revenue rollup (d = days since epoch, cents = exact BIGINT)."""
     o = _t(spark, sf_dir, "orders")
     return (
         o.groupBy(
             F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
         )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
-            F.max(F.lit(0)).alias(uq),
-        )
-        .drop(uq)
+        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
     )
 
 
@@ -121,7 +113,7 @@ def acf_lags_revenue(spark, sf_dir):
     day frame is persisted (moments + 4 pair joins = 5 consumers; no
     cross-tree CSE in Catalyst) — calendar-bounded, so the pair joins are
     broadcast-sized at any data scale."""
-    day = _day_frame(spark, sf_dir, "_uq_acf").persist(StorageLevel.MEMORY_AND_DISK)
+    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     mom = day.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.expr("CAST(cents AS DECIMAL(38,0))")).alias("s"),
@@ -175,9 +167,7 @@ def rolling_median_7day(spark, sf_dir):
     scale); per-day median = element (w+1) div 2 of the ≤7-element sorted
     list, exact integer, no .5 averaging. The robust trend line every
     revenue dashboard overlays on the noisy daily series."""
-    day = _day_frame(spark, sf_dir, "_uq_rollmed").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     a = day.select(F.col("d").alias("ad"))
     b = day.select(F.col("d").alias("bd"), F.col("cents").alias("bc"))
     j = a.join(
@@ -237,7 +227,7 @@ def mann_kendall_trend(spark, sf_dir):
     variance numerator var18 = n(n−1)(2n+5) − Σt(t−1)(2t+5) are exact
     integers; z (with the ±1 continuity correction, sign-split CASE) is
     ONE double expression incl. IEEE-exact SQRT."""
-    day = _day_frame(spark, sf_dir, "_uq_mk").persist(StorageLevel.MEMORY_AND_DISK)
+    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     a = day.select(F.col("d").alias("ad"), F.col("cents").alias("ac"))
     b = day.select(F.col("d").alias("bd"), F.col("cents").alias("bc"))
     s = (
@@ -334,7 +324,7 @@ def runs_test_above_median(spark, sf_dir):
     integers and z is ONE double expression."""
     from hpmr_spark.functions.ranking import global_row_number
 
-    day = _day_frame(spark, sf_dir, "_uq_runs").persist(StorageLevel.MEMORY_AND_DISK)
+    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     med = day.agg(
         F.element_at(
             F.sort_array(F.collect_list("cents")),
@@ -431,7 +421,7 @@ def weekday_seasonality_profile(spark, sf_dir):
     outgrows BIGINT; Spark `div` yields LONG) — then summed exactly; the
     per-term floor before the cross-group sum is the
     deterministic-parallel-sum rule."""
-    day = _day_frame(spark, sf_dir, "_uq_wd").persist(StorageLevel.MEMORY_AND_DISK)
+    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     m = day.groupBy(F.expr("(d + 3) % 7").alias("dow_idx")).agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.sum(F.expr("CAST(cents AS DECIMAL(38,0))")).alias("s"),

@@ -25,6 +25,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 
 _DAY_SQL = """
       SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
@@ -34,20 +35,14 @@ _DAY_SQL = """
 """
 
 
-def _day_frame(spark, sf_dir, uq: str):
-    """Daily revenue rollup (d = days since epoch, cents = exact BIGINT);
-    `uq` add-then-drop dummy keeps the PERSISTED plan unique per query
-    (cross-query cache-aliasing rule)."""
+def _day_frame(spark, sf_dir):
+    """Daily revenue rollup (d = days since epoch, cents = exact BIGINT)."""
     o = _t(spark, sf_dir, "orders")
     return (
         o.groupBy(
             F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
         )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
-            F.max(F.lit(0)).alias(uq),
-        )
-        .drop(uq)
+        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
     )
 
 
@@ -91,9 +86,7 @@ def seasonal_decompose_additive(spark, sf_dir):
     (verified round 5), so no sign-split is needed. The day rollup is
     persisted (trend join a/b sides + weekday agg + final join = 4
     consumers, no cross-tree CSE)."""
-    day = _day_frame(spark, sf_dir, "_uq_seasonal").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     a = day.select(F.col("d").alias("ad"), F.col("cents").alias("ac"))
     b = day.select(F.col("d").alias("bd"), F.col("cents").alias("bc"))
     tr = (
@@ -192,9 +185,7 @@ def control_chart_we_rules(spark, sf_dir):
     dv² > k²·(nQ − S²) is an exact int128 cross-multiplication
     (DECIMAL(38,0) ≡ HUGEINT — dv² ≈ 6e24 at sf0.1, ceiling 1e38). One
     persisted dev frame feeds the banded self-join (a/b sides)."""
-    day = _day_frame(spark, sf_dir, "_uq_wechart").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     mom = day.agg(
         F.expr("CAST(COUNT(*) AS DECIMAL(38,0))").alias("n"),
         F.expr("CAST(SUM(CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0))").alias(
@@ -336,7 +327,7 @@ def lttb_downsample_12(spark, sf_dir):
     a production fold would carry prev)."""
     import pandas as pd
 
-    day = _day_frame(spark, sf_dir, "_uq_lttb")
+    day = _day_frame(spark, sf_dir)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = sorted(zip(pdf["d"].tolist(), pdf["cents"].tolist()))
@@ -433,9 +424,7 @@ def seasonal_anomaly_days(spark, sf_dir):
     frame, never a global window). Integer comparisons throughout; the
     residual frame is persisted (rank join a/b + count + final = 4
     consumers)."""
-    day = _day_frame(spark, sf_dir, "_uq_anomaly").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     a = day.select(F.col("d").alias("ad"), F.col("cents").alias("ac"))
     b = day.select(F.col("d").alias("bd"), F.col("cents").alias("bc"))
     tr = (
@@ -459,14 +448,14 @@ def seasonal_anomaly_days(spark, sf_dir):
             " div COUNT(*) AS BIGINT)"
         ).alias("seasonal_cents")
     )
-    r = (
+    r = materialize(
         det.join(seas, ((F.col("d") + 3) % 7) == F.col("wd"))
         .select(
             "d",
             "cents",
             (F.col("det") - F.col("seasonal_cents")).cast("long").alias("resid"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     ra = r.select(
         F.col("d").alias("rd"), F.abs(F.col("resid")).alias("ra")

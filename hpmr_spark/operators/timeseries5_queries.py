@@ -35,6 +35,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.functions.ranking import bounded_rank, global_order_multi
 
@@ -107,19 +108,17 @@ def dickey_fuller_unit_root(spark, sf_dir):
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
             .cast("long")
             .alias("cents"),
-            F.max(F.lit(0)).alias("_uq_df"),
         )
-        .drop("_uq_df")
     )
     tot = day.agg(
         F.sum("cents").cast("long").alias("s"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )
-    e = (
+    e = materialize(
         global_order_multi(day, ["d"], rn_out="rn")
         .crossJoin(F.broadcast(tot))
-        .select("rn", F.expr("(cents - s div n) div 10000").alias("xs"))
-        .persist(StorageLevel.MEMORY_AND_DISK)  # rn-equi lag join, 2 consumers
+        .select("rn", F.expr("(cents - s div n) div 10000").alias("xs")),
+        StorageLevel.MEMORY_AND_DISK,  # rn-equi lag join, 2 consumers
     )
     prev = e.select((F.col("rn") + 1).alias("rn"), F.col("xs").alias("xp"))
     p = e.join(prev, "rn").select(
@@ -188,7 +187,7 @@ _RANSAC_ORACLE = f"""
 def ransac_line_inliers(spark, sf_dir):
     """Deterministic RANSAC line fit over daily revenue — see module
     docstring. Output: one row (cand_i, d1, d2, n_inliers, slope_milli)."""
-    day = (
+    day = materialize(
         _t(spark, sf_dir, "orders")
         .groupBy(
             F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
@@ -197,10 +196,8 @@ def ransac_line_inliers(spark, sf_dir):
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
             .cast("long")
             .alias("cents"),
-            F.max(F.lit(1)).alias("_uq_rs"),
-        )
-        .drop("_uq_rs")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # rank + inlier-count consumers
+        ),
+        StorageLevel.MEMORY_AND_DISK,  # rank + inlier-count consumers
     )
     tot = day.agg(
         F.sum("cents").cast("long").alias("s"),
@@ -300,9 +297,7 @@ def max_drawdown_cents(spark, sf_dir):
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
             .cast("long")
             .alias("cents"),
-            F.max(F.lit(3)).alias("_uq_md"),
         )
-        .drop("_uq_md")
     )
     e = global_order_multi(
         day, ["d"], rn_out="rn", running=[("cents", "max", False, "runmax")]

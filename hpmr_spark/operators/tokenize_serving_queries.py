@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60, spark_sql_hash60
 from hpmr_spark.sources.tables import load_events
 
@@ -252,8 +253,7 @@ def moe_router_load_balance(spark, sf_dir):
 
     Spark shape: one token scan; logits/softmax/argmax all in-row
     (array HOFs, JVM-side); one posexplode (×8) + expert agg. The 8-row
-    census is persisted (totals + final consumers — multi-consumer rule)
-    ⟹ plan_snapshot SKIP."""
+    census is persisted (totals + final consumers — multi-consumer rule)."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select(F.explode(F.split("text", " ")).alias("w"))
     lg = toks.select(
@@ -291,15 +291,12 @@ def moe_router_load_balance(spark, sf_dir):
             )
         ).alias("e", "st")
     ).select("e", F.col("st.p_nano").alias("p_nano"), F.col("st.routed").alias("routed"))
-    g = (
+    g = materialize(
         rows.groupBy("e")
         .agg(
             F.sum("routed").cast("long").alias("n_routed"),
             F.sum("p_nano").cast("long").alias("p_sum"),
-            F.max(F.lit(67)).alias("_uq_moe"),
         )
-        .drop("_uq_moe")
-        .persist()
     )
     tot = g.agg(F.sum("n_routed").cast("long").alias("n"))
     return g.crossJoin(F.broadcast(tot)).select(

@@ -33,6 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
+from hpmr_spark.engine import materialize
 from hpmr_spark.functions.ranking import bounded_rank
 
 _N = 64
@@ -129,16 +130,14 @@ def haar_wavelet_compress(spark, sf_dir):
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
             .cast("long")
             .alias("cents"),
-            F.max(F.lit(2)).alias("_uq_hw"),
         )
-        .drop("_uq_hw")
     )
     last = day.orderBy(F.col("d").desc()).limit(_N)
-    base = (
+    base = materialize(
         bounded_rank(last, "d", "cents", primary_desc=True, out="rd")
         .select((F.lit(_N + 1) - F.col("rd")).cast("long").alias("i"),
-                F.col("cents").alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)  # transform chain + recon + sse
+                F.col("cents").alias("s")),
+        StorageLevel.MEMORY_AND_DISK,  # transform chain + recon + sse
     )
     # Dyadic-grid guard (ADVICE r6): with fewer than _N days the l0 indices
     # start above 1, the pairing levels operate on a partial grid, and the
@@ -169,10 +168,10 @@ def haar_wavelet_compress(spark, sf_dir):
         dets = lvl_rows if dets is None else dets.unionAll(lvl_rows)
         cur = nxt.select("i", "s")
     ap = cur.select(F.col("s").alias("s_ap"))  # 1 row: the total
-    top8 = (
+    top8 = materialize(
         dets.orderBy(F.abs(F.col("d")).desc(), F.col("lvl"), F.col("idx"))
-        .limit(_KEEP)
-        .persist(StorageLevel.MEMORY_AND_DISK)  # output rows + recon terms
+        .limit(_KEEP),
+        StorageLevel.MEMORY_AND_DISK,  # output rows + recon terms
     )
     cov = (
         base.crossJoin(F.broadcast(top8))

@@ -53,6 +53,16 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
+def plan_pins(df: DataFrame) -> dict:
+    """The plan-shape metrics plans_golden.json pins for one built query."""
+    return {
+        "n_shuffles": n_shuffles(df),
+        "broadcast_join": has_broadcast_join(df),
+        "codegen_spans": whole_stage_codegen_spans(df),
+        "n_global_windows": n_single_partition_windows(df),
+    }
+
+
 def simple_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "simple"

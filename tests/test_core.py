@@ -370,6 +370,36 @@ def test_keyed_set_dedup_on_ingest(spark):
     assert s.n_keys() == 100
 
 
+# overwrite gets distinct keys: rows of one batch carry the same order
+@pytest.mark.parametrize(
+    "reducer, rows, want",
+    [
+        (Reducer.sum, [(1, 5), (2, 7), (1, 3)], {1: 8, 2: 7}),
+        (Reducer.max, [(1, 5), (2, 7), (1, 3)], {1: 5, 2: 7}),
+        (PYSUM, [(1, 5), (2, 7), (1, 3)], {1: 8, 2: 7}),
+        (Reducer.overwrite, [(1, 5), (2, 7)], {1: 5, 2: 7}),
+    ],
+)
+def test_empty_map_then_one_epoch(spark, reducer, rows, want):
+    # no pairs: NULL-typed columns, widened by the first batch
+    km = KeyedMap.from_pairs(spark, [], reducer)
+    assert km.df.schema.simpleString() == "struct<key:void,value:void>"
+    assert (km.n_keys(), km.to_dict(), km.get_many([1]), km.has(1)) == (0, {}, {}, False)
+    batch = spark.createDataFrame(rows, "k long, v long")
+    got = km.set_batch(batch, "k", "v", reducer)
+    assert got.df.schema.simpleString() == "struct<key:bigint,value:bigint>"
+    assert got.to_dict() == want
+
+
+def test_empty_set_then_one_batch(spark):
+    s = KeyedSet.from_keys(spark, [])
+    assert s.df.schema.simpleString() == "struct<key:void>"
+    assert (s.n_keys(), s.has(1)) == (0, False)
+    got = s.add_batch(spark.createDataFrame([(1,), (2,), (1,)], "k long"), "k")
+    assert got.df.schema.simpleString() == "struct<key:bigint>"
+    assert got.n_keys() == 2 and got.has(1) and not got.has(3)
+
+
 def test_lookup_join_literal_map(spark):
     # hot-lookup idiom: small map becomes a literal Catalyst map column
     km = KeyedMap.from_pairs(spark, [(1, "a"), (2, "b")])

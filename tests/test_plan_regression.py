@@ -8,7 +8,9 @@ can't see.
 Regenerate intentionally with: python tools/plan_snapshot.py
 (all metrics are measured on ONE AQE-off build per query — codegen markers
 only exist on non-adaptive plans, and a single build means side-effecting
-queries missing from SKIP can't double-execute).
+queries missing from SKIP can't double-execute). As in the snapshot, each
+query is built on a fresh cache and measured before the next one is built,
+so no other query's cached frame shapes its plan.
 """
 
 import json
@@ -18,12 +20,7 @@ import pytest
 
 import hpmr_spark.all_queries  # noqa: F401
 from hpmr_spark.catalog import QUERIES
-from hpmr_spark.plans.explain import (
-    has_broadcast_join,
-    n_shuffles,
-    n_single_partition_windows,
-    whole_stage_codegen_spans,
-)
+from hpmr_spark.plans.explain import plan_pins
 
 GOLDEN_PATH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans_golden.json")
 
@@ -36,44 +33,45 @@ def golden():
 
 
 @pytest.fixture(scope="module")
-def built(spark, sf_dir, golden):
-    """One AQE-off build per golden query, shared by every gate below."""
+def measured(spark, sf_dir, golden):
+    """The pins of one AQE-off build per golden query, shared by every gate
+    below; each build starts on a fresh cache."""
     orig = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    dfs = {}
+    pins = {}
     try:
         for name, expect in golden.items():
             if "error" in expect:
                 continue
-            dfs[name] = QUERIES[name](spark, sf_dir)
-        yield dfs
+            spark.catalog.clearCache()
+            pins[name] = plan_pins(QUERIES[name](spark, sf_dir))
+        yield pins
     finally:
+        spark.catalog.clearCache()
         spark.conf.set("spark.sql.adaptive.enabled", orig)
 
 
-def test_no_shuffle_regressions(built, golden):
+def test_no_shuffle_regressions(measured, golden):
     worse = {}
-    for name, df in built.items():
+    for name, got in measured.items():
         expect = golden[name]
-        got_shuffles = n_shuffles(df)
-        if got_shuffles > expect["n_shuffles"]:
-            worse[name] = (expect["n_shuffles"], got_shuffles)
-        if expect["broadcast_join"] and not has_broadcast_join(df):
+        if got["n_shuffles"] > expect["n_shuffles"]:
+            worse[name] = (expect["n_shuffles"], got["n_shuffles"])
+        if expect["broadcast_join"] and not got["broadcast_join"]:
             worse[name] = ("broadcast", "lost")
     assert not worse, f"plan regressions: {worse}"
 
 
-def test_no_codegen_span_loss(built, golden):
+def test_no_codegen_span_loss(measured, golden):
     """Whole-stage codegen must not disappear from any pinned plan (spans
     are measured AQE-off, where the formatted plan carries codegen ids)."""
     worse = {}
-    for name, df in built.items():
+    for name, got in measured.items():
         expect = golden[name]
         if expect.get("codegen_spans", 0) == 0:
             continue
-        got = whole_stage_codegen_spans(df)
-        if got < expect["codegen_spans"]:
-            worse[name] = (expect["codegen_spans"], got)
+        if got["codegen_spans"] < expect["codegen_spans"]:
+            worse[name] = (expect["codegen_spans"], got["codegen_spans"])
     assert not worse, f"codegen span loss: {worse}"
 
 
@@ -106,7 +104,7 @@ MIGRATED_FACT_QUERIES = [
 ]
 
 
-def test_no_global_window_on_fact(built, golden):
+def test_no_global_window_on_fact(measured, golden):
     """ZERO single-partition windows anywhere: round 3 migrated every
     fact-scale Window.orderBy to functions/ranking.py's two-pass bucketed
     forms and rewrote every bounded-frame window (post-LIMIT re-ranks,
@@ -115,14 +113,14 @@ def test_no_global_window_on_fact(built, golden):
     one (the runtime signature is WindowExec's "No Partition Defined …
     single partition" warning; a full selfcheck sweep emits zero)."""
     worse = {}
-    for name, df in built.items():
+    for name, pins in measured.items():
         pinned = golden[name].get("n_global_windows")
-        got = n_single_partition_windows(df)
+        got = pins["n_global_windows"]
         if got > 0 or (pinned is not None and pinned > 0):
             worse[name] = (pinned, got)
     assert not worse, f"single-partition windows found: {worse}"
     for name in MIGRATED_FACT_QUERIES:
-        if name in built:
-            assert n_single_partition_windows(built[name]) == 0, (
+        if name in measured:
+            assert measured[name]["n_global_windows"] == 0, (
                 f"{name} regrew a single-partition window"
             )
