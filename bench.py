@@ -191,6 +191,7 @@ def main() -> int:
     from __spark_entry__ import queries
 
     from hpmr_spark.engine import get_spark
+    from hpmr_spark.observe import observe
 
     cond_start = _machine_conditions()
     spark = get_spark("hpmr-bench")
@@ -231,26 +232,13 @@ def main() -> int:
     )
     warmup_sec = round(time.time() - t_warm, 3)
 
-    timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        t0 = time.time()
-        df = qs[name](spark, SF_DIR)
-        df.write.mode("overwrite").format("noop").save()
-        timings[name] = round(time.time() - t0, 3)
+    def walls(names: list[str]) -> dict[str, float]:
+        """Build + noop-sink wall of each query, run in list order."""
+        return {name: round(observe(spark, lambda: qs[name](spark, SF_DIR)).wall_s, 3) for name in names}
 
-    extra: dict[str, float] = {}
-    for name in BENCH_EXTRA:
-        t0 = time.time()
-        df = qs[name](spark, SF_DIR)
-        df.write.mode("overwrite").format("noop").save()
-        extra[name] = round(time.time() - t0, 3)
-
-    warm_extra: dict[str, float] = {}
-    for name in BENCH_WARM_EXTRA:
-        t0 = time.time()
-        df = qs[name](spark, SF_DIR)
-        df.write.mode("overwrite").format("noop").save()
-        warm_extra[name] = round(time.time() - t0, 3)
+    timings = walls(BENCH_QUERIES)
+    extra = walls(BENCH_EXTRA)
+    warm_extra = walls(BENCH_WARM_EXTRA)
 
     total = round(sum(timings.values()), 3)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]

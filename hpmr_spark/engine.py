@@ -23,6 +23,10 @@ of one per-process root that is removed when the process exits, as hpmr's
 containers free their storage when destroyed (src/dist_map.h). Cached frames
 have one as well: ``materialize`` persists a frame under the registered query
 being built, so one query's cache entry is never read by another.
+
+Measurement lives in ``hpmr_spark.observe``: the jobs, tasks and task times of
+a build or a run are read from the status store this session keeps, with no
+event log.
 """
 
 from __future__ import annotations
@@ -45,11 +49,8 @@ def session_builder(
     app_name: str = "hpmr-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    event_log_dir: str | None = None,
 ) -> SparkSession.Builder:
-    """Builder with engine defaults; caller may override before getOrCreate.
-    ``event_log_dir`` turns on Spark event logging into that directory (the
-    probe tools parse it for task times)."""
+    """Builder with engine defaults; caller may override before getOrCreate."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         # SPARK_GRAFT_MASTER exists for the partition-invariance sweep
@@ -61,7 +62,7 @@ def session_builder(
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", max(2 * cpus, 8))
         )
-    b = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -90,9 +91,6 @@ def session_builder(
         # imported from that PYTHONPATH, so it works from any cwd too
         .config("spark.python.daemon.module", "hpmr_spark.pydaemon")
     )
-    if event_log_dir is not None:
-        b = b.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", event_log_dir)
-    return b
 
 
 _scratch_root: str | None = None
@@ -160,22 +158,3 @@ def materialize(
 
 def get_spark(app_name: str = "hpmr-spark", **kwargs) -> SparkSession:
     return session_builder(app_name, **kwargs).getOrCreate()
-
-
-def count_jobs(spark: SparkSession, fn):
-    """Run ``fn()`` under a fresh job group and return ``(fn(), n)``, where n
-    is the number of Spark jobs it launched on this thread — e.g. the jobs a
-    query runs while its DataFrame is being built. Jobs Spark starts under
-    their own group (streaming micro-batches) are not counted."""
-    import uuid
-
-    sc = spark.sparkContext
-    group, prev = f"count-jobs-{uuid.uuid4().hex}", sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    # the status store is fed by the listener bus; drain it before reading
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))

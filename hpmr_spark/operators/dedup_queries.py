@@ -609,10 +609,13 @@ def dedup_threshold_sweep(spark, sf_dir):
     corpus, the exact path carries a hard SWEEP_N_CEILING (1M docs): past
     it the query raises with a routing message to dedup_minhash_lsh
     rather than silently running a quadratic join (the
-    GEMM_N_CEILING/cosine_pairs_auto discipline). One bounded count() at
-    build enforces it (⟹ plan_snapshot SKIP)."""
+    GEMM_N_CEILING/cosine_pairs_auto discipline). The documents footer
+    declares n, so the guard runs no job; an unknown footer costs one
+    bounded count()."""
     docs = _t(spark, sf_dir, "documents")
-    n_docs = docs.count()
+    n_docs = table_rows(sf_dir, "documents")
+    if n_docs is None:
+        n_docs = docs.count()
     if n_docs > SWEEP_N_CEILING:
         raise ValueError(
             f"dedup_threshold_sweep: corpus has {n_docs} docs > "

@@ -182,7 +182,7 @@ def token_bucket_replay(spark, sf_dir):
     per-row arithmetic is trivial integer work; the measured cost was
     the Python boundary itself — ~32 ms PER GROUP of Arrow round-trip +
     pandas construction, 32 s of task-time for ~1k users at sf0.1
-    (tools/tasktime_rank.py). The in-row fold is pure codegen
+    (task-time ranking, now tools/observe.py). The in-row fold is pure codegen
     (task-time ~1 s), needs no explicit repartition (the r11
     AQE-coalescing workaround existed only to spread pandas groups),
     and holds the same O(events-per-user) worker memory applyInPandas

@@ -12,6 +12,7 @@ from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.functions.ranking import exact_ntile, global_row_number
 from hpmr_spark.functions.text import tokens
 from hpmr_spark.functions.vectors import sql_dot
+from hpmr_spark.sources.tables import table_rows
 
 DIMS = 64
 
@@ -103,7 +104,9 @@ def text_tfidf_scaled(spark, sf_dir):
     toks = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = toks.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
-    n_docs = d.count()
+    n_docs = table_rows(sf_dir, "documents")
+    if n_docs is None:  # unknown footer: one bounded count job
+        n_docs = d.count()
     idf = dfreq.select(
         "tok", F.floor(F.lit(n_docs * 1000) / F.col("df")).alias("idf_scaled")
     )

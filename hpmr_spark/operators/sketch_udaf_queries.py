@@ -17,6 +17,7 @@ pattern, CLAUDE.md); sampling is content-hash ranked, never random.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import register, _t
@@ -58,19 +59,19 @@ def pandas_udaf_median_qty(spark, sf_dir):
     sequence — for 100 TB groups switch to percentile_approx or the
     two-level (group, shard) pre-reduce; the UDAF shape itself is the
     honest holistic path. Built lazily (session-less import rule)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf, PandasUDFType
+    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("bigint", PandasUDFType.GROUPED_AGG)
-    def median_cents(v: pd.Series):
+    # Series -> scalar type hints make these grouped-aggregate UDFs
+    @pandas_udf("bigint")
+    def median_cents(v: pd.Series) -> int:
         a = v.sort_values().to_numpy()
         return int(a[(len(a) + 1) // 2 - 1])
 
     # Spark disallows mixing pandas and JVM aggregates in one .agg()
     # (INVALID_PANDAS_UDF_PLACEMENT), so the row count is a second pandas
     # UDAF — both run in the same grouped Arrow pass.
-    @pandas_udf("bigint", PandasUDFType.GROUPED_AGG)
-    def n_values(v: pd.Series):
+    @pandas_udf("bigint")
+    def n_values(v: pd.Series) -> int:
         return len(v)
 
     li = _t(spark, sf_dir, "lineitem").select(

@@ -142,7 +142,7 @@ def unigram_viterbi_segment(spark, sf_dir):
     )
     # LocalRelation literal (r12): createDataFrame of the python list built
     # a PythonRDD whose broadcast-build job launched 32 python workers
-    # (~60 s task-time cold for 27 rows — tools/tasktime_rank.py finding)
+    # (~60 s task-time cold for 27 rows — a task-time ranking finding)
     grid = values_df(spark, _PAIRS, "j int, i int")
     pieces = (
         words.crossJoin(F.broadcast(grid))

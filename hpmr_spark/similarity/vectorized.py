@@ -156,7 +156,7 @@ def threshold_pairs_gemm(
         "id", "vec", "bi", "bj", F.lit(1).alias("side")
     )
 
-    def compare(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def compare(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"),
                               "id_b": pd.Series(dtype="int64")})
         l = pdf[pdf["side"] == 0]

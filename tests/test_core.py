@@ -280,7 +280,7 @@ def test_get_many_matches_isin(spark, pairs, keys):
 
 
 def test_get_many_empty_runs_no_job(spark):
-    from hpmr_spark.engine import count_jobs
+    from hpmr_spark.observe import count_jobs
 
     km = KeyedMap.from_pairs(spark, [(1, 2)])
     got, n_jobs = count_jobs(spark, lambda: km.get_many([]))
@@ -324,7 +324,7 @@ def test_set_batch_beats_user_order_col(spark):
 def test_set_batch_builds_without_a_job(spark):
     # Every epoch stamps the state order 0 and the batch order 1, so
     # building an epoch — even over a user order column — runs no job.
-    from hpmr_spark.engine import count_jobs
+    from hpmr_spark.observe import count_jobs
 
     src = spark.createDataFrame([("a", 1, 10**15), ("b", 7, 3)], ["k", "v", "ord"])
     km = KeyedMap.from_df(src, "k", "v", Reducer.overwrite, order_col="ord")

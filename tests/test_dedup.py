@@ -330,6 +330,24 @@ def test_gemm_ceiling_refuses_weak_tau_at_scale(spark):
     )
 
 
+def test_pandas_udfs_are_declared_by_type_hints(spark, sf_dir):
+    """Grouped-agg and grouped-map pandas UDFs take their eval type from
+    type hints: neither the deprecated PandasUDFType form nor a half-typed
+    function (which PySpark cannot infer from) is left."""
+    import warnings
+
+    from __spark_entry__ import queries
+    from hpmr_spark.similarity.lsh import cosine_pairs_auto
+
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", message=".*preferred to specify type hints")
+        warnings.filterwarnings("error", message="Cannot infer the eval type")
+        assert queries()["pandas_udaf_median_qty"](spark, sf_dir).collect()
+        emb = _clustered_embeddings(spark, n_clusters=4, per_cluster=5)
+        # weak tau below the ceiling: the exact GEMM branch
+        assert cosine_pairs_auto(emb, threshold=0.5, n_rows=1000).collect()
+
+
 def test_threshold_sweep_ceiling_routes_to_lsh(spark, sf_dir, monkeypatch):
     """Past SWEEP_N_CEILING the exact sweep must refuse loudly with an LSH
     routing message, never silently run the quadratic candidate join."""

@@ -10,7 +10,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from hpmr_spark.engine import count_jobs
+from hpmr_spark.observe import count_jobs
 from hpmr_spark.sources.tables import (
     TABLES,
     footer,
@@ -146,3 +146,12 @@ def test_rewritten_file_seen_by_next_load(spark, tmp_path):
     df = load_table(spark, d, "region")
     assert df.columns == ["k", "name"]
     assert sorted(r["name"] for r in df.collect()) == ["a", "b", "c"]
+
+
+@pytest.mark.parametrize("name", ["text_tfidf_scaled", "dedup_threshold_sweep"])
+def test_footer_sized_query_builds_run_no_job(spark, sf_dir, name):
+    # n_docs comes from the documents footer, not from a count() at build
+    from __spark_entry__ import queries
+
+    _, n_jobs = count_jobs(spark, lambda: queries()[name](spark, sf_dir))
+    assert n_jobs == 0

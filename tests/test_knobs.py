@@ -26,11 +26,8 @@ def test_package_reads_only_session_knobs():
 
 def test_only_the_scratch_owner_makes_temp_dirs():
     # scratch paths come from engine.scratch_dir, which removes them at exit
-    users = {
-        str(path.relative_to(ROOT))
-        for path in (ROOT / "hpmr_spark").rglob("*.py")
-        if "tempfile" in path.read_text()
-    }
+    paths = [*(ROOT / "hpmr_spark").rglob("*.py"), *(ROOT / "tools").glob("*.py"), ROOT / "bench.py"]
+    users = {str(path.relative_to(ROOT)) for path in paths if "tempfile" in path.read_text()}
     assert users == {"hpmr_spark/engine.py"}
 
 

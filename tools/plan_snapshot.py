@@ -22,7 +22,7 @@ GOLDEN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))
 
 SKIP = {
     # each build runs work before any action (stream runs, collects,
-    # writes, eager checkpoints); tools/build_census.py counts its jobs
+    # writes, eager checkpoints); tools/observe.py counts its jobs
     "streaming_statestore_read",  # runs the checkpointed stream at build
     "sql_scripting_isqrt_loop",  # SQL script executes eagerly at build
     "cuckoo_feasibility_census",  # iterative CC: checkpoints at build
@@ -42,7 +42,6 @@ SKIP = {
     "dedup_cluster_components",  # iterative: checkpoints at build
     "sketch_countmin_status",  # driver-side sketch build + collect
     "streaming_dedup_against_corpus",  # runs the stream at build
-    "text_tfidf_scaled",  # driver-side count during build
     "sink_orc_roundtrip",  # writes the sink at build
     "source_binaryfile_fingerprints",  # writes payload files at build
     "partition_pruning_proof",  # writes partitioned parquet + inputFiles()
@@ -74,7 +73,6 @@ SKIP = {
     "semdedup_centroid_prune",  # integer-Lloyd collects at build
     "bpe_train_8_merges",  # 8 argmax collects at build
     "bpe_apply_compression_report",  # the bpe trainer collects at build
-    "dedup_threshold_sweep",  # bounded ceiling-guard count() at build
     "grid_dbscan_clusters",  # iterative components: localCheckpoints at build
     "streaming_ewma_user_state",  # runs the stream at build
     "brandes_betweenness_trade",  # eager localCheckpoints on the hop frames

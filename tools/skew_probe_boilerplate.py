@@ -6,8 +6,9 @@ Synthesizes n docs (default 1M) where HOT_FRAC of them share one identical
 (boilerplate = the hottest fingerprints). Runs the committed query body
 (footer declares n > BROADCAST_MAX_DOCS, so the scale merge path is
 exercised) and, for comparison, the r11 `Window.partitionBy(h)` shape, each
-to the noop sink, and reports wall plus per-stage task-duration max/median
-parsed from the Spark event log.
+to the noop sink through hpmr_spark.observe, and reports wall plus
+per-stage task-duration max/median from Spark's status store. The corpus is
+written under engine.scratch_dir and removed at exit.
 
 AQE skew-join thresholds are lowered for the probe (the planted hot key is
 ~30 MB at 1M docs; production's default 256 MB threshold corresponds to the
@@ -21,12 +22,9 @@ Never run while another Spark JVM is using the machine (BASELINE.md).
 
 from __future__ import annotations
 
-import json
 import os
 import statistics
 import sys
-import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -40,6 +38,9 @@ def synth_hot_docs(spark, n: int, vocab_size: int = 4096):
     # 30% of docs start with the same 5 tokens (one planted boilerplate
     # segment); all other tokens are drawn from a vocab_size vocab so the
     # remaining segments are near-unique.
+    def word(i):
+        return F.concat(F.lit("w"), F.pmod(F.xxhash64(F.col("id") * 1000 + i), F.lit(vocab_size)).cast("string"))
+
     return spark.range(n).select(
         F.col("id").alias("doc_id"),
         F.concat_ws(
@@ -47,28 +48,8 @@ def synth_hot_docs(spark, n: int, vocab_size: int = 4096):
             F.when(
                 F.col("id") % 10 < int(HOT_FRAC * 10),
                 F.array(*[F.lit("hotnav") for _ in range(_SEG)]),
-            ).otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(_SEG)),
-                    lambda i: F.concat(
-                        F.lit("w"),
-                        (
-                            (F.xxhash64(F.col("id") * 1000 + i) % vocab_size + vocab_size)
-                            % vocab_size
-                        ).cast("string"),
-                    ),
-                )
-            ),
-            F.transform(
-                F.sequence(F.lit(_SEG + 1), F.lit(60)),
-                lambda i: F.concat(
-                    F.lit("w"),
-                    (
-                        (F.xxhash64(F.col("id") * 1000 + i) % vocab_size + vocab_size)
-                        % vocab_size
-                    ).cast("string"),
-                ),
-            ),
+            ).otherwise(F.transform(F.sequence(F.lit(1), F.lit(_SEG)), word)),
+            F.transform(F.sequence(F.lit(_SEG + 1), F.lit(60)), word),
         ).alias("text"),
     )
 
@@ -153,67 +134,15 @@ def body_window(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-def _iter_event_lines(eventlog_dir: str):
-    """Yield JSON lines from every event file (Spark 4 v2 layout: a
-    directory per app holding zstd-compressed events_* files)."""
-    for root, _dirs, files in os.walk(eventlog_dir):
-        for fname in sorted(files):
-            if not fname.startswith("events"):
-                continue
-            path = os.path.join(root, fname)
-            if fname.endswith(".zstd"):
-                import subprocess
-
-                out = subprocess.run(
-                    ["zstd", "-dc", path], capture_output=True, check=True
-                )
-                yield from out.stdout.decode("utf-8").splitlines()
-            else:
-                with open(path) as fh:
-                    yield from fh
-
-
-def stage_stats(eventlog_dir: str) -> list[dict]:
-    """Per-stage task-duration stats from the event log(s)."""
-    per_stage: dict[int, list[float]] = {}
-    if True:
-        for line in _iter_event_lines(eventlog_dir):
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if ev.get("Event") == "SparkListenerTaskEnd":
-                ti = ev["Task Info"]
-                dur = (ti["Finish Time"] - ti["Launch Time"]) / 1000.0
-                per_stage.setdefault(ev["Stage ID"], []).append(dur)
-    rows = []
-    for sid, durs in sorted(per_stage.items()):
-        durs.sort()
-        rows.append(
-            {
-                "stage": sid,
-                "n_tasks": len(durs),
-                "sum_s": round(sum(durs), 2),
-                "median_s": round(statistics.median(durs), 3),
-                "max_s": round(max(durs), 3),
-                "max_over_median": round(max(durs) / max(statistics.median(durs), 1e-9), 1),
-            }
-        )
-    return rows
-
-
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     which = sys.argv[2] if len(sys.argv) > 2 else "both"
 
-    tmp = tempfile.mkdtemp(prefix="boiler_skew_")
-    evdir = os.path.join(tmp, "eventlog")
-    os.makedirs(evdir, exist_ok=True)
-
-    from hpmr_spark.engine import session_builder
+    from hpmr_spark.engine import scratch_dir, session_builder
+    from hpmr_spark.observe import observe
 
     spark = (
-        session_builder("boiler-skew-probe", event_log_dir=evdir)
+        session_builder("boiler-skew-probe")
         # probe-scale skew thresholds: the planted hot key is ~30 MB at 1M
         # docs; production defaults (256 MB) correspond to the same hot-key
         # fraction at corpus scale
@@ -223,23 +152,27 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("WARN")
 
-    docs = synth_hot_docs(spark, n)
-    docs.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-    print(f"corpus: {n} docs ({HOT_FRAC:.0%} carry the hot segment) at {tmp}")
+    corpus = scratch_dir("boiler_skew")
+    synth_hot_docs(spark, n).write.mode("overwrite").parquet(f"{corpus}/documents.parquet")
+    print(f"corpus: {n} docs ({HOT_FRAC:.0%} carry the hot segment)")
 
     bodies = {"join": body_join, "window": body_window}
-    names = [which] if which in bodies else ["join", "window"]
-    for name in names:
-        spark.sparkContext.setJobDescription(f"boiler-skew:{name}")
-        t0 = time.time()
-        bodies[name](spark, tmp).write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-        print(f"\n== {name}: wall {wall:.1f}s")
+    for name in [which] if which in bodies else ["join", "window"]:
+        rec = observe(spark, lambda: bodies[name](spark, corpus))
+        print(f"\n== {name}: wall {rec.wall_s:.1f}s")
+        # per-stage task-duration spread of the heavy stages
+        for sid, durs in sorted(rec.stage_task_s.items()):
+            med = statistics.median(durs)
+            if len(durs) > 1 and sum(durs) > 1:
+                print({
+                    "stage": sid,
+                    "n_tasks": len(durs),
+                    "sum_s": round(sum(durs), 2),
+                    "median_s": round(med, 3),
+                    "max_s": round(max(durs), 3),
+                    "max_over_median": round(max(durs) / max(med, 1e-9), 1),
+                })
     spark.stop()
-    time.sleep(1)
-    for row in stage_stats(evdir):
-        if row["n_tasks"] > 1 and row["sum_s"] > 1:
-            print(row)
     return 0
 
 
