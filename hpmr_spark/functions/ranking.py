@@ -29,10 +29,9 @@ work distributes by key range, never collapses to one worker):
 
 Skew note: equal-width buckets keep correctness under ANY distribution
 (ranks never depend on bucket balance) but lose parallelism if the leading
-key is pathologically concentrated; for such keys swap step 1 for sampled
-cut-points (deterministic literals) — same algebra. The leading key must be
-numeric and non-null; ties on it always land in one bucket, so prefix
-offsets stay exact.
+key is pathologically concentrated: most rows then share one bucket and
+one window task. The leading key must be numeric and non-null; ties on it
+always land in one bucket, so prefix offsets stay exact.
 """
 
 from __future__ import annotations
@@ -58,19 +57,15 @@ def _with_bucket(
     first_key: Column,
     descending: bool,
     num_buckets: int,
-    cutpoints: list[float] | None = None,
 ) -> DataFrame:
     """Tag rows with their ordered bucket id (0 = first in sort order).
 
-    Default: equal-width cut of the leading key's exact [min, max],
-    broadcast as a 1-row aggregate — fully in-plan, correct under any
-    distribution, but a pathologically concentrated key starves
-    parallelism. `cutpoints` (ascending literals, e.g. from
-    `sampled_cutpoints`) switches to boundary comparison — bucket =
-    |cutpoints strictly below the key| — which balances skewed
-    distributions. Either way the bucket is a pure row-value function, so
-    every consumer of the frame computes the same assignment (ties on the
-    leading key always share a bucket, keeping prefix offsets exact).
+    Equal-width cut of the leading key's exact [min, max], broadcast as a
+    1-row aggregate — fully in-plan, correct under any distribution, but a
+    pathologically concentrated key starves parallelism. The bucket is a
+    pure row-value function, so every consumer of the frame computes the
+    same assignment (ties on the leading key always share a bucket,
+    keeping prefix offsets exact).
 
     NULL leading keys (ADVICE r4): a NULL key would propagate NULL through
     the bucket arithmetic and be silently DROPPED by the downstream
@@ -80,16 +75,6 @@ def _with_bucket(
     in-bucket window orders them, so the total order stays consistent
     with a plain ORDER BY."""
     k = first_key.cast("double")
-    if cutpoints is not None:
-        asc_bkt = None
-        for cp in sorted(cutpoints):
-            term = (k > F.lit(float(cp))).cast("int")
-            asc_bkt = term if asc_bkt is None else asc_bkt + term
-        asc_bkt = F.lit(0) if asc_bkt is None else asc_bkt
-        asc_bkt = F.when(k.isNull(), F.lit(0)).otherwise(asc_bkt)
-        n = len(cutpoints)
-        bkt = (F.lit(n) - asc_bkt) if descending else asc_bkt
-        return df.withColumn(_BKT, bkt.cast("int"))
     bounds = df.agg(
         F.min(first_key).cast("double").alias(_MN),
         F.max(first_key).cast("double").alias(_MX),
@@ -108,25 +93,6 @@ def _with_bucket(
         .withColumn(_BKT, bkt)
         .drop(_MN, _MX)
     )
-
-
-def sampled_cutpoints(
-    df: DataFrame, col: str, num_buckets: int = DEFAULT_BUCKETS
-) -> list[float]:
-    """Equi-depth bucket boundaries for a SKEWED leading key, as
-    deterministic literals: Greenwald-Khanna approxQuantile (no sampling
-    randomness — the sketch is deterministic for a given input order) at
-    the interior quantiles, deduplicated. Collected once at build time
-    (≤ num_buckets doubles) and embedded as literals, so every plan
-    consumer sees identical boundaries. Boundary precision only affects
-    BALANCE, never correctness — ranks are exact for any bucketing."""
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    cps = df.stat.approxQuantile(col, probs, 0.001)
-    out = []
-    for cp in cps:
-        if not out or cp > out[-1]:
-            out.append(float(cp))
-    return out
 
 
 def _order_exprs(order_cols, descending: bool) -> list[Column]:
@@ -210,7 +176,6 @@ def global_order_multi(
     running=(),
     descending: bool = False,
     num_buckets: int = DEFAULT_BUCKETS,
-    cutpoints: list[float] | None = None,
 ) -> DataFrame:
     """Fused multi-output two-pass ordering: one bucket tagging, ONE
     per-bucket window pass, ONE per-bucket totals aggregate, and ONE
@@ -222,7 +187,7 @@ def global_order_multi(
     multi-output form the single-output wrappers below delegate to."""
     specs = list(running)
     first = _as_col(order_cols[0])
-    p = _with_bucket(df, first, descending, num_buckets, cutpoints=cutpoints)
+    p = _with_bucket(df, first, descending, num_buckets)
     oexprs = _order_exprs(order_cols, descending)
     w = Window.partitionBy(_BKT).orderBy(*oexprs)
 

@@ -24,19 +24,13 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.ranking import global_order_multi
-
-_DAY_SQL = """
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1
-"""
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 _BINSEG_ORACLE = f"""
-    WITH day AS MATERIALIZED ({_DAY_SQL}),
+    WITH day AS MATERIALIZED ({SQL_DAILY_REVENUE}),
     e AS MATERIALIZED (
       SELECT d, cents,
              ROW_NUMBER() OVER (ORDER BY d) AS rn,
@@ -84,19 +78,7 @@ def binseg_changepoints_revenue(spark, sf_dir):
     """Two-level binary segmentation of daily revenue — see module
     docstring. Output: 3 rows (segment 0 = full series, 1 = left half,
     2 = right half) with the split's rank/day/score."""
-    day = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("long")
-            .alias("d")
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
+    day = daily_revenue(spark, sf_dir)
     e = materialize(global_order_multi(
         day.select("d", "cents"),
         ["d"],

@@ -24,42 +24,18 @@ N_BUCKETS = 8
 _prepared: set = set()
 
 
-def _writable_table_base(spark: SparkSession) -> str | None:
-    """None when the session warehouse dir is writable (managed tables work);
-    otherwise a fresh tmp dir to host EXTERNAL bucketed tables.
-    `spark.sql.warehouse.dir` is a static conf — it cannot be repointed on a
-    live session — but `.option("path", ...)` per table can, which is the
-    read-only-cwd escape hatch."""
-    import os
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    try:
-        os.makedirs(warehouse, exist_ok=True)
-        probe = os.path.join(warehouse, ".hpmr_write_probe")
-        with open(probe, "w"):
-            pass
-        os.remove(probe)
-        return None
-    except OSError:
-        return scratch_dir("warehouse")
-
-
 def prepare_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize lineitem+orders bucketed by orderkey (once per sf_dir)."""
-    import shutil
-
+    """Materialize lineitem+orders bucketed by orderkey as external tables
+    under this process's scratch dir: nothing is written to the session's
+    warehouse dir, and the files go when the process exits. Once per
+    SparkContext and sf_dir: the tables live in the context's in-memory
+    catalog, which a later session in the same process starts without."""
     tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
     li_name, o_name = f"li_bkt_{tag}", f"o_bkt_{tag}"
-    if (sf_dir, "done") in _prepared:
+    done = (spark.sparkContext.applicationId, sf_dir)
+    if done in _prepared:
         return li_name, o_name
-    alt_base = _writable_table_base(spark)
-    # idempotent across sessions: the in-memory catalog forgets tables but
-    # their warehouse directories persist — clear both
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for name in (li_name, o_name):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        if alt_base is None:
-            shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+    base = scratch_dir("warehouse", key=tag)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -67,17 +43,21 @@ def prepare_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         "o_orderkey", "o_orderpriority"
     )
     for df, name, key in ((li, li_name, "l_orderkey"), (o, o_name, "o_orderkey")):
-        writer = df.write.mode("overwrite").bucketBy(N_BUCKETS, key).sortBy(key)
-        if alt_base is not None:
-            writer = writer.option("path", f"{alt_base}/{name}")
-        writer.saveAsTable(name)
-    _prepared.add((sf_dir, "done"))
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            df.write.mode("overwrite")
+            .bucketBy(N_BUCKETS, key)
+            .sortBy(key)
+            .option("path", f"{base}/{name}")
+            .saveAsTable(name)
+        )
+    _prepared.add(done)
     return li_name, o_name
 
 
 def _plain_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fallback when bucketed tables can't be materialized (read-only cwd /
-    warehouse): same result via a plain shuffle join."""
+    """Fallback when the bucketed tables can't be written: same result via a
+    plain shuffle join."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -100,7 +80,7 @@ def _plain_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         li_name, o_name = prepare_bucketed(spark, sf_dir)
-    except Exception:  # pragma: no cover — read-only warehouse fallback
+    except Exception:  # pragma: no cover — unwritable scratch fallback
         return _plain_join_revenue(spark, sf_dir)
     li = spark.table(li_name)
     # merge hint: at test scale Catalyst would broadcast the small side and

@@ -30,10 +30,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.functions.littables import values_df
 from hpmr_spark.functions.hashing import sql_hash60, spark_sql_hash60
 from hpmr_spark.operators.mleval_queries import _SCORED_SQL, _scored
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 # ---------------------------------------------------------------------------
 # Cascade routing frontier
@@ -168,12 +169,7 @@ def _kadane_fold(el, is_spark: bool) -> str:
 
 
 _KAD_ORACLE = f"""
-    WITH days AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY CAST(o_orderdate AS DATE)
-    ),
+    WITH days AS ({SQL_DAILY_REVENUE}),
     arr AS (SELECT list(cents ORDER BY d) AS xs FROM days),
     ds AS (
       SELECT len(xs) AS nd,
@@ -204,12 +200,7 @@ def kadane_max_subarray(spark, sf_dir):
     Spark shape: one fact-keyed day agg collapses to the
     calendar-bounded delta array (~2400 at EVERY corpus scale); the
     scan is one fold. Scale-free."""
-    o = _t(spark, sf_dir, "orders")
-    arr = o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-        ).alias("cents")
-    ).agg(
+    arr = daily_revenue(spark, sf_dir).agg(
         F.expr(
             "transform(array_sort(collect_list(struct(d, cents))),"
             " p -> p.cents)"

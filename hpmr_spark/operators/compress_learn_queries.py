@@ -28,6 +28,12 @@ from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
+from hpmr_spark.sources.derived import (
+    SQL_UNDIRECTED_CTE,
+    trade_edges,
+    trade_pairs,
+    undirected,
+)
 
 # ------------------------------------------------------------ Huffman
 
@@ -368,22 +374,8 @@ def perceptron_online_epoch(spark, sf_dir):
 
 # ------------------------------------------------------------ assortativity
 
-_ASSORT_ORACLE = """
-    WITH pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-               AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    und AS (
-      SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS w
-      FROM pe, tot WHERE v * 625 > t AND src <> dst
-    ),
+_ASSORT_ORACLE = f"""
+    WITH {SQL_UNDIRECTED_CTE},
     sym AS (SELECT u AS a, w AS b FROM und UNION ALL SELECT w, u FROM und),
     deg AS (SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS d
             FROM sym GROUP BY a),
@@ -417,30 +409,8 @@ def assortativity_degree_trade(spark, sf_dir):
     expression floored to nanos (the exact-moment discipline). Negative
     values = hubs attach to leaves; the standard graph-mixing summary
     the registry's centrality family lacked."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    pe = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"),
-                 F.col("s_nationkey").alias("dst"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .alias("v")
-        )
-    )
-    pe = materialize(pe)
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(F.least("src", "dst").alias("u"),
-                F.greatest("src", "dst").alias("w"))
-        .distinct()
-    )
+    pe = materialize(trade_pairs(spark, sf_dir))
+    und = undirected(trade_edges(pe))
     sym = materialize(und.select(F.col("u").alias("a"), F.col("w").alias("b")).unionAll(
         und.select(F.col("w").alias("a"), F.col("u").alias("b"))
     ))

@@ -42,6 +42,7 @@ from hpmr_spark.dedup.shingles import SQL_SHINGLE_CTE, shingle_sets
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import MINHASH_A, MINHASH_B, N_PERM, P32, sql_hash60
 from hpmr_spark.functions.ranking import bounded_rank
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 # ---------------------------------------------------------------------------
 # Beam-search decoding over the corpus bigram LM.
@@ -189,13 +190,7 @@ _MP_W = 7  # committed window length (days)
 
 
 _MP_ORACLE = f"""
-    WITH day AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100 AS v
-      FROM orders GROUP BY 1
-    ),
+    WITH day AS (SELECT d, cents // 100 AS v FROM ({SQL_DAILY_REVENUE})),
     win AS MATERIALIZED (
       SELECT a.d,
              CAST(SUM(b.v) AS BIGINT) AS s1,
@@ -247,17 +242,8 @@ def matrix_profile_daily(spark, sf_dir):
     broadcast joins — the quadratic is a constant, not a scale term.
     Zero-variance windows are excluded by a committed integer predicate
     (they have no z-normalization).""".replace("{W}", str(_MP_W))
-    o = _t(spark, sf_dir, "orders")
     day = materialize(
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
-        )
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("v"),
-        ),
+        daily_revenue(spark, sf_dir).select("d", F.expr("cents div 100").alias("v")),
         StorageLevel.MEMORY_AND_DISK,
     )
     a = day.select(F.col("d").alias("ad"))

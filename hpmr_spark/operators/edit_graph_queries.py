@@ -23,6 +23,12 @@ from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
+from hpmr_spark.sources.derived import (
+    SQL_UNDIRECTED_CTE,
+    trade_edges,
+    trade_pairs,
+    undirected,
+)
 
 # ---------------------------------------------------------------- Katz
 
@@ -30,21 +36,7 @@ _KATZ_K = 8  # committed truncation depth
 _KATZ_DEN = 8 ** _KATZ_K  # alpha = 1/8 -> common denominator 8^K
 
 _KATZ_ORACLE = f"""
-    WITH RECURSIVE pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-               AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    und AS (
-      SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS w
-      FROM pe, tot WHERE v * 625 > t AND src <> dst
-    ),
+    WITH RECURSIVE {SQL_UNDIRECTED_CTE},
     sym AS MATERIALIZED (
       SELECT u AS a, w AS b FROM und UNION ALL SELECT w, u FROM und
     ),
@@ -89,30 +81,8 @@ def katz_centrality_trade(spark, sf_dir):
     graph scale each hop is the standard message-passing shuffle); no
     collects, no windows. Complements pagerank (damped stationary) with
     the truncated-walk centrality family."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    pe = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"),
-                 F.col("s_nationkey").alias("dst"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .alias("v")
-        )
-    )
-    pe = materialize(pe)
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(F.least("src", "dst").alias("u"),
-                F.greatest("src", "dst").alias("w"))
-        .distinct()
-    )
+    pe = materialize(trade_pairs(spark, sf_dir))
+    und = undirected(trade_edges(pe))
     sym = materialize(
         und.select(F.col("u").alias("a"), F.col("w").alias("b"))
         .unionAll(und.select(F.col("w").alias("a"), F.col("u").alias("b")))

@@ -35,6 +35,7 @@ from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import sql_hash60, spark_sql_hash60
 from hpmr_spark.functions.ranking import global_order_multi
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 # ---------------------------------------------------------------------------
 # Sliced Wasserstein between label classes
@@ -151,12 +152,9 @@ def sliced_wasserstein_labels(spark, sf_dir):
 # Hodges-Lehmann location estimate
 # ---------------------------------------------------------------------------
 
-_HL_ORACLE = """
+_HL_ORACLE = f"""
     WITH days AS MATERIALIZED (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100 AS x
-      FROM orders GROUP BY CAST(o_orderdate AS DATE)
+      SELECT d, cents // 100 AS x FROM ({SQL_DAILY_REVENUE})
     ),
     pairs AS (
       SELECT a.x + b.x AS w
@@ -196,15 +194,8 @@ def hodges_lehmann_location(spark, sf_dir):
     EVERY corpus scale — persisted, the bounded-rollup pattern), so the
     pair join is a constant ~2.9M rows regardless of corpus size;
     histogram + global_order_multi prefix + argmin. Scale-free."""
-    o = _t(spark, sf_dir, "orders")
     days = materialize(
-        o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("d"))
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("x"),
-        )
+        daily_revenue(spark, sf_dir).select("d", F.expr("cents div 100").alias("x"))
     )
     a = days.select(F.col("d").alias("da"), F.col("x").alias("xa"))
     b = days.select(F.col("d").alias("db"), F.col("x").alias("xb"))
@@ -236,12 +227,9 @@ def hodges_lehmann_location(spark, sf_dir):
 # Cliff's delta
 # ---------------------------------------------------------------------------
 
-_CD_ORACLE = """
+_CD_ORACLE = f"""
     WITH days AS MATERIALIZED (
-      SELECT CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS ed,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100 AS x
-      FROM orders GROUP BY CAST(o_orderdate AS DATE)
+      SELECT d AS ed, cents // 100 AS x FROM ({SQL_DAILY_REVENUE})
     ),
     wd AS (SELECT x FROM days WHERE (ed + 3) % 7 < 5),
     we AS (SELECT x FROM days WHERE (ed + 3) % 7 >= 5),
@@ -275,17 +263,9 @@ def cliffs_delta_effect(spark, sf_dir):
     Spark shape: one fact-keyed day agg (persisted — both group sides
     and the counts consume it), one bounded ~1700×680 cross pair count.
     Scale-free (calendar-bounded at every corpus size)."""
-    o = _t(spark, sf_dir, "orders")
     days = materialize(
-        o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("d"))
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("x"),
-        )
-        .select(
-            F.expr("datediff(d, DATE '1970-01-01')").alias("ed"), "x"
+        daily_revenue(spark, sf_dir).select(
+            F.col("d").alias("ed"), F.expr("cents div 100").alias("x")
         )
     )
     wd = days.where(F.expr("(ed + 3) % 7 < 5")).select(

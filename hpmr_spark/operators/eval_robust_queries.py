@@ -41,6 +41,7 @@ from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60, spark_sql_hash60
 from hpmr_spark.functions.ranking import global_order_multi
 from hpmr_spark.operators.mleval_queries import _SCORED_SQL, _scored
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 # ---------------------------------------------------------------------------
 # Youden J optimal threshold
@@ -400,10 +401,7 @@ def _rt_assign(engine_hash, b: str, ed: str) -> str:
 
 _RT_ORACLE = f"""
     WITH days AS MATERIALIZED (
-      SELECT CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS ed,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY CAST(o_orderdate AS DATE)
+      SELECT d AS ed, cents FROM ({SQL_DAILY_REVENUE})
     ),
     obs AS (
       SELECT CAST(SUM(CASE WHEN (ed + 3) % 7 < 5 THEN 1 ELSE 0 END)
@@ -468,17 +466,8 @@ def randomization_test_mean_diff(spark, sf_dir):
     the observed row and the B-fold explode both consume it; the
     bounded-rollup pattern: the B×days frame is ~600k rows at EVERY
     corpus scale, so the test is scale-free)."""
-    o = _t(spark, sf_dir, "orders")
     days = materialize(
-        o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("day"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("long")
-            .alias("cents"),
-        )
-        .select(
-            F.expr("datediff(day, DATE '1970-01-01')").alias("ed"), "cents"
-        )
+        daily_revenue(spark, sf_dir).select(F.col("d").alias("ed"), "cents")
     )
     ina_obs = F.expr("(ed + 3) % 7 < 5")
     obs = days.agg(

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
 from hpmr_spark.operators.mleval_queries import _SCORED_SQL, _scored
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 # ---------------------------------------------------------------------------
 # Equalized-odds fairness audit
@@ -199,12 +200,7 @@ def _ew_fold(is_spark: bool) -> str:
 
 
 _EW_ORACLE = f"""
-    WITH days AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100 AS x
-      FROM orders GROUP BY CAST(o_orderdate AS DATE)
-    ),
+    WITH days AS (SELECT d, cents // 100 AS x FROM ({SQL_DAILY_REVENUE})),
     agg AS (
       SELECT list(x ORDER BY d) AS xs,
              CAST(COUNT(*) AS BIGINT) AS n,
@@ -245,12 +241,8 @@ def ewma_control_chart(spark, sf_dir):
     calendar-bounded array + exact integer moments; the chart walk is
     ONE in-row fold (state: [t, z, pow, breaches, first]). Scale-free
     (the day array is ~2400 at every SF)."""
-    o = _t(spark, sf_dir, "orders")
-    agg = o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-            " div 100"
-        ).alias("x")
+    agg = daily_revenue(spark, sf_dir).select(
+        "d", F.expr("cents div 100").alias("x")
     ).agg(
         F.expr(
             "transform(array_sort(collect_list(struct(d, x))), p -> p.x)"

@@ -1,8 +1,7 @@
 """Round-12 wave 6: brandes_betweenness_trade — exact shortest-path
 betweenness centrality (Freeman 1977; the σ-counting decomposition that
-powers Brandes 2001) on the committed 25-node trade graph (the same
-thresholded edge rule as katz_centrality_trade: undirected edges where a
-nation pair's trade exceeds 1/625 of total).
+powers Brandes 2001) on the committed 25-node trade graph (the
+undirected edges of sources/derived.py).
 
 Method, fully declarative (no per-source BFS loop): walk-count matrices
 W_k = A^k for k = 1..K (K=6 committed hop cap, documented) give both
@@ -23,8 +22,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.engine import materialize
+from hpmr_spark.sources.derived import (
+    SQL_UNDIRECTED_CTE,
+    trade_edges,
+    trade_pairs,
+    undirected,
+)
 
 _BW_K = 6  # hop cap (committed): pairs beyond 6 hops count as disconnected
 
@@ -40,21 +45,7 @@ def _bw_oracle() -> str:
         f"SELECT s, t, {k} AS k, c FROM w{k}" for k in range(1, _BW_K + 1)
     )
     return f"""
-    WITH pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-               AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    und AS (
-      SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS w
-      FROM pe, tot WHERE v * 625 > t AND src <> dst
-    ),
+    WITH {SQL_UNDIRECTED_CTE},
     sym AS MATERIALIZED (
       SELECT u AS a, w AS b FROM und UNION ALL SELECT w, u FROM und
     ),
@@ -89,29 +80,8 @@ def brandes_betweenness_trade(spark, sf_dir):
     the elementwise-ppm-floored dependency sum. Complements the
     registry's pagerank/hits/katz/closeness family with the
     shortest-path-load centrality."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    pe = materialize(
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"),
-                 F.col("s_nationkey").alias("dst"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .alias("v")
-        )
-    )
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(F.least("src", "dst").alias("u"),
-                F.greatest("src", "dst").alias("w"))
-        .distinct()
-    )
+    pe = materialize(trade_pairs(spark, sf_dir))
+    und = undirected(trade_edges(pe))
     # bounded ≤2·|V|² rows: coalesce(1) + eager localCheckpoint cuts both
     # the 64-partition tiny-shuffle tax on every downstream hop and the
     # 6-hop lineage growth (the km_survival footer-dispatch diet)

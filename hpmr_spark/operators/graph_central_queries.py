@@ -2,9 +2,9 @@
 (round 6, wave 6, final batch):
 
 - closeness_harmonic_h12: harmonic closeness centrality on the nation
-  trade graph (the LPA edge construction). All-pairs shortest paths
-  come from FOUR synchronous min-plus relaxation rounds over the
-  bounded (s, t, d) frame (diameter ≤ 4 on this graph; unreachable
+  trade graph (the undirected edges of sources/derived.py). All-pairs
+  shortest paths come from FOUR synchronous min-plus relaxation rounds
+  over the bounded (s, t, d) frame (diameter ≤ 4 on this graph; unreachable
   pairs simply stay absent); harmonic closeness is EXACT integers:
   h12(s) = Σ_t 12/d(s,t) with d ∈ {1,2,3,4} (12 = lcm(1..4)).
 - secretary_rule_success: the classic optimal-stopping (secretary)
@@ -35,8 +35,14 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.engine import materialize
+from hpmr_spark.sources.derived import (
+    SQL_UNDIRECTED_CTE,
+    trade_edges,
+    trade_pairs,
+    undirected,
+)
 from hpmr_spark.sources.tables import load_events
 
 # ---------------------------------------------------------------------------
@@ -58,22 +64,8 @@ def _relax_sql(prev: str, cur: str) -> str:
 
 
 _CLOSENESS_ORACLE = (
-    """
-    WITH pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-               AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    und AS MATERIALIZED (
-      SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS w
-      FROM pe, tot WHERE v * 625 > t AND src <> dst
-    ),
+    f"""
+    WITH {SQL_UNDIRECTED_CTE},
     sym AS MATERIALIZED (
       SELECT u AS a, w AS b FROM und UNION ALL SELECT w, u FROM und
     ),
@@ -96,28 +88,7 @@ _CLOSENESS_ORACLE = (
 def closeness_harmonic_h12(spark, sf_dir):
     """Harmonic closeness (×12) on the trade graph — see module
     docstring. Output: one row per reachable node (node, n_reach, h12)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    pe = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .cast("long")
-            .alias("v"),
-        )
-    )
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w"))
-        .distinct()
-    )
+    und = undirected(trade_edges(trade_pairs(spark, sf_dir)))
     sym = materialize(und.select(F.col("u").alias("a"), F.col("w").alias("b")).unionAll(
         und.select(F.col("w").alias("a"), F.col("u").alias("b"))
     ), StorageLevel.MEMORY_AND_DISK)  # 3 relaxation rounds

@@ -8,7 +8,7 @@ broadcast of small state (centroids) against a scan, exactly the shape of
 `get`-side lookups against a built DistMap.
 
 Determinism: trade edges use the committed integer cross-multiplied
-threshold (shared with graph_pagerank_trade); centroids are integer-micros
+threshold of sources/derived.py; centroids are integer-micros
 floor-divided (a committed quantization, identical in both engines);
 distances are exact integer L2² with a (dist, label) struct-min tie-break.
 """
@@ -20,26 +20,19 @@ from pyspark.sql import functions as F
 from hpmr_spark.catalog import register, _t
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.littables import values_df
+from hpmr_spark.sources.derived import (
+    SQL_UNDIRECTED_CTE,
+    trade_edges,
+    trade_pairs,
+    undirected,
+)
 
 
 # ---------------------------------------------------------------------------
 # Triangle counting on the undirected trade graph.
 # ---------------------------------------------------------------------------
-_TRI_ORACLE = """
-    WITH pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    und AS (
-      SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS w
-      FROM pe, tot WHERE v * 625 > t AND src <> dst
-    ),
+_TRI_ORACLE = f"""
+    WITH {SQL_UNDIRECTED_CTE},
     tri AS (
       SELECT e1.u AS a, e1.w AS b, e2.w AS c
       FROM und e1
@@ -59,40 +52,20 @@ _TRI_ORACLE = """
 
 @register("graph_triangle_count", _TRI_ORACLE)
 def graph_triangle_count(spark, sf_dir):
-    """Per-node triangle counts on the undirected trade graph (same
-    committed edge threshold as graph_pagerank_trade — one revenue agg
-    feeds both). The (a<b<c) canonical ordering makes each triangle count
-    exactly once with no division by 6: edge lists store u<w, the wedge
-    join extends b to c>b, and the closing edge (a, c) is a semi-join.
+    """Per-node triangle counts on the undirected trade graph of
+    sources/derived.py. The (a<b<c) canonical ordering makes each
+    triangle count exactly once with no division by 6: edge lists store
+    u<w, the wedge join extends b to c>b, and the closing edge (a, c) is
+    a semi-join.
     Scale: the classic two-join triangle plan; at real graph sizes the
     wedge explosion is bounded by degree — the high-degree mitigation
     (order by degree instead of id) is documented, not needed at 25
     nodes. Edges are tiny after aggregation → both joins broadcast."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-
-    pe = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v"))
-    )
     # pe and und are tiny post-agg frames consumed by multiple subtrees
     # (tot+und; e1/e2/e3) — persist both or Catalyst re-derives the whole
     # 4-table join per consumer (was 37 shuffles; see CLAUDE.md CSE note)
-    pe = materialize(pe)
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = materialize(
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w")
-        )
-        .distinct()
-    )
+    pe = materialize(trade_pairs(spark, sf_dir))
+    und = materialize(undirected(trade_edges(pe)))
     e1 = und.select(F.col("u").alias("a"), F.col("w").alias("b"))
     e2 = und.select(F.col("u").alias("b"), F.col("w").alias("c"))
     e3 = und.select(F.col("u").alias("a"), F.col("w").alias("c"))
@@ -195,21 +168,8 @@ def kmeans_assign_step(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Bounded BFS shortest paths on the trade graph.
 # ---------------------------------------------------------------------------
-_BFS_ORACLE = """
-    WITH RECURSIVE pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    und AS (
-      SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS w
-      FROM pe, tot WHERE v * 625 > t AND src <> dst
-    ),
+_BFS_ORACLE = f"""
+    WITH RECURSIVE {SQL_UNDIRECTED_CTE},
     sym AS (
       SELECT u AS src, w AS dst FROM und
       UNION ALL
@@ -238,27 +198,7 @@ def graph_bfs_3hop(spark, sf_dir):
     join shuffles on node id and each superstep's state is one (node,
     dist) row per reached vertex; the hop bound caps work exactly like the
     CTE's dist predicate."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-
-    pe = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v"))
-    )
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w")
-        )
-        .distinct()
-    )
+    und = undirected(trade_edges(trade_pairs(spark, sf_dir)))
     sym = und.select(F.col("u").alias("src"), F.col("w").alias("dst")).unionAll(
         und.select(F.col("w").alias("src"), F.col("u").alias("dst"))
     )
@@ -289,21 +229,8 @@ def graph_bfs_3hop(spark, sf_dir):
     )
 
 
-_LPA_EDGES = """
-    pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    und AS (
-      SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS w
-      FROM pe, tot WHERE v * 625 > t AND src <> dst
-    ),
+_LPA_EDGES = f"""
+    {SQL_UNDIRECTED_CTE},
     ed AS (SELECT u AS src, w AS dst FROM und
            UNION ALL SELECT w, u FROM und),
     nodes AS (SELECT DISTINCT src AS node FROM ed)
@@ -358,25 +285,7 @@ def graph_kcore_2(spark, sf_dir):
     filter over the (persisted) edge list, localCheckpoint caps lineage; at
     real scale each round shuffles O(|E|) by node id — same discipline as
     BFS/pagerank above."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-
-    pe = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v"))
-    )
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w"))
-        .distinct()
-    )
+    und = undirected(trade_edges(trade_pairs(spark, sf_dir)))
     k = 2
     sym = (
         und.select(F.col("u").alias("a"), F.col("w").alias("b"))
@@ -452,27 +361,8 @@ def graph_lpa_communities(spark, sf_dir):
     round is one join + one grouped count + one partitioned top-1 — the
     chained keyed-mapreduce epoch shape at any graph size. Edge frames
     persist (multi-consumer)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-
-    pe = materialize(
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v"))
-    )
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w")
-        )
-        .distinct()
-    )
+    pe = materialize(trade_pairs(spark, sf_dir))
+    und = undirected(trade_edges(pe))
     ed = materialize(
         und.select(F.col("u").alias("src"), F.col("w").alias("dst"))
         .unionAll(und.select(F.col("w").alias("src"), F.col("u").alias("dst")))

@@ -1,11 +1,11 @@
 """Community-quality metric (round 6, wave 6).
 
 graph_modularity_ppm: Newman modularity Q of the deterministic 3-round
-LPA partition on the nation trade graph (the graph_lpa_communities
-construction — same edge threshold v·625 > total, same synchronous
-rounds with (count DESC, label ASC) tie-break). Q is computed EXACTLY:
-with m undirected edges, within-community edge counts e_c and
-community degree sums d_c,
+LPA partition on the undirected nation trade graph of
+sources/derived.py (the graph_lpa_communities construction — same
+synchronous rounds with (count DESC, label ASC) tie-break). Q is
+computed EXACTLY: with m undirected edges, within-community edge counts
+e_c and community degree sums d_c,
 
   Q = Σ_c (e_c/m − (d_c/2m)²)  =  Σ_c (4·m·e_c − d_c²) / (4m²)
 
@@ -28,9 +28,10 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.engine import materialize
 from hpmr_spark.operators.graph_ml_queries import _LPA_EDGES, _lpa_round_sql
+from hpmr_spark.sources.derived import trade_edges, trade_pairs, undirected
 
 _MODULARITY_ORACLE = (
     "WITH "
@@ -85,30 +86,8 @@ _MODULARITY_ORACLE = (
 def graph_modularity_ppm(spark, sf_dir):
     """Exact modularity of the 3-round LPA partition — see module
     docstring. Output: one row (n_edges, n_communities, e_within, q_ppm)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-
-    pe = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .cast("long")
-            .alias("v"),
-        )
-    )
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
     und = materialize(
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w")
-        )
-        .distinct(),
+        undirected(trade_edges(trade_pairs(spark, sf_dir))),
         StorageLevel.MEMORY_AND_DISK,  # ed/deg/wic/ec/m consumers
     )
     ed = materialize(und.select(F.col("u").alias("src"), F.col("w").alias("dst")).unionAll(

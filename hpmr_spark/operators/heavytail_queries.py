@@ -6,7 +6,7 @@
   each log ratio is floored to nanos elementwise (LN parity pinned),
   the sum is exact BIGINT, and α̂ is one final double expression.
 - influence_cascade_reach: deterministic independent-cascade diffusion
-  on the nation trade graph (the LPA edge construction, v·625 > total):
+  on the undirected nation trade graph of sources/derived.py:
   an edge is ACTIVE iff hash60('ic|u|w') % 4 = 0 (committed 25%
   activation), the seed is the nation with the largest total outflow
   (tie: lowest key), and the output is the BFS frontier profile over
@@ -32,6 +32,12 @@ from pyspark.sql import functions as F
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
+from hpmr_spark.sources.derived import (
+    SQL_UNDIRECTED_CTE,
+    trade_edges,
+    trade_pairs,
+    undirected,
+)
 from hpmr_spark.sources.tables import load_events
 
 # ---------------------------------------------------------------------------
@@ -122,21 +128,7 @@ _IC_ACTIVE_SQL = (
 )
 
 _IC_ORACLE = f"""
-    WITH pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-               AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    und AS MATERIALIZED (
-      SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS w
-      FROM pe, tot WHERE v * 625 > t AND src <> dst
-    ),
+    WITH {SQL_UNDIRECTED_CTE},
     act AS MATERIALIZED (
       SELECT u, w FROM und WHERE {_IC_ACTIVE_SQL}
     ),
@@ -186,29 +178,10 @@ _IC_ORACLE = f"""
 def influence_cascade_reach(spark, sf_dir):
     """Deterministic independent-cascade BFS profile over 3 hops — see
     module docstring. Output: 4 rows (hop, n_new, nodes_csv)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
     pe = materialize(
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .cast("long")
-            .alias("v"),
-        ),
-        StorageLevel.MEMORY_AND_DISK,  # und + seed consumers
+        trade_pairs(spark, sf_dir), StorageLevel.MEMORY_AND_DISK  # und + seed consumers
     )
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = (
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w"))
-        .distinct()
-    )
+    und = undirected(trade_edges(pe))
     act = und.where(
         hash60(
             F.concat(

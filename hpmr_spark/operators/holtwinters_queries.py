@@ -29,7 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 _WINDOW_DAYS = 182
 _H = 7
@@ -73,11 +74,7 @@ def _hw_oracle() -> str:
     )
     return f"""
     WITH RECURSIVE day AS MATERIALIZED (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS y
-      FROM orders GROUP BY 1
+      SELECT d, cents AS y FROM ({SQL_DAILY_REVENUE})
     ),
     bounds AS MATERIALIZED (SELECT MAX(d) AS dmax FROM day),
     e AS MATERIALIZED (
@@ -112,19 +109,7 @@ def holt_winters_daily_forecast(spark, sf_dir):
     rows (h, target day index, weekday, forecast cents)."""
     import pandas as pd
 
-    day = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("long")
-            .alias("d")
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("y")
-        )
-    )
+    day = daily_revenue(spark, sf_dir).select("d", F.col("cents").alias("y"))
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = sorted(zip(pdf["d"].tolist(), pdf["y"].tolist()))

@@ -25,8 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.functions.exprs import el_duck, el_spark
+from hpmr_spark.sources.derived import SQL_TRADE_PAIRS_CTE, trade_pairs
 
 _N = 8  # market size per side (committed)
 
@@ -156,24 +157,15 @@ def _gs_oracle() -> str:
     wrank = _wrank_expr("duck", el)
     init = "[" + ", ".join(["0.0"] * _N) + ", " + ", ".join(["-1.0"] * _N) + "]"
     return f"""
-    WITH pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-               AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      WHERE c_nationkey < {_N} AND s_nationkey < {_N}
-      GROUP BY 1, 2
-    ),
+    WITH {SQL_TRADE_PAIRS_CTE},
+    pn AS (SELECT * FROM pe WHERE src < {_N} AND dst < {_N}),
     grid AS (
       SELECT i, i // 8 AS m, i % 8 AS w
       FROM (SELECT unnest(range(0, 64)) AS i)
     ),
     volrow AS MATERIALIZED (
       SELECT list(COALESCE(pe.v, 0) ORDER BY grid.i) AS vol
-      FROM grid LEFT JOIN pe ON pe.src = grid.m AND pe.dst = grid.w
+      FROM grid LEFT JOIN pn pe ON pe.src = grid.m AND pe.dst = grid.w
     ),
     arrs AS MATERIALIZED (
       SELECT vol, {prefs} AS prefs, {wrank} AS wrank FROM volrow
@@ -201,22 +193,7 @@ def gale_shapley_stable_match(spark, sf_dir):
     """Gale-Shapley deferred acceptance (1962) — see module docstring.
     Emits the stable matching: (reviewer nation, matched proposer
     nation, their trade volume, the reviewer's rank of the match)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    pe = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .where((F.col("c_nationkey") < _N) & (F.col("s_nationkey") < _N))
-        .groupBy(F.col("c_nationkey").alias("src"),
-                 F.col("s_nationkey").alias("dst"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .alias("v")
-        )
-    )
+    pe = trade_pairs(spark, sf_dir).where((F.col("src") < _N) & (F.col("dst") < _N))
     grid = spark.range(64).select(
         F.col("id").alias("i"),
         F.expr("id div 8").alias("m"),

@@ -36,6 +36,7 @@ from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.functions.ranking import global_order_multi
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 from hpmr_spark.sources.tables import load_events
 
 # ---------------------------------------------------------------------------
@@ -130,13 +131,8 @@ def delete_cascade_audit(spark, sf_dir):
 # Theil's U2 of the seasonal-naive forecast vs the random walk.
 # ---------------------------------------------------------------------------
 
-_THEILU_ORACLE = """
-    WITH day AS MATERIALIZED (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1
-    ),
+_THEILU_ORACLE = f"""
+    WITH day AS MATERIALIZED ({SQL_DAILY_REVENUE}),
     e AS MATERIALIZED (
       SELECT cents, ROW_NUMBER() OVER (ORDER BY d) AS rn FROM day
     ),
@@ -165,17 +161,7 @@ _THEILU_ORACLE = """
 def theil_u2_seasonal(spark, sf_dir):
     """Theil's U2 of seasonal-naive (t−7) vs random walk (t−1) on daily
     revenue — see module docstring. Output: one row."""
-    day = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
+    day = daily_revenue(spark, sf_dir)
     e = materialize(
         global_order_multi(day, ["d"], rn_out="rn").select("rn", "cents"),
         StorageLevel.MEMORY_AND_DISK,  # three lag consumers

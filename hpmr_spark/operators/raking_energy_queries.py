@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 # ---------------------------------------------------------------------------
 # IPF raking
@@ -181,12 +182,9 @@ def ipf_raking_weights(spark, sf_dir):
 # Energy distance
 # ---------------------------------------------------------------------------
 
-_ED_ORACLE = """
+_ED_ORACLE = f"""
     WITH days AS MATERIALIZED (
-      SELECT CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS ed,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100 AS x
-      FROM orders GROUP BY CAST(o_orderdate AS DATE)
+      SELECT d AS ed, cents // 100 AS x FROM ({SQL_DAILY_REVENUE})
     ),
     wd AS (SELECT x FROM days WHERE (ed + 3) % 7 < 5),
     we AS (SELECT x FROM days WHERE (ed + 3) % 7 >= 5),
@@ -224,16 +222,10 @@ def energy_distance_twosample(spark, sf_dir):
 
     Spark shape: one persisted day rollup (scale-free ~2400 rows), three
     bounded pair aggregates. Constant cost at any corpus scale."""
-    o = _t(spark, sf_dir, "orders")
     days = materialize(
-        o.groupBy(F.expr("CAST(o_orderdate AS DATE)").alias("d"))
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("x"),
+        daily_revenue(spark, sf_dir).select(
+            F.col("d").alias("ed"), F.expr("cents div 100").alias("x")
         )
-        .select(F.expr("datediff(d, DATE '1970-01-01')").alias("ed"), "x")
     )
     wd = days.where(F.expr("(ed + 3) % 7 < 5")).select(
         F.col("x").alias("xa")

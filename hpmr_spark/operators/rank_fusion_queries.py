@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
+from hpmr_spark.sources.derived import SQL_TRADE_EDGES_CTE, trade_edges, trade_pairs
 
 # ---------------------------------------------------------------------------
 # Reciprocal-rank fusion of two term-density retrievers.
@@ -146,18 +147,8 @@ def rrf_fused_ranking(spark, sf_dir):
 # HITS hub/authority on the thresholded trade graph.
 # ---------------------------------------------------------------------------
 _HITS_ORACLE = f"""
-    WITH pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-                  AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    e AS (SELECT src, dst FROM pe, tot WHERE v * 625 > t AND src <> dst),
+    WITH {SQL_TRADE_EDGES_CTE},
+    e AS (SELECT src, dst FROM edges WHERE src <> dst),
     a1 AS (SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS a FROM e GROUP BY dst),
     h1 AS (
       SELECT e.src AS node, CAST(SUM(a1.a) AS BIGINT) AS h
@@ -191,34 +182,19 @@ _HITS_ORACLE = f"""
 @register("graph_hits_scores", _HITS_ORACLE)
 def graph_hits_scores(spark, sf_dir):
     """HITS hub/authority scores (2 full iterations, unrolled) on the
-    thresholded nation trade graph (same committed edge rule as
-    graph_pagerank_trade / graph_triangle_count: edge revenue·625 > total,
-    src ≠ dst). Iterations run UNNORMALIZED in exact integers — on a
-    dimension-sized graph the values are bounded by degree^k (≤ 25⁴ here)
-    so no float normalization enters the fixpoint arithmetic; the final
-    report normalizes once by integer ppm against the max (operands
-    non-negative → div ≡ //). Nodes with only-in or only-out edges keep
-    score 0 on the missing side (full outer join). At 100 TB: the edge
-    build is the one fact-scale job (three joins + one agg, the same
-    plan TPC-H q5 runs); everything after operates on a ≤|nations|² frame
-    — persisted, broadcast-joined, constant-size."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    pe = materialize(
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v")),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    tot = pe.agg(F.sum("v").alias("t"))
+    thresholded nation trade graph (the directed edges of
+    sources/derived.py, src ≠ dst). Iterations run UNNORMALIZED in exact
+    integers — on a dimension-sized graph the values are bounded by
+    degree^k (≤ 25⁴ here) so no float normalization enters the fixpoint
+    arithmetic; the final report normalizes once by integer ppm against
+    the max (operands non-negative → div ≡ //). Nodes with only-in or
+    only-out edges keep score 0 on the missing side (full outer join).
+    At 100 TB: the edge build is the one fact-scale job (three joins +
+    one agg, the same plan TPC-H q5 runs); everything after operates on
+    a ≤|nations|² frame — persisted, broadcast-joined, constant-size."""
+    pe = materialize(trade_pairs(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     e = materialize(
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select("src", "dst"),
+        trade_edges(pe).where(F.col("src") != F.col("dst")),
         StorageLevel.MEMORY_AND_DISK,
     )
     a1 = e.groupBy(F.col("dst").alias("node")).agg(

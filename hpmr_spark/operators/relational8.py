@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from hpmr_spark.catalog import register, _t
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.exprs import cents
+from hpmr_spark.sources.derived import SQL_TRADE_EDGES_CTE, trade_edges, trade_pairs
 
 
 def _ts(s: str):
@@ -370,18 +371,8 @@ def dedup_levenshtein_fuzzy(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Iterative PageRank (3 rounds, integer ppm) over the nation trade graph.
 # ---------------------------------------------------------------------------
-_PR_EDGES_SQL = """
-    WITH pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    edges AS (SELECT src, dst FROM pe, tot WHERE v * 625 > t),
+_PR_EDGES_SQL = f"""
+    WITH {SQL_TRADE_EDGES_CTE},
     outdeg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY src),
     nodes AS (SELECT n_nationkey AS node FROM nation),
     pr0 AS (SELECT node, CAST(40000 AS BIGINT) AS pr FROM nodes),
@@ -418,37 +409,18 @@ _PR_EDGES_SQL = """
 
 @register("graph_pagerank_trade", _PR_EDGES_SQL)
 def graph_pagerank_trade(spark, sf_dir):
-    """PageRank (d=0.85, 3 iterations) over nation→nation trade edges kept
-    when a pair's revenue share exceeds 1/625 of the total (integer
-    cross-mult → varied out-degrees → non-uniform ranks). Ranks are integer
-    parts-per-million with truncating division — every engine computes the
-    identical integers, so a 3-level recursive oracle matches exactly.
+    """PageRank (d=0.85, 3 iterations) over the directed nation→nation
+    trade edges of sources/derived.py, self-loops kept (varied out-degrees
+    → non-uniform ranks). Ranks are integer parts-per-million with
+    truncating division — every engine computes the identical integers, so
+    a 3-level recursive oracle matches exactly.
 
     Spark shape: the edge list and out-degrees are tiny after the fact-join
     aggregation and get broadcast; each iteration is one broadcast join +
     re-aggregation — the chained-mapreduce epoch pattern of the reference
     (src/dist_map.h:256-279) with Catalyst planning each epoch."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
-
-    pe = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.sum(cents(F.col("l_extendedprice"))).alias("v"))
-    )
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    edges = materialize(
-        pe.crossJoin(F.broadcast(tot))
-        .where(F.col("v") * 625 > F.col("t"))
-        .select("src", "dst")
-    )
+    edges = materialize(trade_edges(trade_pairs(spark, sf_dir)))
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = n.select(F.col("n_nationkey").alias("node"))
     pr = nodes.select("node", F.lit(40000).cast("long").alias("pr"))

@@ -33,6 +33,7 @@ from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.exprs import el_duck, el_spark, to_duck
 from hpmr_spark.functions.hashing import spark_sql_hash60, sql_hash60
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 from hpmr_spark.sources.tables import load_events
 
 
@@ -64,11 +65,8 @@ def _kalman_fold(el) -> str:
 
 _KAL_ORACLE = f"""
     WITH daily AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS DOUBLE)
-               AS day,
-             CAST(CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS DOUBLE) AS z
-      FROM orders GROUP BY CAST(o_orderdate AS DATE)
+      SELECT CAST(d AS DOUBLE) AS day, CAST(cents AS DOUBLE) AS z
+      FROM ({SQL_DAILY_REVENUE})
     ),
     series AS (
       SELECT list_reduce(
@@ -97,16 +95,8 @@ def kalman_1d_level_filter(spark, sf_dir):
     series folds in ONE row (calendar-bounded: ~2400 days at every SF);
     identical fold text in both engines, outputs floored to integers at
     the end."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("double")
-        .alias("z")
-    ).select(
-        F.datediff(F.col("d"), F.lit("1970-01-01").cast("date"))
-        .cast("double")
-        .alias("day"),
-        "z",
+    daily = daily_revenue(spark, sf_dir).select(
+        F.col("d").cast("double").alias("day"), F.col("cents").cast("double").alias("z")
     )
     s = daily.agg(
         F.expr(

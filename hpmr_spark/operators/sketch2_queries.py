@@ -17,6 +17,12 @@ from pyspark.sql import functions as F
 from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
+from hpmr_spark.sources.derived import (
+    SQL_UNDIRECTED_CTE,
+    trade_edges,
+    trade_pairs,
+    undirected,
+)
 
 _LC_M = 4096
 
@@ -80,21 +86,8 @@ def linear_counting_distinct(spark, sf_dir):
 # ---------------------------------------------------------------------------
 @register(
     "clustering_coefficient_ppm",
-    """
-    WITH pe AS (
-      SELECT c_nationkey AS src, s_nationkey AS dst,
-             CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS v
-      FROM customer
-        JOIN orders   ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(v) AS BIGINT) AS t FROM pe),
-    und AS (
-      SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS w
-      FROM pe, tot WHERE v * 625 > t AND src <> dst
-    ),
+    f"""
+    WITH {SQL_UNDIRECTED_CTE},
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
         SELECT u AS node FROM und UNION ALL SELECT w FROM und
@@ -124,35 +117,18 @@ def linear_counting_distinct(spark, sf_dir):
 )
 def clustering_coefficient_ppm(spark, sf_dir):
     """Local clustering coefficient cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1))
-    in integer ppm over the committed trade graph (same edge threshold as
-    pagerank/triangles — one revenue agg feeds the family). Triangles come
-    from the canonical a<b<c two-join plan; degrees from the undirected
-    edge list; nodes with no triangle keep cc = 0 via the left join
+    in integer ppm over the undirected trade graph of sources/derived.py.
+    Triangles come from the canonical a<b<c two-join plan; degrees from
+    the undirected edge list; nodes with no triangle keep cc = 0 via the
+    left join
     (COALESCE — the empty-aggregate NULL trap). Post-aggregation graph is
     nation-sized, so every join broadcasts; at real graph scale this is
     the standard triangle plan plus one degree join."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    pe = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("v"))
-    )
     # persist the tiny aggregated frames: pe feeds tot+und, und feeds
     # deg/e1/e2/e3 — without caching Catalyst re-derives the 4-table join
     # per consumer (46 shuffles observed; same fix as graph_triangle_count)
-    pe = materialize(pe)
-    tot = pe.agg(F.sum("v").cast("long").alias("t"))
-    und = materialize(
-        pe.crossJoin(F.broadcast(tot))
-        .where((F.col("v") * 625 > F.col("t")) & (F.col("src") != F.col("dst")))
-        .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("w"))
-        .distinct()
-    )
+    pe = materialize(trade_pairs(spark, sf_dir))
+    und = materialize(undirected(trade_edges(pe)))
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("w").alias("node")))

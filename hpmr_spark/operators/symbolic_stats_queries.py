@@ -38,6 +38,7 @@ from hpmr_spark.catalog import _t, register
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import sql_hash60, spark_sql_hash60
 from hpmr_spark.functions.ranking import bounded_rank
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE
 
 # ---------------------------------------------------------------------------
 # SAX symbolic motifs
@@ -47,12 +48,7 @@ _SAX_W = 7  # calendar days per PAA bucket
 _SAX_WORD = 4  # symbols per motif word
 
 _SAX_ORACLE = f"""
-    WITH days AS (
-      SELECT CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS ed,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY CAST(o_orderdate AS DATE)
-    ),
+    WITH days AS (SELECT d AS ed, cents FROM ({SQL_DAILY_REVENUE})),
     paa AS (
       SELECT ed // {_SAX_W} AS b,
              CAST(SUM(cents) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS m

@@ -32,28 +32,9 @@ from functools import reduce
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.engine import materialize
-
-# Shared daily-rollup SQL text for the oracles.
-_DAY_SQL = """
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1
-"""
-
-
-def _day_frame(spark, sf_dir):
-    """Daily revenue rollup (d = days since epoch, cents = exact BIGINT)."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
-        )
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-    )
-
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 # ---------------------------------------------------------------------------
 # Autocorrelation function at committed lags.
@@ -79,7 +60,7 @@ _ACF_EXPR = (
 )
 
 _ACF_ORACLE = f"""
-    WITH day AS ({_DAY_SQL}),
+    WITH day AS ({SQL_DAILY_REVENUE}),
     mom AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CAST(cents AS HUGEINT)) AS HUGEINT) AS s,
@@ -113,7 +94,7 @@ def acf_lags_revenue(spark, sf_dir):
     day frame is persisted (moments + 4 pair joins = 5 consumers; no
     cross-tree CSE in Catalyst) — calendar-bounded, so the pair joins are
     broadcast-sized at any data scale."""
-    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
+    day = materialize(daily_revenue(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     mom = day.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.expr("CAST(cents AS DECIMAL(38,0))")).alias("s"),
@@ -147,7 +128,7 @@ def acf_lags_revenue(spark, sf_dir):
 # Rolling 7-day median (date-windowed, gap-aware).
 # ---------------------------------------------------------------------------
 _ROLLMED_ORACLE = f"""
-    WITH day AS ({_DAY_SQL})
+    WITH day AS ({SQL_DAILY_REVENUE})
     SELECT a.d AS d,
            CAST(COUNT(*) AS BIGINT) AS n_days,
            CAST(list_extract(list_sort(list(b.cents)),
@@ -167,7 +148,7 @@ def rolling_median_7day(spark, sf_dir):
     scale); per-day median = element (w+1) div 2 of the ≤7-element sorted
     list, exact integer, no .5 averaging. The robust trend line every
     revenue dashboard overlays on the noisy daily series."""
-    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
+    day = materialize(daily_revenue(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     a = day.select(F.col("d").alias("ad"))
     b = day.select(F.col("d").alias("bd"), F.col("cents").alias("bc"))
     j = a.join(
@@ -191,7 +172,7 @@ def rolling_median_7day(spark, sf_dir):
 @register(
     "mann_kendall_trend",
     f"""
-    WITH day AS ({_DAY_SQL}),
+    WITH day AS ({SQL_DAILY_REVENUE}),
     pairs AS (
       SELECT CAST(SUM(CASE WHEN b.cents > a.cents THEN 1
                            WHEN b.cents < a.cents THEN -1 ELSE 0 END)
@@ -227,7 +208,7 @@ def mann_kendall_trend(spark, sf_dir):
     variance numerator var18 = n(n−1)(2n+5) − Σt(t−1)(2t+5) are exact
     integers; z (with the ±1 continuity correction, sign-split CASE) is
     ONE double expression incl. IEEE-exact SQRT."""
-    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
+    day = materialize(daily_revenue(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     a = day.select(F.col("d").alias("ad"), F.col("cents").alias("ac"))
     b = day.select(F.col("d").alias("bd"), F.col("cents").alias("bc"))
     s = (
@@ -275,7 +256,7 @@ def mann_kendall_trend(spark, sf_dir):
 # Wald-Wolfowitz runs test (randomness of above/below-median signs).
 # ---------------------------------------------------------------------------
 _RUNS_ORACLE = f"""
-    WITH day AS ({_DAY_SQL}),
+    WITH day AS ({SQL_DAILY_REVENUE}),
     med AS (
       SELECT CAST(list_extract(list_sort(list(cents)),
                   CAST((COUNT(*) + 1) // 2 AS BIGINT)) AS BIGINT) AS med_cents
@@ -324,7 +305,7 @@ def runs_test_above_median(spark, sf_dir):
     integers and z is ONE double expression."""
     from hpmr_spark.functions.ranking import global_row_number
 
-    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
+    day = materialize(daily_revenue(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     med = day.agg(
         F.element_at(
             F.sort_array(F.collect_list("cents")),
@@ -379,7 +360,7 @@ def runs_test_above_median(spark, sf_dir):
 # days-since-epoch: (d + 3) % 7 gives Monday=0 on both (1970-01-01 was a
 # Thursday; d ≥ 0 so % is identical).
 _WD_ORACLE = f"""
-    WITH day AS ({_DAY_SQL}),
+    WITH day AS ({SQL_DAILY_REVENUE}),
     m AS (
       SELECT (d + 3) % 7 AS dow_idx,
              CAST(COUNT(*) AS BIGINT) AS n_days,
@@ -421,7 +402,7 @@ def weekday_seasonality_profile(spark, sf_dir):
     outgrows BIGINT; Spark `div` yields LONG) — then summed exactly; the
     per-term floor before the cross-group sum is the
     deterministic-parallel-sum rule."""
-    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
+    day = materialize(daily_revenue(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     m = day.groupBy(F.expr("(d + 3) % 7").alias("dow_idx")).agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.sum(F.expr("CAST(cents AS DECIMAL(38,0))")).alias("s"),

@@ -24,33 +24,15 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.engine import materialize
-
-_DAY_SQL = """
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1
-"""
-
-
-def _day_frame(spark, sf_dir):
-    """Daily revenue rollup (d = days since epoch, cents = exact BIGINT)."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
-        )
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-    )
-
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 # ---------------------------------------------------------------------------
 # Additive seasonal decomposition: value = trend + seasonal + residual.
 # ---------------------------------------------------------------------------
 _SEASONAL_ORACLE = f"""
-    WITH day AS MATERIALIZED ({_DAY_SQL}),
+    WITH day AS MATERIALIZED ({SQL_DAILY_REVENUE}),
     tr AS (
       SELECT a.d, a.cents,
              CAST(SUM(CAST(b.cents AS HUGEINT)) // 7 AS BIGINT) AS trend_cents,
@@ -86,7 +68,7 @@ def seasonal_decompose_additive(spark, sf_dir):
     (verified round 5), so no sign-split is needed. The day rollup is
     persisted (trend join a/b sides + weekday agg + final join = 4
     consumers, no cross-tree CSE)."""
-    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
+    day = materialize(daily_revenue(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     a = day.select(F.col("d").alias("ad"), F.col("cents").alias("ac"))
     b = day.select(F.col("d").alias("bd"), F.col("cents").alias("bc"))
     tr = (
@@ -128,7 +110,7 @@ def seasonal_decompose_additive(spark, sf_dir):
 # Western-Electric control-chart rules.
 # ---------------------------------------------------------------------------
 _WE_ORACLE = f"""
-    WITH day AS MATERIALIZED ({_DAY_SQL}),
+    WITH day AS MATERIALIZED ({SQL_DAILY_REVENUE}),
     mom AS (
       SELECT CAST(COUNT(*) AS HUGEINT) AS n,
              CAST(SUM(CAST(cents AS HUGEINT)) AS HUGEINT) AS s,
@@ -185,7 +167,7 @@ def control_chart_we_rules(spark, sf_dir):
     dv² > k²·(nQ − S²) is an exact int128 cross-multiplication
     (DECIMAL(38,0) ≡ HUGEINT — dv² ≈ 6e24 at sf0.1, ceiling 1e38). One
     persisted dev frame feeds the banded self-join (a/b sides)."""
-    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
+    day = materialize(daily_revenue(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     mom = day.agg(
         F.expr("CAST(COUNT(*) AS DECIMAL(38,0))").alias("n"),
         F.expr("CAST(SUM(CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0))").alias(
@@ -272,7 +254,7 @@ _LTTB_N = 12  # first + 10 middle buckets + last
 
 def _lttb_oracle() -> str:
     ctes = [
-        f"day AS MATERIALIZED ({_DAY_SQL})",
+        f"day AS MATERIALIZED ({SQL_DAILY_REVENUE})",
         "bounds AS MATERIALIZED (SELECT MIN(d) AS dmin, MAX(d) AS dmax FROM day)",
         "firstp AS MATERIALIZED (SELECT d, cents FROM day, bounds WHERE d = dmin)",
         "lastp AS MATERIALIZED (SELECT d, cents FROM day, bounds WHERE d = dmax)",
@@ -327,7 +309,7 @@ def lttb_downsample_12(spark, sf_dir):
     a production fold would carry prev)."""
     import pandas as pd
 
-    day = _day_frame(spark, sf_dir)
+    day = daily_revenue(spark, sf_dir)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = sorted(zip(pdf["d"].tolist(), pdf["cents"].tolist()))
@@ -373,7 +355,7 @@ def lttb_downsample_12(spark, sf_dir):
 # Seasonal anomaly days: decomposition residual vs 3x MAD.
 # ---------------------------------------------------------------------------
 _ANOM_ORACLE = f"""
-    WITH day AS MATERIALIZED ({_DAY_SQL}),
+    WITH day AS MATERIALIZED ({SQL_DAILY_REVENUE}),
     tr AS (
       SELECT a.d, a.cents,
              CAST(SUM(CAST(b.cents AS HUGEINT)) // 7 AS BIGINT) AS trend_cents,
@@ -424,7 +406,7 @@ def seasonal_anomaly_days(spark, sf_dir):
     frame, never a global window). Integer comparisons throughout; the
     residual frame is persisted (rank join a/b + count + final = 4
     consumers)."""
-    day = materialize(_day_frame(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
+    day = materialize(daily_revenue(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     a = day.select(F.col("d").alias("ad"), F.col("cents").alias("ac"))
     b = day.select(F.col("d").alias("bd"), F.col("cents").alias("bc"))
     tr = (

@@ -34,17 +34,11 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.hashing import hash60, sql_hash60
 from hpmr_spark.functions.ranking import bounded_rank, global_order_multi
-
-_DAY_SQL = """
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1
-"""
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 # ---------------------------------------------------------------------------
 # Dickey-Fuller unit-root test on daily revenue.
@@ -70,7 +64,7 @@ _DF_T = (
 )
 
 _DF_ORACLE = f"""
-    WITH day AS MATERIALIZED ({_DAY_SQL}),
+    WITH day AS MATERIALIZED ({SQL_DAILY_REVENUE}),
     tot AS (SELECT CAST(SUM(cents) AS BIGINT) AS s,
                    CAST(COUNT(*) AS BIGINT) AS n FROM day),
     e AS MATERIALIZED (
@@ -99,17 +93,7 @@ _DF_ORACLE = f"""
 def dickey_fuller_unit_root(spark, sf_dir):
     """Dickey-Fuller unit-root regression on daily revenue — see module
     docstring. Output: one row (n_pairs, df_beta, df_t_stat)."""
-    day = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
+    day = daily_revenue(spark, sf_dir)
     tot = day.agg(
         F.sum("cents").cast("long").alias("s"),
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -146,7 +130,7 @@ def dickey_fuller_unit_root(spark, sf_dir):
 _RANSAC_CAND = 32
 
 _RANSAC_ORACLE = f"""
-    WITH day AS MATERIALIZED ({_DAY_SQL}),
+    WITH day AS MATERIALIZED ({SQL_DAILY_REVENUE}),
     tot AS (SELECT CAST(SUM(cents) AS BIGINT) AS s,
                    CAST(COUNT(*) AS BIGINT) AS n FROM day),
     h AS (
@@ -188,15 +172,7 @@ def ransac_line_inliers(spark, sf_dir):
     """Deterministic RANSAC line fit over daily revenue — see module
     docstring. Output: one row (cand_i, d1, d2, n_inliers, slope_milli)."""
     day = materialize(
-        _t(spark, sf_dir, "orders")
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        ),
+        daily_revenue(spark, sf_dir),
         StorageLevel.MEMORY_AND_DISK,  # rank + inlier-count consumers
     )
     tot = day.agg(
@@ -265,7 +241,7 @@ def ransac_line_inliers(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _MDD_ORACLE = f"""
-    WITH day AS MATERIALIZED ({_DAY_SQL}),
+    WITH day AS MATERIALIZED ({SQL_DAILY_REVENUE}),
     e AS (
       SELECT d, cents,
              CAST(MAX(cents) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING)
@@ -288,17 +264,7 @@ def max_drawdown_cents(spark, sf_dir):
     bucketed two-pass builder (functions/ranking.py), never a global
     window. Output: one row (max_drawdown_cents, trough_day,
     peak_cents)."""
-    day = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
+    day = daily_revenue(spark, sf_dir)
     e = global_order_multi(
         day, ["d"], rn_out="rn", running=[("cents", "max", False, "runmax")]
     )

@@ -32,9 +32,10 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from hpmr_spark.catalog import _t, register
+from hpmr_spark.catalog import register
 from hpmr_spark.engine import materialize
 from hpmr_spark.functions.ranking import bounded_rank
+from hpmr_spark.sources.derived import SQL_DAILY_REVENUE, daily_revenue
 
 _N = 64
 _LEVELS = 6
@@ -67,12 +68,7 @@ def _lvl_ctes() -> str:
 
 
 _HAAR_ORACLE = f"""
-    WITH day AS MATERIALIZED (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1
-    ),
+    WITH day AS MATERIALIZED ({SQL_DAILY_REVENUE}),
     l0 AS MATERIALIZED (
       SELECT CAST({_N} + 1 - rn AS BIGINT) AS i, cents AS s
       FROM (SELECT cents, ROW_NUMBER() OVER (ORDER BY d DESC) AS rn FROM day)
@@ -121,17 +117,7 @@ _HAAR_ORACLE = f"""
 def haar_wavelet_compress(spark, sf_dir):
     """Haar wavelet top-8 compaction of the last-64-day revenue series —
     see module docstring. Output: 10 rows (lvl, idx, coeff)."""
-    day = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date")).cast("long").alias("d")
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
+    day = daily_revenue(spark, sf_dir)
     last = day.orderBy(F.col("d").desc()).limit(_N)
     base = materialize(
         bounded_rank(last, "d", "cents", primary_desc=True, out="rd")

@@ -187,49 +187,6 @@ def test_all_equal_keys_single_bucket(spark):
     assert sorted((r["tb"], r["rn"]) for r in got) == [(i, i + 1) for i in range(100)]
 
 
-def test_sampled_cutpoints_balance_skewed(spark):
-    """A power-law key collapses equal-width buckets onto bucket 0; sampled
-    equi-depth cut-points rebalance — and BOTH bucketings produce the same
-    exact ranks (boundaries affect balance, never correctness)."""
-    from hpmr_spark.functions.ranking import (
-        _BKT,
-        _with_bucket,
-        global_order_multi,
-        sampled_cutpoints,
-    )
-
-    # x ~ 2^(id mod 20): 6 orders of magnitude, mass concentrated low
-    df = spark.range(20000).select(
-        F.col("id"),
-        F.pow(F.lit(2.0), (F.col("id") % 20).cast("double")).alias("x"),
-    )
-    ew = _with_bucket(df, F.col("x"), False, 16)
-    ew_max = (
-        ew.groupBy(_BKT).count().agg(F.max("count").alias("m")).collect()[0]["m"]
-    )
-    cps = sampled_cutpoints(df, "x", 16)
-    eq = _with_bucket(df, F.col("x"), False, 16, cutpoints=cps)
-    eq_max = (
-        eq.groupBy(_BKT).count().agg(F.max("count").alias("m")).collect()[0]["m"]
-    )
-    # equal-width: 2^0..2^15 (16 of 20 value classes, 80% of rows) collapse
-    # into bucket 0; equi-depth: <= ~2 value classes per bucket
-    assert ew_max >= 0.75 * 20000
-    assert eq_max <= 3000
-
-    ref = {
-        (r["id"], r["rn"])
-        for r in global_order_multi(df, ["x", "id"], rn_out="rn").collect()
-    }
-    got = {
-        (r["id"], r["rn"])
-        for r in global_order_multi(
-            df, ["x", "id"], rn_out="rn", cutpoints=cps
-        ).collect()
-    }
-    assert ref == got
-
-
 def test_global_row_numbers_partition_invariant(spark):
     """The fused multi-ordering builder must assign the same ranks for any
     physical partitioning of the input, and each ordering's ranks must be

@@ -1,6 +1,7 @@
 """The scratch-directory owner (``engine.scratch_dir``): keyed dirs are
 stable for the process, unkeyed ones are fresh, and the per-process root is
-removed when its process exits, so no query leaves a dir in the temp dir."""
+removed when its process exits, so no query leaves a dir in the temp dir or
+in the session's warehouse dir."""
 
 import os
 import subprocess
@@ -11,8 +12,10 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 
 # one or more queries of every kind of scratch use: file sinks, source layouts,
-# checkpoints, and the symlinked dirs the file-stream sources read
+# checkpoints, bucketed tables, and the symlinked dirs the file-stream sources
+# read
 SCRATCH_QUERIES = [
+    "bucketed_join_revenue",
     "sink_parquet_roundtrip",
     "sink_csv_roundtrip",
     "sink_json_roundtrip",
@@ -33,10 +36,10 @@ SCRATCH_QUERIES = [
 ]
 
 
-def _run(script: str, tmpdir: Path, **env) -> str:
+def _run(script: str, tmpdir: Path, cwd: Path = ROOT, **env) -> str:
     out = subprocess.run(
         [sys.executable, "-c", textwrap.dedent(script)],
-        cwd=ROOT,
+        cwd=cwd,
         env={**os.environ, "TMPDIR": str(tmpdir), **env},
         capture_output=True,
         text=True,
@@ -81,8 +84,9 @@ def test_root_removed_at_exit_and_left_by_forked_child(tmp_path):
     assert list(tmp_path.iterdir()) == []
 
 
-def test_scratch_queries_leave_no_dir_behind(tmp_path, sf_dir):
-    _run(
+def test_scratch_queries_leave_no_dir_behind(tmp_path, tmp_path_factory, sf_dir):
+    # a fresh cwd gives the session a fresh default warehouse dir
+    out = _run(
         f"""
         import hpmr_spark.all_queries
         from hpmr_spark.catalog import QUERIES
@@ -91,9 +95,18 @@ def test_scratch_queries_leave_no_dir_behind(tmp_path, sf_dir):
         spark = get_spark("scratch-leak")
         for name in {SCRATCH_QUERIES!r}:
             assert QUERIES[name](spark, {str(sf_dir)!r}).collect(), name
+        print("warehouse", spark.conf.get("spark.sql.warehouse.dir"))
+        spark.stop()
+        # a later session in the same process writes its bucketed tables again
+        spark = get_spark("scratch-leak-2")
+        assert QUERIES["bucketed_join_revenue"](spark, {str(sf_dir)!r}).collect()
         spark.stop()
         """,
         tmp_path,
+        cwd=tmp_path_factory.mktemp("cwd"),
+        PYTHONPATH=str(ROOT),
         SPARK_DRIVER_MEMORY="2g",
     )
     assert sorted(p.name for p in tmp_path.iterdir()) == []
+    warehouse = Path(out.split("warehouse ")[1].split()[0].removeprefix("file:"))
+    assert not list(warehouse.glob("*_bkt_*"))
