@@ -17,6 +17,10 @@ conf. Every knob here is chosen for scale-out first, then works locally:
   that the per-task ``importlib.invalidate_caches()`` re-reads a zip on the
   worker path (``pyspark.zip``) only when it has changed. That re-read was
   170-250 ms of every Python task.
+- The driver JVM starts from a class-data-sharing archive of the classes a
+  Spark session loads (``-XX:SharedArchiveFile``), dumped at exit by the
+  first session that finds none: JVM start-up and the first jobs spend about
+  half their time loading and verifying Spark's classes.
 
 Scratch storage has one owner too: ``scratch_dir`` hands out subdirectories
 of one per-process root that is removed when the process exits, as hpmr's
@@ -34,11 +38,18 @@ from __future__ import annotations
 import atexit
 import contextlib
 import contextvars
+import glob
+import hashlib
 import os
+import re
+import shlex
 import shutil
+import struct
+import subprocess
 import tempfile
 
-from pyspark import StorageLevel
+from pyspark import SparkContext, StorageLevel
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,7 +74,8 @@ def session_builder(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", max(2 * cpus, 8))
         )
     return (
-        SparkSession.builder.appName(app_name)
+        _Builder()
+        .appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -91,6 +103,194 @@ def session_builder(
         # imported from that PYTHONPATH, so it works from any cwd too
         .config("spark.python.daemon.module", "hpmr_spark.pydaemon")
     )
+
+
+class _Builder(SparkSession.Builder):
+    """The builder ``session_builder`` returns: the first JVM a process
+    launches through it starts from the engine's class-data archive."""
+
+    def getOrCreate(self) -> SparkSession:
+        launch = _archive_launch(self._options) if SparkContext._gateway is None else None
+        if launch is None:
+            return super().getOrCreate()
+        java_options, conf_dir, archive, part = launch
+        self.config("spark.driver.extraJavaOptions", java_options)
+        caller_conf_dir = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+        try:
+            session = super().getOrCreate()
+        finally:
+            if caller_conf_dir is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = caller_conf_dir
+        # None when spark-submit launched the JVM before this process started
+        proc = SparkContext._gateway.proc
+        if part is not None:
+            atexit.register(_publish_archive, proc, part, archive, os.getpid())
+        elif proc is not None and not _maps(proc.pid, archive):
+            # the JVM declined the archive (a check the key does not cover):
+            # drop it, so that the next session dumps one this JVM accepts
+            with contextlib.suppress(OSError):
+                os.remove(archive)
+        return session
+
+
+# JVM output goes to stderr: stdout belongs to the application. The ~700
+# per-class [cds] warnings a dump prints (signed jars, unlinked classes)
+# are dropped; cds errors stay.
+_JVM_OUTPUT = "-XX:+DisplayVMOutputToStderr -Xlog:disable -Xlog:all=warning,cds*=error:stderr"
+_DUMP_WAIT_S = 300
+
+
+def _cache_root() -> str:
+    return os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), "hpmr_spark")
+
+
+def _compressed_oops(heap: str) -> bool | None:
+    """Whether a JVM with ``-Xmx<heap>`` uses compressed oops; None if
+    ``heap`` is not a JVM size. JDK 17 turns them off above a 32 GiB - 32 MiB
+    heap (``-XX:+PrintFlagsFinal``: on at 32736m, off at 32737m). Spark's
+    launcher passes ``spark.driver.memory`` to ``-Xmx`` as written, so a size
+    without a unit is bytes, as the JVM reads it."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", heap.strip().lower())
+    return m and int(m[1]) * 1024 ** " kmgt".index(m[2] or " ") <= 32 * 1024**3 - 32 * 1024**2
+
+
+def _libjvm() -> str | None:
+    """The ``libjvm.so`` of the JVM Spark's launcher starts: ``bin/spark-class``
+    runs ``$JAVA_HOME/bin/java`` when ``JAVA_HOME`` is set, else ``java`` from
+    ``PATH``."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if java is None:
+        return None
+    return os.path.join(os.path.dirname(os.path.dirname(os.path.realpath(java))), "lib", "server", "libjvm.so")
+
+
+def archive_key(libjvm: str, class_path: list[str], compressed_oops: bool) -> str:
+    """Key of a dynamic archive, from what the JVM checks before it maps one:
+    its own build, each class-path entry's path, size and mtime, and the
+    compressed-oops mode."""
+    h = hashlib.sha256(b"coops" if compressed_oops else b"nocoops")
+    for path in (libjvm, *class_path):
+        st = os.stat(path)
+        h.update(f"\0{path}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
+def _archive_is_whole(path: str) -> bool:
+    """True if ``path`` holds a dynamic archive none of whose regions runs past
+    the end of the file. JDK 17 maps the regions without checking the file's
+    length, so a truncated archive kills the JVM with SIGBUS. The region table
+    read here is JDK 17's (archive version 11, ``CDSFileMapHeaderBase`` in
+    include/cds.h); archives of other versions are left to the JVM."""
+    try:
+        with open(path, "rb") as fh:
+            head = fh.read(16 + 3 * 72)
+            size = os.fstat(fh.fileno()).st_size
+    except OSError:
+        return False
+    if len(head) < 16 + 3 * 72:
+        return False
+    magic, _crc, version = struct.unpack_from("<IiI", head)
+    if magic != 0xF00BABA8:
+        return False
+    if version != 11:
+        return True
+    # rw, ro and bitmap regions: 72 bytes each, _file_offset at +24, _used at +40
+    return all(sum(struct.unpack_from("<Q8xQ", head, 16 + 72 * i + 24)) <= size for i in range(3))
+
+
+def _maps(pid: int, archive: str) -> bool:
+    """Whether process ``pid`` has ``archive`` mapped; True where ``/proc``
+    cannot tell."""
+    try:
+        with open(f"/proc/{pid}/maps") as fh:
+            maps = fh.read()
+    except OSError:
+        return True
+    return os.path.realpath(archive) in maps
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _archive_launch(options: dict) -> tuple[str, str, str, str | None] | None:
+    """How to launch a driver JVM for a builder with ``options``: (driver Java
+    options, Spark conf dir, archive, file the JVM dumps to at exit or None
+    when it maps the archive), or None for a launch without the archive.
+
+    JDK 17 refuses to dump an archive when a non-empty directory is on the
+    class path, and Spark puts its conf dir there. Spark reads no
+    ``*.template`` file, so a conf dir that holds only those is swapped for an
+    empty one under the cache root. A conf dir with a real file, a caller's
+    own driver Java options or class path, or a cache that cannot be made
+    leave the launch as it was."""
+    if "spark.driver.extraJavaOptions" in options or "spark.driver.extraClassPath" in options:
+        return None
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    libjvm = _libjvm()
+    oops = _compressed_oops(str(options.get("spark.driver.memory", "1g")))
+    root = _cache_root()
+    empty = os.path.join(root, "conf")
+    try:
+        if os.path.isdir(conf_dir) and not all(n.endswith(".template") for n in os.listdir(conf_dir)):
+            return None
+        os.makedirs(empty, exist_ok=True)
+        if libjvm is None or oops is None or os.listdir(empty):
+            return None
+        jars = sorted(glob.glob(os.path.join(spark_home, "jars", "*.jar")))
+        archive = os.path.join(root, f"driver-{archive_key(libjvm, [empty, *jars], oops)}.jsa")
+    except OSError:
+        return None
+    if _archive_is_whole(archive):
+        return f"{shlex.quote('-XX:SharedArchiveFile=' + archive)} {_JVM_OUTPUT}", empty, archive, None
+    if not os.access(root, os.W_OK):
+        return None
+    # the dump files of processes that died before publishing
+    for stale in glob.glob(os.path.join(root, "driver-*.jsa.*.tmp")):
+        pid = stale.rsplit(".", 2)[1].split("-")[0]
+        if pid.isdigit() and not _alive(int(pid)):
+            with contextlib.suppress(OSError):
+                os.remove(stale)
+    part = f"{archive}.{os.getpid()}-{os.urandom(4).hex()}.tmp"
+    return f"{shlex.quote('-XX:ArchiveClassesAtExit=' + part)} {_JVM_OUTPUT}", empty, archive, part
+
+
+def _publish_archive(proc, part: str, archive: str, pid: int) -> None:
+    """At exit: let the dumping JVM finish, then publish its archive with one
+    rename, only if the JVM exited with code 0. The archives of other keys
+    (an older JDK or Spark) go then: one archive is all a host uses."""
+    if os.getpid() != pid:
+        return
+    if proc is not None and proc.poll() is None:
+        # the gateway JVM exits when its stdin closes, and dumps on the way out
+        with contextlib.suppress(OSError):
+            proc.stdin.close()
+        try:
+            proc.wait(_DUMP_WAIT_S)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    try:
+        if proc is not None and proc.returncode == 0 and _archive_is_whole(part):
+            os.replace(part, archive)
+            for old in glob.glob(os.path.join(os.path.dirname(archive), "driver-*.jsa")):
+                if old != archive:
+                    os.remove(old)
+    except OSError:
+        pass
+    with contextlib.suppress(OSError):
+        os.remove(part)
 
 
 _scratch_root: str | None = None

@@ -90,10 +90,10 @@ def token_f1_paired_docs(spark, sf_dir):
         F.col("doc_id").alias("pred_id"), "w", F.col("c").alias("cp")
     )
     g = toks.select(
-        F.col("doc_id").alias("gid"), "w", F.col("c").alias("cg")
+        F.col("doc_id").alias("gid"), F.col("w").alias("gw"), F.col("c").alias("cg")
     )
     ov = (
-        p.join(g, (F.col("gid") == F.col("pred_id") + 1) & (g.w == p.w))
+        p.join(g, (F.col("gid") == F.col("pred_id") + 1) & (F.col("gw") == F.col("w")))
         .groupBy("pred_id")
         .agg(
             F.sum(F.expr("CASE WHEN cp < cg THEN cp ELSE cg END"))

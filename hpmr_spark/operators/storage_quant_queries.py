@@ -119,8 +119,13 @@ def cdc_chunk_dedup(spark, sf_dir):
     in-row (array HOFs over the committed hash — one md5 per char
     position, the honest CDC cost at any scale), then ONE global
     aggregate with an exact distinct. Linear; one shuffle pair (the
-    distinct rewrite)."""
-    d = _t(spark, sf_dir, "documents")
+    distinct rewrite), after a hash shuffle that spreads the documents
+    over every core: the table is one small file, so the scan gives the
+    per-character hashing a single task. A repartition by number is one
+    AQE leaves as it is."""
+    d = _t(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
     chunks = d.select(
         F.explode(F.expr(_cdc_spark())).alias("chunk")
     )

@@ -2,14 +2,18 @@
 make temp dirs and of the calls that cache frames, and a compile check of
 the command-line tools (no Spark session).
 
-The package reads exactly the session-shape knobs that tier-1 and the
-local[4]/shuffle=7 invariance sweep set; data-path variables belong to the
-tools and the test harness. A knob that nothing sets is dead configuration:
-delete it, or pin the value in code."""
+Only the session builder touches the environment. It reads the
+session-shape knobs that tier-1 and the local[4]/shuffle=7 invariance sweep
+set, the driver memory, Spark's conf dir (swapped for the launch of a JVM
+that starts from the class-data archive), the XDG cache root that holds
+the archive and ``JAVA_HOME``, which names the JVM Spark launches and so is
+part of the archive's key; data-path variables belong to the tools and the test harness.
+A knob that nothing sets is dead configuration: delete it, or pin the value
+in code. The archive has no off switch: to launch without it, set
+``spark.driver.extraJavaOptions`` on the builder."""
 
 import ast
 import py_compile
-import re
 from pathlib import Path
 
 import pytest
@@ -17,11 +21,51 @@ import pytest
 ROOT = Path(__file__).resolve().parents[1]
 
 
+_ENV_API = ("environ", "getenv", "putenv", "unsetenv")
+
+
+def _env_names(tree):
+    """The variable named by each environment read or write in ``tree``;
+    None where the name is not a literal."""
+    parents = {child: node for node in ast.walk(tree) for child in ast.iter_child_nodes(node)}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "os":
+            if any(alias.name in _ENV_API for alias in node.names):
+                yield None
+        elif (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+            and node.attr in _ENV_API
+        ):
+            use = parents[node]
+            if isinstance(use, ast.Attribute):  # os.environ.get(...) and friends
+                use = parents[use]
+            if isinstance(use, ast.Call):
+                key = use.args[0] if use.args else None
+            elif isinstance(use, ast.Subscript):
+                key = use.slice
+            else:  # "X" in os.environ
+                key = getattr(use, "left", None)
+            yield key.value if isinstance(key, ast.Constant) else None
+
+
 def test_package_reads_only_session_knobs():
-    names = set()
+    uses = {}
     for path in (ROOT / "hpmr_spark").rglob("*.py"):
-        names.update(re.findall(r"SPARK_GRAFT_[A-Z_]+", path.read_text()))
-    assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", "SPARK_GRAFT_SHUFFLE_PARTITIONS"}
+        for name in _env_names(ast.parse(path.read_text())):
+            uses.setdefault(str(path.relative_to(ROOT)), set()).add(name)
+    assert uses == {
+        "hpmr_spark/engine.py": {
+            "SPARK_GRAFT_CPUS",
+            "SPARK_GRAFT_MASTER",
+            "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+            "SPARK_DRIVER_MEMORY",
+            "SPARK_CONF_DIR",
+            "XDG_CACHE_HOME",
+            "JAVA_HOME",
+        }
+    }
 
 
 def test_only_the_scratch_owner_makes_temp_dirs():
